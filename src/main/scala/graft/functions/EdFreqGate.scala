@@ -3,7 +3,9 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.types.{BooleanType, ByteType, DataType,
+  IntegerType, LongType, ShortType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled loop behind [[EdFreqGate]]: the exact character-frequency
@@ -62,4 +64,46 @@ case class EdFreqGate(left: Expression, right: Expression, cap: Int)
       newRight: Expression): EdFreqGate =
     copy(left = newLeft, right = newRight)
   override def prettyName: String = "ed_freq_gate"
+}
+
+object EdFreqGate {
+  /** The SQL builder: `ed_freq_gate(a, b, cap)` with `cap` a non-null,
+    * foldable integral value in [0, Int.MaxValue] (Int and Long literals
+    * both accepted). Any other argument list raises a typed
+    * `AnalysisException` at analysis time. */
+  def fromArgs(children: Seq[Expression]): EdFreqGate = {
+    def fail(errorClass: String, params: (String, String)*): Nothing =
+      throw new AnalysisException(errorClass, params.toMap)
+    if (children.length != 3)
+      fail("WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+        "functionName" -> "`ed_freq_gate`", "expectedNum" -> "3",
+        "actualNum" -> children.length.toString,
+        "docroot" -> org.apache.spark.SPARK_DOC_ROOT)
+    val capExpr = children(2)
+    val sqlExpr = "\"ed_freq_gate(" + children.map(_.sql).mkString(", ") + ")\""
+    val intOrBigint = "(\"INT\" or \"BIGINT\")"
+    if (!capExpr.foldable)
+      fail("DATATYPE_MISMATCH.NON_FOLDABLE_INPUT", "sqlExpr" -> sqlExpr,
+        "inputName" -> "`cap`", "inputType" -> intOrBigint,
+        "inputExpr" -> ("\"" + capExpr.sql + "\""))
+    capExpr.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => ()
+      case other =>
+        fail("DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", "sqlExpr" -> sqlExpr,
+          "paramIndex" -> "third", "requiredType" -> intOrBigint,
+          "inputSql" -> ("\"" + capExpr.sql + "\""),
+          "inputType" -> ("\"" + other.sql + "\""))
+    }
+    val cap = capExpr.eval() match {
+      case null =>
+        fail("DATATYPE_MISMATCH.UNEXPECTED_NULL", "sqlExpr" -> sqlExpr,
+          "exprName" -> "`cap`")
+      case n: Number => n.longValue
+    }
+    if (cap < 0 || cap > Int.MaxValue)
+      fail("DATATYPE_MISMATCH.VALUE_OUT_OF_RANGE", "sqlExpr" -> sqlExpr,
+        "exprName" -> "`cap`", "valueRange" -> s"[0, ${Int.MaxValue}]",
+        "currentValue" -> cap.toString)
+    EdFreqGate(children(0), children(1), cap.toInt)
+  }
 }

@@ -127,8 +127,7 @@ object GraftFunctions {
       "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "ed_freq_gate",
-      (children: Seq[Expression]) => EdFreqGate(children.head, children(1),
-        children(2).eval().asInstanceOf[Int]),
+      (children: Seq[Expression]) => EdFreqGate.fromArgs(children),
       "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "winnow_fingerprints",
@@ -253,8 +252,7 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
       new org.apache.spark.sql.catalyst.FunctionIdentifier("ed_freq_gate"),
       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
         classOf[EdFreqGate].getCanonicalName, "ed_freq_gate"),
-      (children: Seq[Expression]) => EdFreqGate(children.head, children(1),
-        children(2).eval().asInstanceOf[Int])))
+      (children: Seq[Expression]) => EdFreqGate.fromArgs(children)))
     e.injectFunction((
       new org.apache.spark.sql.catalyst.FunctionIdentifier("winnow_fingerprints"),
       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(

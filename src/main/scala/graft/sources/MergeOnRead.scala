@@ -74,8 +74,8 @@ object MergeOnRead {
     * tombstone rows never contribute data columns. */
   def readMerged(spark: SparkSession, dir: String,
       idCol: String, snapshotId: Option[Long] = None): DataFrame = {
-    val raw = spark.read.option("mergeSchema", "true")
-      .parquet(dirsOf(dir, snapshotId): _*)
+    val raw = ParquetSchemas.read(spark, dirsOf(dir, snapshotId),
+      mergeSchema = true)
     val w = Window.partitionBy(col(idCol)).orderBy(col(V).desc)
     raw.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1 && !col(DEL))

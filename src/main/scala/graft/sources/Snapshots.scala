@@ -23,7 +23,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
   * }}}
   *
   * Scale design: a manifest lists data DIRECTORIES, not rows — reading a
-  * snapshot is `spark.read.parquet(dirs: _*)`, so column pruning,
+  * snapshot is one parquet scan per listed dir, so column pruning,
   * predicate pushdown, and partition-level parallelism are exactly those
   * of a plain parquet scan; the manifest itself is O(commits) driver-side
   * metadata. Old data dirs are never rewritten or deleted (append
@@ -101,8 +101,10 @@ object Snapshots {
     // CONFLICTING_DIRECTORY_STRUCTURES for hive-partitioned commits
     // (each data/v<id> is its own partition root); per-dir reads keep
     // partition discovery local and filters/pruning still push into
-    // every branch of the union
-    snap.dataDirs.map(p => spark.read.parquet(root.resolve(p).toString))
+    // every branch of the union. Commit dirs are immutable, so each
+    // dir's schema is inferred once per JVM (ParquetSchemas) and every
+    // later read of any snapshot that lists it is a cache hit
+    snap.dataDirs.map(p => ParquetSchemas.read(spark, Seq(root.resolve(p).toString)))
       .reduce(_.unionByName(_, allowMissingColumns = mergeSchema))
   }
 

@@ -44,6 +44,52 @@ object ScaleSoak {
       a1.drop(r1) + a1.take(r1) + a2.drop(r2) + a2.take(r2))
   }
 
+  /** One `BENCH_sf1.json` entry. `solo` is the provenance flag: whether
+    * the batch that measured it re-measured it alone at the end; None for
+    * entries recorded before the flag existed. */
+  private[graft] case class LedgerEntry(sf01: Double, sf1: Double,
+      solo: Option[Boolean])
+
+  /** The `queries` entries of a `BENCH_sf1.json` ledger, in file order.
+    * Entries missing a time are skipped; an unparseable ledger is empty. */
+  private[graft] def parseLedger(json: String): Seq[(String, LedgerEntry)] =
+    try {
+      import org.json4s._
+      import org.json4s.jackson.JsonMethods
+      (JsonMethods.parse(json) \ "queries") match {
+        case JObject(fields) => fields.collect {
+          case (q, JObject(vs)) =>
+            val m = vs.toMap
+            def d(k: String) = m.get(k).collect {
+              case JDouble(x) => x
+              case JInt(x) => x.toDouble
+              case JDecimal(x) => x.toDouble
+            }
+            val solo = m.get("solo").collect { case JBool(b) => b }
+            (q, d("sf01_sec"), d("sf1_sec"), solo)
+        }.collect { case (q, Some(a), Some(b), solo) =>
+          q -> LedgerEntry(a, b, solo)
+        }
+        case _ => Seq.empty
+      }
+    } catch { case scala.util.control.NonFatal(_) => Seq.empty }
+
+  /** CUMULATIVE record (round-11 verdict item 3): a subset re-soak used
+    * to overwrite the whole file, fragmenting the regression view across
+    * commit history. Every prior entry is carried forward with its own
+    * `solo` flag; this batch's measurements win on collision and carry
+    * `solo = soloRerun(q)`. */
+  private[graft] def mergeLedger(prior: Seq[(String, LedgerEntry)],
+      measured: Seq[(String, (Double, Double))],
+      soloRerun: Set[String]): Seq[(String, LedgerEntry)] = {
+    val merged = scala.collection.mutable.LinkedHashMap.empty[String, LedgerEntry]
+    prior.foreach { case (q, e) => merged(q) = e }
+    measured.foreach { case (q, (t01, t1)) =>
+      merged(q) = LedgerEntry(t01, t1, Some(soloRerun(q)))
+    }
+    merged.toSeq
+  }
+
   private[tools] def buildSf1(spark: SparkSession, src: String, dst: String): Unit = {
     def raw(name: String) = spark.read.parquet(s"$src/$name.parquet")
     def writeReplicated(name: String, f: (DataFrame, Int) => DataFrame): Unit = {
@@ -540,26 +586,12 @@ object ScaleSoak {
     // Spot100Soak): any entry whose sf1 time moved >25% vs its prior
     // recording is re-measured at the END of the batch — no other soak
     // query in flight — and written with a `solo: true` provenance flag.
-    val priorSf1ForSolo: Map[String, Double] = {
+    val prior: Seq[(String, LedgerEntry)] = {
       val p = java.nio.file.Paths.get("BENCH_sf1.json")
-      if (!java.nio.file.Files.exists(p)) Map.empty
-      else try {
-        import org.json4s._
-        import org.json4s.jackson.JsonMethods
-        val root = JsonMethods.parse(
-          new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-        (root \ "queries") match {
-          case JObject(fields) => fields.collect {
-            case (q, JObject(vs)) => vs.toMap.get("sf1_sec").collect {
-              case JDouble(x) => q -> x
-              case JInt(x) => q -> x.toDouble
-              case JDecimal(x) => q -> x.toDouble
-            }
-          }.flatten.toMap
-          case _ => Map.empty
-        }
-      } catch { case scala.util.control.NonFatal(_) => Map.empty }
+      if (!java.nio.file.Files.exists(p)) Seq.empty
+      else parseLedger(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
     }
+    val priorSf1ForSolo = prior.map { case (q, e) => q -> e.sf1 }.toMap
     val soloRerun = scala.collection.mutable.Set.empty[String]
     measured.toVector.foreach { case (q, (_, t1)) =>
       val moved = priorSf1ForSolo.get(q).exists(p =>
@@ -580,41 +612,11 @@ object ScaleSoak {
     // Locale.ROOT: comma-decimal locales would emit invalid JSON
     def fmt(d: Double) = String.format(java.util.Locale.ROOT, "%.3f",
       Double.box(d))
-    // CUMULATIVE record (round-11 verdict item 3): a subset re-soak used
-    // to overwrite the whole file, fragmenting the judge's regression
-    // view across commit history. Carry every previously-recorded query
-    // forward; this batch's measurements win on collision.
-    val prior: Seq[(String, (Double, Double))] = {
-      val p = java.nio.file.Paths.get("BENCH_sf1.json")
-      if (!java.nio.file.Files.exists(p)) Seq.empty
-      else try {
-        import org.json4s._
-        import org.json4s.jackson.JsonMethods
-        val root = JsonMethods.parse(
-          new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-        (root \ "queries") match {
-          case JObject(fields) => fields.collect {
-            case (q, JObject(vs)) =>
-              val m = vs.toMap
-              def d(k: String) = m.get(k).collect {
-                case JDouble(x) => x
-                case JInt(x) => x.toDouble
-                case JDecimal(x) => x.toDouble
-              }
-              (q, d("sf01_sec"), d("sf1_sec"))
-          }.collect { case (q, Some(a), Some(b)) => q -> ((a, b)) }
-          case _ => Seq.empty
-        }
-      } catch { case scala.util.control.NonFatal(_) => Seq.empty }
-    }
-    val merged = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    prior.foreach { case (q, t) => merged(q) = t }
-    measured.foreach { case (q, t) => merged(q) = t }
-    val entries = merged.map { case (q, (t01, t1)) =>
-      val r = t1 / math.max(t01, 1e-9)
-      val solo = if (measured.contains(q))
-        s""","solo":${soloRerun.contains(q)}""" else ""
-      s""""$q":{"sf01_sec":${fmt(t01)},"sf1_sec":${fmt(t1)},"ratio":${fmt(r)}$solo}"""
+    val entries = mergeLedger(prior, measured.toSeq, soloRerun.toSet).map {
+      case (q, e) =>
+        val r = e.sf1 / math.max(e.sf01, 1e-9)
+        val solo = e.solo.fold("")(s => s""","solo":$s""")
+        s""""$q":{"sf01_sec":${fmt(e.sf01)},"sf1_sec":${fmt(e.sf1)},"ratio":${fmt(r)}$solo}"""
     }
     val healsJson = heals.map { case (q, (o01, o1), (r01, r1), oc, rc) =>
       s"""{"span":"$q","orig":[${fmt(o01)},${fmt(o1)}],""" +

@@ -13,14 +13,14 @@ class BenchJsonSpec extends AnyFunSuite {
   test("compactLine is one strict-JSON line with the contract fields") {
     val mins = Seq("q1_agg" -> 0.1234, "tpch01" -> 1.5,
       "q245_wide_quantiles" -> 0.31519, "broken_q" -> -1.0)
-    val line = Bench.compactLine(mins, 1.9386, "/root/testdata/sf0.1",
-      "32", contaminated = false, errors = Seq("broken_q"))
+    val line = Bench.compactLine(mins, 1.9386, "/data/sf0.1",
+      32, contaminated = false, errors = Seq("broken_q"))
     assert(!line.contains("\n"), "must be a single line")
     val node = mapper.readTree(line) // throws on malformed JSON
     assert(node.get("metric").asText() == "total")
     assert(math.abs(node.get("value").asDouble() - 1.9386) < 1e-9)
     assert(node.get("unit").asText() == "sec")
-    assert(node.get("sf").asText() == "/root/testdata/sf0.1")
+    assert(node.get("sf").asText() == "/data/sf0.1")
     assert(node.get("cpus").asInt() == 32)
     assert(!node.get("contaminated").asBoolean())
     val qs = node.get("queries")
@@ -32,14 +32,34 @@ class BenchJsonSpec extends AnyFunSuite {
   }
 
   test("compactLine survives a comma-decimal default locale") {
-    val prev = java.util.Locale.getDefault
-    try {
-      java.util.Locale.setDefault(java.util.Locale.GERMANY)
-      val line = Bench.compactLine(Seq("q" -> 1.5), 1.5, "d", "8",
-        contaminated = true, errors = Nil)
-      val node = mapper.readTree(line)
-      assert(node.get("value").asDouble() == 1.5)
-      assert(node.get("contaminated").asBoolean())
-    } finally java.util.Locale.setDefault(prev)
+    // the locale-sensitive path really would break the JSON...
+    assert(Bench.fmt(1.5, java.util.Locale.GERMANY) == "1,5000")
+    // ...and the default the line uses is locale-independent
+    assert(Bench.fmt(1.5) == "1.5000")
+    val line = Bench.compactLine(Seq("q" -> 1.5), 1.5, "d", 8,
+      contaminated = true, errors = Nil)
+    val node = mapper.readTree(line)
+    assert(node.get("value").asDouble() == 1.5)
+    assert(node.get("contaminated").asBoolean())
+  }
+
+  test("compactLine escapes quotes and backslashes in sf and error names") {
+    val dir = "C:\\bench \"sf0.1\"\\data"
+    val err = "q\"odd\\name"
+    val line = Bench.compactLine(Seq(err -> -1.0), 0.0, dir, 4,
+      contaminated = false, errors = Seq(err))
+    assert(!line.contains("\n"), "must be a single line")
+    val node = mapper.readTree(line)
+    assert(node.get("sf").asText() == dir)
+    assert(node.get("errors").get(0).asText() == err)
+    assert(node.get("queries").get(err).asDouble() == -1.0)
+  }
+
+  test("cpus parses as a positive integer and fails loudly otherwise") {
+    assert(Bench.parseCpus("8") == 8)
+    assert(Bench.parseCpus(" 32 ") == 32)
+    Seq("", "eight", "4.5", "0", "-2", "4,\"x\":1").foreach { bad =>
+      intercept[IllegalArgumentException](Bench.parseCpus(bad))
+    }
   }
 }

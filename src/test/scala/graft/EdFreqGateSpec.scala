@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.EdFreqGateImpl
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -65,5 +66,60 @@ class EdFreqGateSpec extends AnyFunSuite {
     // identical and near strings pass
     assert(gate("same", "same", 0))
     assert(gate("same", "sane", 2))
+  }
+
+  // SQL-surface argument checks: every bad argument list is a typed
+  // AnalysisException at analysis, never a ClassCastException,
+  // IndexOutOfBoundsException or NPE from the builder
+  private lazy val spark = SharedSpark.spark
+
+  private def analysisError(sql: String): AnalysisException =
+    intercept[AnalysisException](spark.sql(sql).collect())
+
+  test("wrong arity is a typed AnalysisException") {
+    Seq("SELECT ed_freq_gate('ab', 'ab')",
+        "SELECT ed_freq_gate('ab')",
+        "SELECT ed_freq_gate('ab', 'ab', 2, 3)").foreach { q =>
+      assert(analysisError(q).getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", q)
+    }
+  }
+
+  test("a non-foldable cap is a typed AnalysisException") {
+    val e = analysisError("SELECT ed_freq_gate(a, b, c) " +
+      "FROM VALUES ('ab', 'ab', 2) AS t(a, b, c)")
+    assert(e.getCondition == "DATATYPE_MISMATCH.NON_FOLDABLE_INPUT")
+  }
+
+  test("a non-integral cap is a typed AnalysisException") {
+    Seq("2.5", "2.5D", "'2'", "true").foreach { cap =>
+      val e = analysisError(s"SELECT ed_freq_gate('ab', 'ab', $cap)")
+      assert(e.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", cap)
+    }
+  }
+
+  test("a null cap is a typed AnalysisException") {
+    val e = analysisError("SELECT ed_freq_gate('ab', 'ab', CAST(NULL AS INT))")
+    assert(e.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_NULL")
+    // an untyped NULL has no integral type at all
+    analysisError("SELECT ed_freq_gate('ab', 'ab', NULL)")
+  }
+
+  test("a cap outside [0, Int.MaxValue] is a typed AnalysisException") {
+    Seq("-1", "2147483648L").foreach { cap =>
+      val e = analysisError(s"SELECT ed_freq_gate('ab', 'ab', $cap)")
+      assert(e.getCondition == "DATATYPE_MISMATCH.VALUE_OUT_OF_RANGE", cap)
+    }
+  }
+
+  test("Int and Long literal caps are both accepted") {
+    import org.apache.spark.sql.functions.{call_function, lit}
+    val r = spark.sql("SELECT ed_freq_gate('abcd', 'abce', 2), " +
+      "ed_freq_gate('abcd', 'abce', 2L), ed_freq_gate('abcd', 'wxyz', 4L), " +
+      "ed_freq_gate('abcd', 'abce', CAST(2 AS SMALLINT))").head()
+    assert(r.getBoolean(0) && r.getBoolean(1) && !r.getBoolean(2) &&
+      r.getBoolean(3))
+    val df = spark.range(1).select(
+      call_function("ed_freq_gate", lit("abcd"), lit("abce"), lit(2L)))
+    assert(df.head().getBoolean(0))
   }
 }
