@@ -16,12 +16,10 @@ import org.apache.spark.sql.SparkSession
   * amortize at cluster scale); the file records every rep and the final
   * spread so a still-noisy round is visible instead of silent.
   *
-  * Contention canary (round-7 verdict: SUSTAINED contention slows every
-  * rep uniformly, which the spread check cannot see — q23 reported 4.16 s
-  * that round vs 0.58 s idle): a fixed trivial query runs between every
-  * catalog query; its baseline is the minimum canary time observed
-  * anywhere in the run, and any sample > 3× that baseline brands the
-  * span (the catalog query just timed) as contended. If any span is
+  * Contention canary ([[Canary]], shared with the scale soak): a fixed
+  * trivial query runs after every catalog query, and any sample > 3× the
+  * run's minimum brands that span as contended. A flagged span is re-run
+  * at the end and heals when its fresh canary is clean. If any span stays
   * contended the run self-reports `"contaminated": true` plus the
   * offending spans in both the stdout line and bench.json — a poisoned
   * run flags itself instead of masquerading as a regression.
@@ -121,55 +119,11 @@ object Bench {
                catch { case _: Throwable => false }
       ((System.nanoTime() - t0) / 1e9, ok)
     }
-    // The canary: a real (never cached) but trivially cheap job whose
-    // cost is dominated by scheduler + one small scan — any 3× drift is
-    // the machine, not the plan. `Tables.nation` hits the parquet schema
-    // cache (ParquetSchemas) after the warm-up above, so the canary no
-    // longer launches a schema-inference job and its absolute baseline
-    // is lower than in runs before that cache; the 3× rule is unchanged.
-    val canaryFn = (s: SparkSession, d: String) =>
-      graft.queries.Tables.nation(s, d).groupBy("n_regionkey")
-        .count().filter(org.apache.spark.sql.functions.col("count") >= 0)
-    // (span label, canary seconds); baseline = min over the whole run,
-    // so a contended start can't hide later-visible contention
-    val canarySamples = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    def canary(label: String): Unit = {
-      // min of two back-to-back runs: a one-off GC pause or scheduler
-      // hiccup (µ-scale timings jitter hard) shouldn't brand the span —
-      // sustained contention slows both runs and still trips the flag
-      val ts = (1 to 2).flatMap { _ =>
-        val (t, ok) = timeOnce(canaryFn); if (ok) Some(t) else None
-      }
-      if (ts.nonEmpty) canarySamples += (label -> ts.min)
-    }
-    // HEAVY untimed canary warmup: the JVM keeps re-tiering the
-    // scheduler/codegen paths for many executions, so a single warmup
-    // left __init samples 2-3.5× the late-run baseline — the 3×-of-
-    // global-min check then false-flagged an idle machine (measured
-    // round 9: ramp 0.43→0.12 s across the run while per-query numbers,
-    // each behind its own warmup + min-of-reps, were unaffected).
-    // ADAPTIVE: a fixed dozen reps proved not always enough (a later
-    // clean-machine run still rode the ramp into the first two query
-    // spans at 0.29 s vs an eventual 0.09 s floor — false contamination
-    // again); warm until the last three reps form a plateau (max within
-    // 1.3× of min — a still-descending ramp keeps failing this), capped
-    // at 60 reps so a genuinely loaded machine exits the loop slow and
-    // still trips the 3× check downstream.
-    {
-      val window = scala.collection.mutable.Queue.empty[Double]
-      var n = 0
-      var done = false
-      while (!done && n < 60) {
-        val (t, ok) = timeOnce(canaryFn)
-        if (ok) {
-          window.enqueue(t)
-          if (window.size > 3) window.dequeue()
-          done = window.size == 3 && window.max <= window.min * 1.3
-        }
-        n += 1
-      }
-    }
-    (1 to 2).foreach(_ => canary("__init"))
+    // contention canary (graft.Canary): warmed to a plateau, then two
+    // __init samples witness the pre-sweep machine state
+    val canary = Canary.nation(spark, sfDir)
+    canary.warm()
+    (1 to 2).foreach(_ => canary.sample(Canary.Init))
     val reps = scala.collection.mutable.LinkedHashMap.empty[String, Vector[(Double, Boolean)]]
     // dev subset runs (comma-separated names); the recorded per-round
     // bench always runs the full catalog (driver sets no filter)
@@ -192,76 +146,20 @@ object Bench {
         times :+= timeOnce(fn); extra += 1
       }
       reps(name) = times
-      canary(name) // canary AFTER the query: times the span it just ran in
+      canary.sample(name) // canary AFTER the query: times the span it just ran in
     }
-    def flaggedSpans: Vector[String] = {
-      val base = if (canarySamples.isEmpty) 0.0 else canarySamples.map(_._2).min
-      canarySamples.collect {
-        case (label, t) if base > 0 && t > 3.0 * base => label
-      }.distinct.toVector
-    }
-    // SELF-HEALING RETRY (round 9): across 151 spans on a shared host, a
-    // single transient hiccup (one GC pause, one co-tenant burst) flagged
-    // some one random span in otherwise-clean back-to-back runs, branding
-    // the whole record not-a-result. A transient is distinguishable from
-    // real load by RE-RUNNING the flagged query at the end of the run:
-    // if its fresh canary span is clean, the retry reps replace the
-    // perturbed ones and the flag clears; under sustained contention the
-    // retry's canary trips again and the run stays honestly contaminated.
-    // Every heal is RECORDED (round-9 advice): the perturbed reps and
-    // canary samples it replaced land in bench.json's `healed_spans`, so
-    // a healed run is distinguishable from a never-flagged one and an
-    // "intermittent but recurring" pattern stays visible across rounds.
-    // (label, original reps, retry reps, perturbed canary, fresh canary)
-    val heals = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Vector[(Double, Boolean)], Vector[(Double, Boolean)],
-              Vector[Double], Vector[Double])]
-    // a flagged __init (no query attached) heals by re-sampling alone:
-    // the sample exists only to witness the pre-sweep machine state
-    flaggedSpans.filterNot(reps.contains).foreach { label =>
-      val nBefore = canarySamples.length
-      canary(label)
-      val fresh = canarySamples.drop(nBefore)
-      val base = canarySamples.map(_._2).min
-      if (fresh.forall(_._2 <= 3.0 * base)) {
-        val perturbed = canarySamples.zipWithIndex.collect {
-          case ((l, t), i) if l == label && i < nBefore && t > 3.0 * base => t
-        }.toVector
-        heals += ((label, Vector.empty, Vector.empty, perturbed,
-          fresh.map(_._2).toVector))
-        val keep = canarySamples.zipWithIndex.filterNot { case ((l, t), i) =>
-          l == label && i < nBefore && t > 3.0 * base
-        }.map(_._1)
-        canarySamples.clear()
-        canarySamples ++= keep
-      }
-    }
-    flaggedSpans.filter(reps.contains).foreach { name =>
+    // re-run each flagged span at the end (Canary.heal); a healed
+    // query's retry reps replace its perturbed ones, and the replaced
+    // reps and canary samples land in bench.json's `heals`
+    val heals = canary.heal { name =>
       val fn = benched(name)
       timeOnce(fn)
       val retry = Vector.fill(3)(timeOnce(fn))
-      val nBefore = canarySamples.length
-      canary(name)
-      val fresh = canarySamples.drop(nBefore)
-      val retryClean = fresh.forall { case (_, t) =>
-        val base = canarySamples.map(_._2).min
-        t <= 3.0 * base
-      }
-      if (retryClean && retry.exists(_._2)) {
-        val base = canarySamples.map(_._2).min
-        val perturbed = canarySamples.zipWithIndex.collect {
-          case ((l, t), i) if l == name && i < nBefore && t > 3.0 * base => t
-        }.toVector
-        heals += ((name, reps(name), retry, perturbed,
-          fresh.map(_._2).toVector))
-        reps(name) = retry
-        // drop the perturbed span samples so the flag reflects the retry
-        val keep = canarySamples.zipWithIndex.filterNot { case ((l, t), i) =>
-          l == name && i < nBefore && t > 3.0 * base
-        }.map(_._1)
-        canarySamples.clear()
-        canarySamples ++= keep
-      }
+      if (retry.exists(_._2)) Some(retry) else None
+    }.map { h =>
+      val orig = reps.getOrElse(h.span, Vector.empty)
+      h.retry.foreach(reps(h.span) = _)
+      (h, orig)
     }
     val mins = reps.map { case (k, v) =>
       val ok = v.collect { case (t, true) => t }
@@ -269,15 +167,14 @@ object Bench {
     }
     val errors = mins.collect { case (k, v) if v < 0 => k }.toVector
     val total = mins.values.filter(_ >= 0).sum
-    val canaryBase = if (canarySamples.isEmpty) 0.0
-                     else canarySamples.map(_._2).min
-    val contaminatedSpans = flaggedSpans
+    val contaminatedSpans = canary.flagged
     val contaminated = contaminatedSpans.nonEmpty
     val qs = mins.map { case (k, v) => s"${jsonStr(k)}:${fmt(v)}" }
       .mkString("{", ",", "}")
-    val repsJson = reps.map { case (k, v) =>
-      s"${jsonStr(k)}:[${v.map { case (t, ok) => if (ok) fmt(t) else "-1" }.mkString(",")}]"
-    }.mkString("{", ",", "}")
+    def repArr(v: Vector[(Double, Boolean)]) =
+      v.map { case (t, ok) => if (ok) fmt(t) else "-1" }.mkString("[", ",", "]")
+    val repsJson = reps.map { case (k, v) => s"${jsonStr(k)}:${repArr(v)}" }
+      .mkString("{", ",", "}")
     // spread = max/min over the 3 fastest successful reps: the stability
     // of the reported min. Slower reps (first-build I/O inside a query, a
     // contention spike already answered by the extra reps) stay visible
@@ -289,18 +186,17 @@ object Bench {
       s"${jsonStr(k)}:${fmt(sp)}"
     }.mkString("{", ",", "}")
     def strArr(v: Vector[String]) = v.map(jsonStr).mkString("[", ",", "]")
-    val canaryJson = s"""{"baseline":${fmt(canaryBase)},"samples":[${
-      canarySamples.map { case (l, t) => s"""[${jsonStr(l)},${fmt(t)}]""" }.mkString(",")}]}"""
-    def repArr(v: Vector[(Double, Boolean)]) =
-      v.map { case (t, ok) => if (ok) fmt(t) else "-1" }.mkString("[", ",", "]")
-    val healsJson = heals.map { case (l, o, r, pc, fc) =>
-      s"""{"span":${jsonStr(l)},"orig_reps":${repArr(o)},"retry_reps":${repArr(r)},""" +
-        s""""orig_canary":[${pc.map(fmt(_)).mkString(",")}],""" +
-        s""""retry_canary":[${fc.map(fmt(_)).mkString(",")}]}"""
+    val canaryJson = s"""{"baseline":${fmt(canary.baseline)},"samples":[${
+      canary.samples.map { case (l, t) => s"""[${jsonStr(l)},${fmt(t)}]""" }.mkString(",")}]}"""
+    val healsJson = heals.map { case (h, o) =>
+      s"""{"span":${jsonStr(h.span)},"orig_reps":${repArr(o)},""" +
+        s""""retry_reps":${repArr(h.retry.getOrElse(Vector.empty))},""" +
+        s""""orig_canary":[${h.perturbed.map(fmt(_)).mkString(",")}],""" +
+        s""""retry_canary":[${h.fresh.map(fmt(_)).mkString(",")}]}"""
     }.mkString("[", ",", "]")
     val flags = s""""contaminated":$contaminated,"contaminated_spans":${
       strArr(contaminatedSpans)},"healed_spans":${
-      strArr(heals.map(_._1).toVector)},"errors":${strArr(errors)}"""
+      strArr(heals.map(_._1.span))},"errors":${strArr(errors)}"""
     val line = compactLine(mins.toSeq, total, sfDir, cpus, contaminated,
       errors)
     val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":${jsonStr(sfDir)},"cpus":$cpus,$flags,"canary":$canaryJson,"reps":$repsJson,"spread":$spreads,"heals":$healsJson}"""

@@ -38,7 +38,7 @@ class OrderedStream(df0: DataFrame, val timeCol: String) extends DataStream(df0)
 
   /** Backward as-of join per `by` symbol (reference `join_asof`,
     * orderedstream.py:114-191 + SortedAsofExecutor ts_executors.py:324-383).
-    * See [[graft.ts.AsofJoin]] for the two formulations. */
+    * See [[graft.ts.AsofJoin]] for the formulations (this is `unionTag`). */
   def asofJoin(
       right: OrderedStream,
       by: String,

@@ -132,28 +132,12 @@ class QContext(val spark: SparkSession) {
       sep: String = ","): OrderedStream =
     new OrderedStream(readCsv(path, schema, hasHeader, sep).df, timeCol)
 
-  /** Iceberg table, optionally at a snapshot (reference `read_iceberg`,
-    * df.py:802-832 via pyiceberg+Glue; here the standard Spark-Iceberg
-    * integration — requires the iceberg-spark-runtime jar and catalog
-    * config on the session, the deployment-standard setup).
-    *
-    * UNSUPPORTED IN THIS BUILD: the offline container has no
-    * iceberg-spark-runtime jar anywhere, so this method has never
-    * executed (IcebergSpec's write→snapshot→time-travel gate
-    * `assume`-cancels without the jar and runs the moment one is on the
-    * classpath). It is NOT counted as an implemented operator — see
-    * COVERAGE.md §2.1. */
-  def readIceberg(table: String, snapshotId: Option[Long] = None): DataStream = {
-    val r = spark.read.format("iceberg")
-    new DataStream(snapshotId.fold(r)(id =>
-      r.option("snapshot-id", id.toString)).load(table))
-  }
-
-  /** Snapshot-ID / time-travel reads WITHOUT an iceberg runtime jar:
-    * [[graft.sources.Snapshots]]' parquet-manifest tables cover
-    * `read_iceberg`'s capability (reference df.py:802-832) in this
-    * offline container — same manifest-over-immutable-parquet design,
-    * plain parquet scan underneath (pushdown/pruning intact). */
+  /** Snapshot-ID / time-travel reads: [[graft.sources.Snapshots]]'
+    * parquet-manifest tables cover `read_iceberg`'s capability
+    * (reference df.py:802-832) with no iceberg runtime jar — same
+    * manifest-over-immutable-parquet design, plain parquet scan
+    * underneath (pushdown/pruning intact). Iceberg catalogs themselves
+    * are not supported. */
   def readSnapshot(dir: String, snapshotId: Option[Long] = None): DataStream =
     new DataStream(graft.sources.Snapshots.read(spark, dir, snapshotId))
 

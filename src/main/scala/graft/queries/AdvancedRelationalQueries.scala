@@ -106,8 +106,8 @@ object AdvancedRelationalQueries {
     // nationkey (~25 values), so a window would shuffle every supplier
     // row into 25 skewed partitions, while this form re-scans the
     // pruned dimension tree once and broadcasts 25 minima — the probe
-    // side never shuffles at all. ScanAudit flags the double scan; it
-    // is the cheaper shape at any scale.
+    // side never shuffles at all. The plan scans the dimension tree
+    // twice; that is the cheaper shape at any scale.
     "q2b_corr_min_join" -> { (s, d) =>
       val supNation = supplier(s, d)
         .join(nation(s, d), col("s_nationkey") === col("n_nationkey"))

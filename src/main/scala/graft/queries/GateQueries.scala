@@ -352,7 +352,7 @@ object GateQueries {
       }
       val src = java.nio.file.Paths.get(d, "documents.parquet")
       // the driver fixtures are single parquet FILES; Spark-written
-      // fixtures (ScaleSoak's target/sf1) are parquet DIRECTORIES —
+      // fixtures (Soak's target/sf1) are parquet DIRECTORIES —
       // Files.copy of a directory copies an EMPTY dir, which silently
       // fed the sf1 stream zero rows (caught round 13: q148's sf1 soak
       // measured an empty stream at ratio 0.22). Flatten part files.

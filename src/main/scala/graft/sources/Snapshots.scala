@@ -12,8 +12,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
   * `logical.py:233-273` — scan the file list a table snapshot pins)
   * in an environment with no iceberg runtime jar: the same
   * manifest-over-immutable-parquet design, scoped to what the engine
-  * needs. `QContext.readIceberg` remains the documented jar-gated path
-  * for real iceberg catalogs.
+  * needs. Real iceberg catalogs are not supported.
   *
   * Layout under a table directory:
   * {{{

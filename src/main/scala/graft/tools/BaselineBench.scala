@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * are validated to the same row count before timing is trusted.
   *
   * Usage: `sbt "runMain graft.tools.BaselineBench"` (expects target/sf1
-  * from the ScaleSoak builder; SPARK_GRAFT_SF_DIR overrides). */
+  * from the `Soak 10` builder; SPARK_GRAFT_SF_DIR overrides). */
 object BaselineBench {
 
   private def fmt(d: Double) =
@@ -626,7 +626,7 @@ object BaselineBench {
     val md = new StringBuilder
     md ++= "# BASELINE_MEASURED — reference benchmark methodology, head-to-head\n\n"
     md ++= s"Environment: local[$cpus], ${cpus} shuffle partitions, sf1 parquet\n"
-    md ++= s"(`$d`, 10x sf0.1 via the ScaleSoak builder — lineitem ~6M rows),\n"
+    md ++= s"(`$d`, 10x sf0.1 via the Soak 10 builder — lineitem ~6M rows),\n"
     md ++= s"JVM heap ${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}. The reference's published winsorization\n"
     md ++= s"config is 4x r6id.2xlarge = 32 vCPUs (this run: $cpus). Timings are\n"
     md ++= "min-of-2 after one warm pass (except the winsorize rows: single\n"

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * shape and scales it 1× → 10× to show the direction.
   *
   * Usage: `sbt "runMain graft.tools.IndexSizing [sfDir ...]"`
-  * (defaults to sf0.1 and, when present, the ScaleSoak target/sf1). */
+  * (defaults to sf0.1 and, when present, the `Soak 10` target/sf1). */
 object IndexSizing {
   private def dirBytes(p: java.io.File): Long =
     if (p.isFile) p.length()

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * count at sf0.1 vs target/sf1 — plus a timed split of the two
   * pipeline stages, so the COVERAGE pin is a measurement, not a story.
   * Usage: `sbt "runMain graft.tools.Q170Probe"` (needs target/sf1 from
-  * a prior ScaleSoak run). */
+  * a prior `Soak 10` run). */
 object Q170Probe {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()

@@ -1,42 +1,78 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, parse}
 
-/** sf1 scale soak (round-6 verdict item 5): synthesize a 10× copy of the
-  * sf0.1 fixtures under `target/sf1` and time the headline queries at
-  * both scales in one session — the cheapest local proxy for the 100-TB
-  * design claims (shuffle volume must grow linearly; no query may fall
-  * off a superlinear cliff).
+/** Scale soak: synthesizes replicated copies of the sf0.1 fixtures and
+  * times catalog queries at every scale in one session — the cheapest
+  * local proxy for the 100-TB design claims (shuffle volume must grow
+  * linearly; no query may fall off a superlinear cliff).
+  *
+  * The replica factor picks one row of [[factors]]; everything else runs
+  * the same code:
+  *   - `10` (round-6 verdict item 5): a 10× copy of every table under
+  *     `target/sf1`; the soak-breadth list, timed at sf0.1 and sf1, into
+  *     `BENCH_sf1.json`.
+  *   - `100` (r13 verdict item 2): also a 100× copy of the documents and
+  *     events tables (the two the flagships read) under `target/sf10`;
+  *     the flagship dedup/ER/CC/streaming pipelines, timed at sf0.1, sf1
+  *     and sf10, into `BENCH_100x.json`. The number to read is
+  *     `ratio_100x_over_10x` = t(100×)/t(10×): a linear operator sits
+  *     near 10 with its fixed overhead amortized; a quadratic one
+  *     explodes.
   *
   * Replication preserves join/key semantics instead of naively unioning
-  * identical rows: each replica i offsets every TPC-H key family by
+  * identical rows: each replica i offsets every key family by
   * i × (a constant above the key's true maximum), so fact↔dim joins have
   * the same fan-out per key as the original and group cardinalities
-  * scale 10× like real data. Document text is per-replica consonant-
-  * rotated (`translate`) so cross-replica Jaccard/MinHash similarity is
-  * low — a naive copy would make every doc a 10-way near-duplicate and
-  * quadratically inflate the dedup candidate sets, which real 10× data
-  * does not do. Events offset user_id per replica: per-key time density
-  * (what CEP/window cost scales with) stays constant.
+  * scale like real data. Document text is rewritten per replica by a
+  * length-preserving letter map so cross-replica Jaccard/MinHash
+  * similarity is low — a naive copy would make every doc an n-way
+  * near-duplicate and quadratically inflate the dedup candidate sets,
+  * which real data does not do. Events offset user_id per replica:
+  * per-key time density (what CEP/window cost scales with) stays
+  * constant.
   *
-  * Usage: `sbt "runMain graft.tools.ScaleSoak"` → writes BENCH_sf1.json
-  * at the repo root with per-query times at sf0.1 and sf1 plus ratios. */
-object ScaleSoak {
+  * Each ledger is CUMULATIVE (round-11 verdict item 3): a subset re-soak
+  * carries every prior entry forward, and a prior ledger that does not
+  * parse fails the run instead of being overwritten.
+  *
+  * Usage: `sbt "runMain graft.tools.Soak 10 [q…]"` or
+  * `sbt "runMain graft.tools.Soak 100 [q…]"` (~10 GiB heap for 100);
+  * query names after the factor soak only those queries (a dev subset —
+  * the recorded sweep runs the full list). */
+object Soak {
 
-  private val REPLICAS = 10
-  private[tools] val OFF = 10000000L // > every sf0.1 key maximum
+  /** One replicated fixture set under `dir`: `replicas` copies of each of
+    * `tables` plus one shared copy of each of `shared`. Replica i adds
+    * i × `offset` to every key family and maps document text through
+    * `text(_, i)`. */
+  private[graft] final case class Replica(dir: String, replicas: Int,
+      offset: Long, text: (Column, Int) => Column, tables: Seq[String],
+      shared: Seq[String] = Nil)
 
-  /** Per-replica text transform for the sf1 build: length-preserving
+  /** What one replica factor soaks: the fixture sets it times after the
+    * sf0.1 fixtures (smallest first), its query list, the fixture tables each
+    * query reads (a query listed here records `rows_in`/`rows_out`), its
+    * ledger, and an entry's per-scale time fields and ratio fields
+    * (name, numerator scale, denominator scale; scale 0 is sf0.1). */
+  private[graft] final case class Factor(replicas: Seq[Replica],
+      queries: Seq[String], inputTables: Map[String, Seq[String]],
+      ledger: String, timeFields: Seq[String],
+      ratioFields: Seq[(String, Int, Int)])
+
+  /** Per-replica text transform for the 10× build: length-preserving
     * letter rotation that kills cross-replica shingle overlap. For
     * i < 12 the second rotation is the identity, so the 10-replica sf1
     * fixture is byte-identical to the historical single-alphabet
     * build. NOT suitable for 100 replicas — replicas with equal
     * i mod 12 would share the whole first-alphabet letter class and
-    * hence every common-word shingle; [[Spot100Soak.permuteText]]'s
-    * full-alphabet permutation family covers that case. */
-  private[tools] def rotateText(c: org.apache.spark.sql.Column,
-      i: Int): org.apache.spark.sql.Column = {
+    * hence every common-word shingle; [[permuteText]]'s full-alphabet
+    * permutation family covers that case. */
+  private[tools] def rotateText(c: Column, i: Int): Column = {
     val a1 = "etaoinshrdlc"; val a2 = "bfgjkmpquvwxyz"
     val r1 = i % a1.length; val r2 = (i / a1.length) % a2.length
     if (r1 == 0 && r2 == 0) c
@@ -44,105 +80,88 @@ object ScaleSoak {
       a1.drop(r1) + a1.take(r1) + a2.drop(r2) + a2.take(r2))
   }
 
-  /** One `BENCH_sf1.json` entry. `solo` is the provenance flag: whether
-    * the batch that measured it re-measured it alone at the end; None for
-    * entries recorded before the flag existed. */
-  private[graft] case class LedgerEntry(sf01: Double, sf1: Double,
-      solo: Option[Boolean])
+  /** Per-replica text transform for the 100× build: the full-alphabet
+    * permutation π_i = ρ^(i mod 26) ∘ σ^(i div 26), where ρ rotates the
+    * natural alphabet and σ rotates a fixed scrambled ordering. Any two
+    * distinct replicas differ on every letter when they share a ρ- or
+    * σ-power (a nonidentity rotation has no fixed points), and on all
+    * but ~1 letter otherwise — so no letter CLASS (and hence no
+    * common-word shingle family) is shared across replicas, unlike a
+    * single rotation family (r14 review). i = 0 is the identity. NOT a
+    * drop-in for [[rotateText]]: it would change the recorded 10×
+    * fixture. */
+  private[tools] def permuteText(c: Column, i: Int): Column = {
+    val nat = "abcdefghijklmnopqrstuvwxyz"
+    val scr = "qwertyuiopasdfghjklzxcvbnm"
+    val a = i % 26; val b = (i / 26) % 26
+    if (a == 0 && b == 0) c
+    else {
+      val target = nat.map { x =>
+        val sx = scr((scr.indexOf(x) + b) % 26) // σ^b
+        nat((nat.indexOf(sx) + a) % 26)         // then ρ^a
+      }.mkString
+      translate(c, nat, target)
+    }
+  }
 
-  /** The `queries` entries of a `BENCH_sf1.json` ledger, in file order.
-    * Entries missing a time are skipped; an unparseable ledger is empty. */
-  private[graft] def parseLedger(json: String): Seq[(String, LedgerEntry)] =
-    try {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      (JsonMethods.parse(json) \ "queries") match {
-        case JObject(fields) => fields.collect {
-          case (q, JObject(vs)) =>
-            val m = vs.toMap
-            def d(k: String) = m.get(k).collect {
-              case JDouble(x) => x
-              case JInt(x) => x.toDouble
-              case JDecimal(x) => x.toDouble
-            }
-            val solo = m.get("solo").collect { case JBool(b) => b }
-            (q, d("sf01_sec"), d("sf1_sec"), solo)
-        }.collect { case (q, Some(a), Some(b), solo) =>
-          q -> LedgerEntry(a, b, solo)
-        }
-        case _ => Seq.empty
+  /** Replica `i` of fixture `table` in the set `r`. */
+  private def replicate(d: DataFrame, table: String, i: Int,
+      r: Replica): DataFrame = {
+    def offset(df: DataFrame, keys: String*) = keys.foldLeft(df) {
+      (acc, k) => acc.withColumn(k, col(k) + lit(i * r.offset))
+    }
+    table match {
+      case "customer" => offset(d, "c_custkey")
+      case "supplier" => offset(d, "s_suppkey")
+      case "part" => offset(d, "p_partkey")
+      case "orders" => offset(d, "o_orderkey", "o_custkey")
+      case "lineitem" => offset(d, "l_orderkey", "l_partkey", "l_suppkey")
+      case "documents" =>
+        offset(d, "doc_id").withColumn("text", r.text(col("text"), i))
+      // circular component shift per replica: norm-preserving but
+      // direction-decorrelating, so replicas spread across LSH/IVF
+      // buckets like real 10x data instead of 10-way-duplicating every
+      // bucket (the same naive-copy distortion the text rotation avoids)
+      // label offset per replica: blocked vector ops (q69/q152) contract
+      // on caller-BOUNDED blocks, so 10× data means 10× more blocks of
+      // the same size — without the offset every label block grows 10×
+      // and within-block pair counts grow 100× (the first q152 soak run
+      // showed exactly that quadratic term; real blocking keys are sized,
+      // not grown)
+      case "embeddings" => offset(d, "vec_id")
+        .withColumn("label", col("label") + lit(i * 1000))
+        .withColumn("embedding",
+          if (i == 0) col("embedding")
+          else expr(s"concat(slice(embedding, ${i + 1}, " +
+            s"size(embedding) - $i), slice(embedding, 1, $i))"))
+      case "events" => offset(d, "event_id", "user_id")
+    }
+  }
+
+  /** Builds `r` unless its sentinel exists. The sentinel is written after
+    * the LAST table: a crash mid-build must not leave a half-built set
+    * that later runs silently accept. */
+  private def ensureBuilt(spark: SparkSession, src: String,
+      r: Replica): Unit = {
+    val sentinel = Paths.get(s"${r.dir}/_BUILD_COMPLETE")
+    if (!Files.exists(sentinel)) {
+      println(s"building ${r.dir} (${r.replicas}x sf0.1)...")
+      def raw(name: String) = spark.read.parquet(s"$src/$name.parquet")
+      r.shared.foreach { t =>
+        raw(t).write.mode("overwrite").parquet(s"${r.dir}/$t.parquet")
       }
-    } catch { case scala.util.control.NonFatal(_) => Seq.empty }
-
-  /** CUMULATIVE record (round-11 verdict item 3): a subset re-soak used
-    * to overwrite the whole file, fragmenting the regression view across
-    * commit history. Every prior entry is carried forward with its own
-    * `solo` flag; this batch's measurements win on collision and carry
-    * `solo = soloRerun(q)`. */
-  private[graft] def mergeLedger(prior: Seq[(String, LedgerEntry)],
-      measured: Seq[(String, (Double, Double))],
-      soloRerun: Set[String]): Seq[(String, LedgerEntry)] = {
-    val merged = scala.collection.mutable.LinkedHashMap.empty[String, LedgerEntry]
-    prior.foreach { case (q, e) => merged(q) = e }
-    measured.foreach { case (q, (t01, t1)) =>
-      merged(q) = LedgerEntry(t01, t1, Some(soloRerun(q)))
+      r.tables.foreach { t =>
+        val base = raw(t)
+        (0 until r.replicas).map(replicate(base, t, _, r))
+          .reduce(_ unionByName _)
+          .write.mode("overwrite").parquet(s"${r.dir}/$t.parquet")
+      }
+      Files.write(sentinel, Array.emptyByteArray)
     }
-    merged.toSeq
   }
 
-  private[tools] def buildSf1(spark: SparkSession, src: String, dst: String): Unit = {
-    def raw(name: String) = spark.read.parquet(s"$src/$name.parquet")
-    def writeReplicated(name: String, f: (DataFrame, Int) => DataFrame): Unit = {
-      val base = raw(name)
-      (0 until REPLICAS).map(i => f(base, i)).reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(s"$dst/$name.parquet")
-    }
-    // dims shared by all replicas: copy once
-    Seq("region", "nation").foreach { n =>
-      raw(n).write.mode("overwrite").parquet(s"$dst/$n.parquet")
-    }
-    writeReplicated("customer", (d, i) =>
-      d.withColumn("c_custkey", col("c_custkey") + lit(i * OFF)))
-    writeReplicated("supplier", (d, i) =>
-      d.withColumn("s_suppkey", col("s_suppkey") + lit(i * OFF)))
-    writeReplicated("part", (d, i) =>
-      d.withColumn("p_partkey", col("p_partkey") + lit(i * OFF)))
-    writeReplicated("orders", (d, i) => d
-      .withColumn("o_orderkey", col("o_orderkey") + lit(i * OFF))
-      .withColumn("o_custkey", col("o_custkey") + lit(i * OFF)))
-    writeReplicated("lineitem", (d, i) => d
-      .withColumn("l_orderkey", col("l_orderkey") + lit(i * OFF))
-      .withColumn("l_partkey", col("l_partkey") + lit(i * OFF))
-      .withColumn("l_suppkey", col("l_suppkey") + lit(i * OFF)))
-    // per-replica letter rotation: length-preserving, kills
-    // cross-replica shingle overlap (see rotateText)
-    writeReplicated("documents", (d, i) => d
-      .withColumn("doc_id", col("doc_id") + lit(i * OFF))
-      .withColumn("text", rotateText(col("text"), i)))
-    // circular component shift per replica: norm-preserving but
-    // direction-decorrelating, so replicas spread across LSH/IVF
-    // buckets like real 10x data instead of 10-way-duplicating every
-    // bucket (the same naive-copy distortion the text rotation avoids)
-    // label offset per replica: blocked vector ops (q69/q152) contract
-    // on caller-BOUNDED blocks, so 10× data means 10× more blocks of
-    // the same size — without the offset every label block grows 10×
-    // and within-block pair counts grow 100× (the first q152 soak run
-    // showed exactly that quadratic term; real blocking keys are sized,
-    // not grown)
-    writeReplicated("embeddings", (d, i) => d
-      .withColumn("vec_id", col("vec_id") + lit(i * OFF))
-      .withColumn("label", col("label") + lit(i * 1000))
-      .withColumn("embedding",
-        if (i == 0) col("embedding")
-        else expr(s"concat(slice(embedding, ${i + 1}, " +
-          s"size(embedding) - $i), slice(embedding, 1, $i))")))
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    writeReplicated("events", (d, i) => d
-      .withColumn("event_id", col("event_id") + lit(i * OFF))
-      .withColumn("user_id", col("user_id") + lit(i * OFF)))
-  }
-
-  private val headline = Seq(
+  /** Soak-breadth list: every catalog query whose cost scales with data. */
+  private val breadth = Seq(
     "tpch01", "tpch03", "tpch05", "tpch07", "tpch08", "tpch09", "tpch10",
     "tpch13", "tpch17", "tpch18", "tpch19", "tpch21",
     "q36_highcard_agg", "q48_cep", "q55_ann_lsh",
@@ -496,7 +515,124 @@ object ScaleSoak {
     "tpch12", "tpch14", "tpch15",
     "tpch16", "tpch20", "tpch22")
 
+  /** The five flagships named by the r13 verdict — LSH dedup, exact
+    * PPJoin, blocked entity resolution, near-dup CC clusters, HLL
+    * trailing distinct — plus the r14 winnowing tier end-to-end, plus
+    * (r14 verdict item 2) the streaming STATE tier: session window,
+    * hopping window, streaming dedup, streaming near-dup tagging and
+    * drift-on-arrival. The replicas offset user_id/event_id/doc_id, so
+    * the streaming legs measure state ROWS × commit cost at 100× keys —
+    * the honest failure mode of watermarked state at corpus scale.
+    * Each flagship names the fixture table(s) it reads, the denominator
+    * of its `rows_in`. */
+  private val flagships = Seq(
+    "q66_lsh_near_dup" -> Seq("documents"),
+    "q190_setsim_join" -> Seq("documents"),
+    "q179_entity_resolution" -> Seq("documents"),
+    "q121_neardup_clusters" -> Seq("documents"),
+    "q214_trailing_approx" -> Seq("events"),
+    "q238_winnow_dedup" -> Seq("documents"),
+    "q101_streaming_session" -> Seq("events"),
+    "q108_streaming_hopping" -> Seq("events"),
+    "q109_streaming_distinct" -> Seq("events"),
+    "q148_streaming_dedup" -> Seq("events"),
+    "q243_streaming_drift" -> Seq("events"),
+    // r16 (verdict item 5): the two end-to-end COMPOSITION gates — a
+    // lost checkpoint or re-analysis barrier in a composition shows up
+    // superlinearly here where the per-stage gates stay linear, and
+    // compositions are what a 100 TB curation run actually executes
+    "q244_curation_pipeline" -> Seq("documents"),
+    "q248_multimodal_pipeline" -> Seq("documents"))
+
+  private val sf1 = Replica("target/sf1", replicas = 10,
+    offset = 10000000L, // > every sf0.1 key maximum
+    rotateText, tables = Seq("customer", "supplier", "part", "orders",
+      "lineitem", "documents", "embeddings", "events"),
+    shared = Seq("region", "nation"))
+  // the 10⁹ offset also clears q179's +5·10⁸ variant-id arithmetic: with
+  // the 10⁷ offset, replica i's variant ids collided exactly with replica
+  // (i+50)'s base ids, handing entity resolution duplicate record ids
+  private val sf10 = Replica("target/sf10", replicas = 100,
+    offset = 1000000000L, permuteText, tables = Seq("documents", "events"))
+
+  /** The per-factor table: the only place the two soaks differ. */
+  private[graft] val factors: Map[Int, Factor] = Map(
+    10 -> Factor(Seq(sf1), breadth, Map.empty, "BENCH_sf1.json",
+      Seq("sf01_sec", "sf1_sec"), Seq(("ratio", 1, 0))),
+    100 -> Factor(Seq(sf1, sf10), flagships.map(_._1), flagships.toMap,
+      "BENCH_100x.json",
+      Seq("sf01_sec", "sf1_sec", "sf10_sec"),
+      Seq(("ratio_10x", 1, 0), ("ratio_100x_over_10x", 2, 1),
+        ("ratio_100x", 2, 0))))
+
+  /** Ledger numbers: 3 decimals, rounded half-up like `%.3f`. */
+  private def dec(d: Double): BigDecimal =
+    BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP)
+
+  /** The `queries` entries of a soak ledger, in file order, with numbers
+    * kept exactly as written. Raises on a ledger that does not parse or
+    * whose `queries` is not an object of objects: rewriting it from one
+    * batch would silently drop every recorded entry (r15: a parse
+    * failure once dropped six rows) — fix or remove the file
+    * deliberately instead. */
+  private[graft] def parseLedger(json: String): Seq[(String, JObject)] =
+    parse(json, useBigDecimalForDouble = true) \ "queries" match {
+      case JObject(fields) => fields.map {
+        case (q, e: JObject) => q -> e
+        case (q, _) => throw new IllegalStateException(
+          s"soak ledger entry '$q' is not an object — fix or remove the file")
+      }
+      case _ => throw new IllegalStateException(
+        "soak ledger has no 'queries' object — fix or remove the file")
+    }
+
+  private def readLedger(path: Path): Seq[(String, JObject)] =
+    if (!Files.exists(path)) Nil
+    else parseLedger(new String(Files.readAllBytes(path), "UTF-8"))
+
+  /** Every prior entry is carried forward as written (its `solo` flag
+    * included); this batch's entries win on collision. */
+  private[graft] def mergeLedger(prior: Seq[(String, JObject)],
+      fresh: Seq[(String, JObject)]): Seq[(String, JObject)] = {
+    val merged = scala.collection.mutable.LinkedHashMap.empty[String, JObject]
+    (prior ++ fresh).foreach { case (q, e) => merged(q) = e }
+    merged.toSeq
+  }
+
+  /** Merges `fresh` into the ledger at `path` and rewrites it with this
+    * batch's top-level `header` fields; returns the entry count. An
+    * unreadable prior ledger raises before anything is written. */
+  private[graft] def writeLedger(path: Path, header: List[JField],
+      fresh: Seq[(String, JObject)]): Int = {
+    val merged = mergeLedger(readLedger(path), fresh)
+    val json = JObject(header :+ ("queries" -> JObject(merged.toList)))
+    Files.write(path, compact(json).getBytes("UTF-8"))
+    merged.size
+  }
+
+  /** One ledger entry: per-scale times, ratios, row counts when the
+    * query has input tables, and the `solo` provenance flag — whether
+    * the batch re-measured it alone at the end. */
+  private[graft] def entry(f: Factor, times: Seq[Double],
+      rows: Option[(Seq[Long], Seq[Long])], solo: Boolean): JObject = {
+    def arr(v: Seq[Long]) = JArray(v.map(n => JInt(n)).toList)
+    JObject(
+      f.timeFields.zip(times).map { case (k, t) => k -> JDecimal(dec(t)) } ++
+      f.ratioFields.map { case (k, n, d) =>
+        k -> JDecimal(dec(times(n) / math.max(times(d), 1e-9)))
+      } ++
+      rows.toList.flatMap { case (in, out) =>
+        List("rows_in" -> arr(in), "rows_out" -> arr(out))
+      } :+ ("solo" -> JBool(solo)): _*)
+  }
+
   def main(args: Array[String]): Unit = {
+    val f = args.headOption.flatMap(_.toIntOption).flatMap(factors.get)
+      .getOrElse(throw new IllegalArgumentException(
+        s"usage: Soak ${factors.keys.toSeq.sorted.mkString("|")} [query…]"))
+    val ledger = Paths.get(f.ledger)
+    // read first: an unreadable prior ledger fails before any work
+    val prior = readLedger(ledger)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -506,15 +642,8 @@ object ScaleSoak {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val src = "/root/testdata/sf0.1"
-    val dst = "target/sf1"
-    // sentinel written after the LAST table: a crash mid-build must
-    // not leave a half-built sf1 that later runs silently accept
-    val sentinel = java.nio.file.Paths.get(s"$dst/_BUILD_COMPLETE")
-    if (!java.nio.file.Files.exists(sentinel)) {
-      println("building target/sf1 (10x sf0.1)...")
-      buildSf1(spark, src, dst)
-      java.nio.file.Files.write(sentinel, Array.emptyByteArray)
-    }
+    f.replicas.foreach(ensureBuilt(spark, src, _))
+    val dirs = src +: f.replicas.map(_.dir)
     def time(name: String, dir: String): Double = {
       val fn = graft.SparkEntry.queries(name)
       val t0 = System.nanoTime()
@@ -524,117 +653,91 @@ object ScaleSoak {
       graft.Bench.force(fn(spark, dir))
       (System.nanoTime() - t0) / 1e9
     }
-    // warm both datasets once (page cache + codegen), then min-of-2 with
-    // the two scales INTERLEAVED per query (src,dst,src,dst): the ratio
-    // is a quotient of measurements taken seconds — not minutes — apart,
-    // so machine-wide contention drift hits both sides of the division
-    // instead of landing entirely in one sweep (round-9: a contended
-    // sf1 sweep made untouched queries read as 3× scale regressions).
-    // optional args: soak only these queries (dev subset — the recorded
-    // sweep runs the full list)
-    val torun =
-      if (args.isEmpty) headline else headline.filter(args.toSet)
-    torun.foreach { q => time(q, src); time(q, dst) }
-    def measure(q: String): (Double, Double) = {
-      val a01 = time(q, src); val a1 = time(q, dst)
-      val b01 = time(q, src); val b1 = time(q, dst)
-      (math.min(a01, b01), math.min(a1, b1))
+    val torun = if (args.length == 1) f.queries
+      else f.queries.filter(args.tail.toSet)
+    // warm every scale once (page cache + codegen), then min-of-2 with
+    // the scales INTERLEAVED per query (sf0.1, sf1, …, sf0.1, sf1, …):
+    // a ratio is a quotient of measurements taken seconds — not minutes
+    // — apart, so machine-wide contention drift hits both sides of the
+    // division instead of landing entirely in one sweep (round 9: a
+    // contended sf1 sweep made untouched queries read as 3× scale
+    // regressions).
+    torun.foreach(q => dirs.foreach(time(q, _)))
+    def measure(q: String): Vector[Double] = {
+      val a = dirs.map(time(q, _)); val b = dirs.map(time(q, _))
+      a.zip(b).map { case (x, y) => math.min(x, y) }.toVector
     }
-    // contention canary (same idea as Bench's, sampled IN the span it
-    // labels — a trivial fixed job after each query; any sample > 3× the
-    // run's best brands the span). Min-of-2 like Bench's: a one-off GC
-    // pause in the µ-scale canary itself shouldn't brand the span, while
-    // sustained contention slows both back-to-back runs and still trips.
-    def canaryOnce(): Double = {
-      def one(): Double = {
-        val t0 = System.nanoTime()
-        graft.queries.Tables.nation(spark, src).groupBy("n_regionkey")
-          .count().filter(org.apache.spark.sql.functions.col("count") >= 0)
-          .count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      math.min(one(), one())
-    }
-    val measured = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    val canarySamples = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    def show(ts: Seq[Double]) = f.timeFields.zip(ts)
+      .map { case (k, t) => s"$k=${dec(t)}" }.mkString(" ")
+    val canary = graft.Canary.nation(spark, src)
+    val measured = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Double]]
     torun.foreach { q =>
       measured(q) = measure(q)
-      canarySamples(q) = canaryOnce()
+      canary.sample(q)
+      println(s"[soak] $q ${show(measured(q))}")
     }
-    // self-healing retry (mirrors graft.Bench): one transient host
-    // hiccup out of ~35 spans shouldn't brand the sweep — re-measure a
-    // flagged span at the end; only a retry whose own canary is also
-    // slow keeps the flag (sustained load stays honestly contaminated).
-    // Heals are RECORDED (round-9 advice): original + retry measurements
-    // land in the output's `heals` so a healed sweep is distinguishable
-    // from a never-flagged one.
-    def base = canarySamples.values.min
-    val heals = scala.collection.mutable.ArrayBuffer
-      .empty[(String, (Double, Double), (Double, Double), Double, Double)]
-    canarySamples.collect {
-      case (q, t) if t > 3.0 * base => q
-    }.toVector.foreach { q =>
-      val retry = measure(q)
-      val c = canaryOnce()
-      if (c <= 3.0 * base) {
-        heals += ((q, measured(q), retry, canarySamples(q), c))
-        measured(q) = retry
-        canarySamples(q) = c
+    val heals = canary.heal(q => Some(measure(q))).map { h =>
+      val orig = measured(h.span)
+      h.retry.foreach(measured(h.span) = _)
+      (h, orig)
+    }
+    // MECHANIZED solo re-run (r17 verdict item 6): twice in r17 a batch
+    // measurement recorded a ~2× artifact (JVM interference from the
+    // surrounding batch) that only a solo re-run exposed. Any entry
+    // whose largest-scale time moved >25% vs its prior recording is
+    // re-measured at the END of the batch — no other soak query in
+    // flight, the closest one JVM gets to a solo run — and every written
+    // entry carries the `solo` provenance flag.
+    val priorTime = prior.flatMap { case (q, e) =>
+      e \ f.timeFields.last match {
+        case JDecimal(x) => Some(q -> x.toDouble)
+        case JInt(x) => Some(q -> x.toDouble)
+        case _ => None
       }
+    }.toMap
+    val solo = torun.filter { q =>
+      priorTime.get(q).exists(p =>
+        math.abs(measured(q).last - p) / math.max(p, 1e-9) > 0.25)
+    }.toSet
+    torun.filter(solo).foreach { q =>
+      measured(q) = measure(q)
+      println(s"[soak] $q SOLO re-measure (moved >25% vs prior " +
+        s"${priorTime(q)}s): ${show(measured(q))}")
     }
-    // MECHANIZED solo re-run (r17 verdict item 6, same rule as
-    // Spot100Soak): any entry whose sf1 time moved >25% vs its prior
-    // recording is re-measured at the END of the batch — no other soak
-    // query in flight — and written with a `solo: true` provenance flag.
-    val prior: Seq[(String, LedgerEntry)] = {
-      val p = java.nio.file.Paths.get("BENCH_sf1.json")
-      if (!java.nio.file.Files.exists(p)) Seq.empty
-      else parseLedger(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-    }
-    val priorSf1ForSolo = prior.map { case (q, e) => q -> e.sf1 }.toMap
-    val soloRerun = scala.collection.mutable.Set.empty[String]
-    measured.toVector.foreach { case (q, (_, t1)) =>
-      val moved = priorSf1ForSolo.get(q).exists(p =>
-        math.abs(t1 - p) / math.max(p, 1e-9) > 0.25)
-      if (moved) {
-        val retry = measure(q)
-        println(f"[soak] $q SOLO re-measure (moved >25%% vs prior " +
-          f"${priorSf1ForSolo(q)}%.3fs): sf0.1=${retry._1}%.3fs " +
-          f"sf1=${retry._2}%.3fs")
-        measured(q) = retry
-        soloRerun += q
-      }
-    }
-    val canaryBase = canarySamples.values.min
-    val contaminatedSpans = canarySamples.collect {
-      case (q, t) if t > 3.0 * canaryBase => q
-    }.toVector
-    // Locale.ROOT: comma-decimal locales would emit invalid JSON
-    def fmt(d: Double) = String.format(java.util.Locale.ROOT, "%.3f",
-      Double.box(d))
-    val entries = mergeLedger(prior, measured.toSeq, soloRerun.toSet).map {
-      case (q, e) =>
-        val r = e.sf1 / math.max(e.sf01, 1e-9)
-        val solo = e.solo.fold("")(s => s""","solo":$s""")
-        s""""$q":{"sf01_sec":${fmt(e.sf01)},"sf1_sec":${fmt(e.sf1)},"ratio":${fmt(r)}$solo}"""
-    }
-    val healsJson = heals.map { case (q, (o01, o1), (r01, r1), oc, rc) =>
-      s"""{"span":"$q","orig":[${fmt(o01)},${fmt(o1)}],""" +
-        s""""retry":[${fmt(r01)},${fmt(r1)}],""" +
-        s""""orig_canary":${fmt(oc)},"retry_canary":${fmt(rc)}}"""
-    }.mkString("[", ",", "]")
-    // contamination/heal flags describe THIS batch; batch_queries says
+    // r17 row-count evidence (verdict item 4): a flat ratio could also
+    // come from a fixture-pruning bug that silently reads a tenth of the
+    // corpus, so entries of queries with input tables record the INPUT
+    // rows present at each scale (metadata-only parquet counts, memoized
+    // per table) and the query's own output rows (an untimed count —
+    // count() prunes compute, so it is never the timed body)
+    val tableRows = scala.collection.mutable.Map.empty[(String, String), Long]
+    def rowsIn(q: String, dir: String): Long =
+      f.inputTables(q).map(t => tableRows.getOrElseUpdate((t, dir),
+        spark.read.parquet(s"$dir/$t.parquet").count())).sum
+    val rows = torun.filter(f.inputTables.contains).map { q =>
+      q -> ((dirs.map(rowsIn(q, _)),
+        dirs.map(graft.SparkEntry.queries(q)(spark, _).count())))
+    }.toMap
+    def decs(v: Seq[Double]) = JArray(v.map(t => JDecimal(dec(t))).toList)
+    // contamination and heals describe THIS batch; batch_queries says
     // which entries they cover (the rest are carried from prior runs)
-    val flags = s""""contaminated":${contaminatedSpans.nonEmpty},""" +
-      s""""contaminated_spans":${contaminatedSpans.map("\"" + _ + "\"")
-        .mkString("[", ",", "]")},"heals":$healsJson,""" +
-      s""""batch_queries":${torun.map("\"" + _ + "\"")
-        .mkString("[", ",", "]")},"""
-    val json = entries.mkString(
-      s"""{"replicas":$REPLICAS,"cpus":$cpus,$flags"queries":{""", ",", "}}")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_sf1.json"), json.getBytes("UTF-8"))
-    println(json)
+    val spans = canary.flagged
+    val header = List(
+      "replicas" -> JInt(f.replicas.last.replicas),
+      "cpus" -> JInt(graft.Bench.parseCpus(cpus)),
+      "contaminated" -> JBool(spans.nonEmpty),
+      "contaminated_spans" -> JArray(spans.map(JString(_)).toList),
+      "heals" -> JArray(heals.map { case (h, orig) => JObject(
+        "span" -> JString(h.span), "orig" -> decs(orig),
+        "retry" -> decs(h.retry.getOrElse(Vector.empty)),
+        "orig_canary" -> decs(h.perturbed),
+        "retry_canary" -> decs(h.fresh))
+      }.toList),
+      "batch_queries" -> JArray(torun.map(JString(_)).toList))
+    val n = writeLedger(ledger, header, torun.map { q =>
+      q -> entry(f, measured(q), rows.get(q), solo(q))
+    })
+    println(s"wrote ${f.ledger} ($n queries)")
     spark.stop()
   }
 }

@@ -10,16 +10,19 @@ import org.apache.spark.sql.types.DoubleType
   * row, attach the latest right (quote) row with right.time <= left.time
   * and the same `by` key.
   *
-  * Two formulations (SURVEY §2.4):
+  * Three formulations (SURVEY §2.4):
   *   - `unionTag` (default): union both sides with a side tag and take
   *     `last(right_col, ignoreNulls) OVER (PARTITION BY by ORDER BY time,
-  *     side ROWS UNBOUNDED PRECEDING)`. One shuffle on `by`, whole-stage
-  *     codegen end-to-end, AQE-friendly — scales to arbitrary key counts
-  *     and is skew-tolerant (a hot symbol is one sorted partition-stream,
-  *     exactly the reference's layout).
+  *     side ROWS UNBOUNDED PRECEDING)` over one struct of each right
+  *     row, so every payload value comes from the one matched right
+  *     row. One shuffle on `by`, whole-stage codegen around the
+  *     window, AQE-friendly — scales to arbitrary key counts and is
+  *     skew-tolerant (a hot symbol is one sorted partition-stream,
+  *     exactly the reference's layout). Right rows with a null time
+  *     never match; a left row with a null time matches nothing.
+  *   - `merge`: the physical [[graft.plans.AsofJoinExec]] sorted merge.
   *   - `coGrouped`: per-key merge of the two sorted iterators — mirrors
-  *     the reference's streaming state machine; kept for memory-profile
-  *     comparison on extreme single-key skew.
+  *     the reference's streaming state machine; a test-only oracle.
   */
 object AsofJoin {
 
@@ -40,9 +43,9 @@ object AsofJoin {
     * right.time >= left.time (polars `strategy="forward"` — what the
     * reference's backtester uses to fill alpha signals at the next trade
     * tick, apps/rottnest/backtester.py:59). Same one-shuffle union-tag
-    * layout, with the window mirrored: `first(…) OVER (… ROWS BETWEEN
-    * CURRENT ROW AND UNBOUNDED FOLLOWING)`. `tolerance` drops matches
-    * later than `left.time + tolerance`. */
+    * layout, with the window mirrored (the reversed running frame, see
+    * `unionTagImpl`). `tolerance` drops matches later than
+    * `left.time + tolerance`. */
   def unionTagForward(
       left: OrderedStream,
       right: OrderedStream,
@@ -51,6 +54,57 @@ object AsofJoin {
       tolerance: Option[Long] = None): OrderedStream =
     unionTagImpl(left, right, by, suffix, tolerance, forward = true)
 
+  /** The union-tag layout shared by every direction:
+    * (by, __t, __side, leftCols..., rightPayload...), each side null-padded
+    * in the other's columns. Right rows with a null time can never match
+    * and are dropped here. Returns the union, the left columns, the right
+    * payload's output names (suffixed on collision with a left column)
+    * and the orderable payload columns that extend the window ordering
+    * as tie-breakers. */
+  private def tagged(
+      left: OrderedStream,
+      right: OrderedStream,
+      by: String,
+      suffix: String,
+      lSide: Int): (org.apache.spark.sql.DataFrame, Seq[String], Seq[String],
+        Seq[org.apache.spark.sql.Column]) = {
+    val l = left.df
+    val r = right.df
+    val leftCols = l.columns.toSeq
+    val rightPayload = r.columns.toSeq.filterNot(_ == by).map { c =>
+      c -> (if (leftCols.contains(c)) c + suffix else c)
+    }
+    val lTagged = l
+      .withColumn("__t", col(left.timeCol).cast(DoubleType))
+      .withColumn("__side", lit(lSide))
+      .select(Seq(col(by), col("__t"), col("__side")) ++
+        leftCols.filterNot(_ == by).map(col) ++
+        rightPayload.map { case (_, out) => lit(null).as(out) }: _*)
+    val rTagged = r
+      .filter(col(right.timeCol).isNotNull)
+      .withColumn("__t", col(right.timeCol).cast(DoubleType))
+      .withColumn("__side", lit(1 - lSide))
+      .select(Seq(col(by), col("__t"), col("__side")) ++
+        leftCols.filterNot(_ == by).map(name => lit(null).as(name)) ++
+        rightPayload.map { case (in, out) => col(in).as(out) }: _*)
+    val tieBreak = rightPayload.collect {
+      case (in, out) if org.apache.spark.sql.catalyst.expressions.RowOrdering
+        .isOrderable(r.schema(in).dataType) => col(out)
+    }
+    (lTagged.unionByName(rTagged), leftCols, rightPayload.map(_._2), tieBreak)
+  }
+
+  /** The matched right row as ONE value: a struct of its time (`__rt`)
+    * and payload, null on left rows. Left rows carry null payloads, so
+    * filling each payload column with its own `last(c, ignoreNulls)`
+    * cannot tell a null IN the matched right row from padding: it skips
+    * it and returns an older right row's value, tearing the row. Filling
+    * the struct (non-null on every right row) keeps every value from the
+    * one matched row. */
+  private def matchedRow(outRight: Seq[String], rSide: Int) =
+    when(col("__side") === rSide,
+      struct((col("__t").as("__rt") +: outRight.map(col)): _*))
+
   private def unionTagImpl(
       left: OrderedStream,
       right: OrderedStream,
@@ -58,18 +112,6 @@ object AsofJoin {
       suffix: String,
       tolerance: Option[Long],
       forward: Boolean): OrderedStream = {
-    val lt = left.timeCol
-    val rt = right.timeCol
-    val l = left.df
-    val r = right.df
-    val leftCols = l.columns.toSeq
-    // right payload = everything but the key; suffix on collision with left
-    val rightPayload = r.columns.toSeq.filterNot(_ == by).map { c =>
-      c -> (if (leftCols.contains(c)) c + suffix else c)
-    }
-    val outRight = rightPayload.map(_._2)
-
-    // Common layout: (by, __t, side, leftCols..., rightPayload...).
     // Side tags order ties so the same-time right row falls inside the
     // left row's window frame in either direction. Orderable payload
     // columns extend the window ordering (round-10 tie-proofing): among
@@ -80,24 +122,8 @@ object AsofJoin {
     // instead of relying on fixture-time uniqueness.
     val lSide = if (forward) 0 else 1
     val rSide = 1 - lSide
-    val lTagged = l
-      .withColumn("__t", col(lt).cast(DoubleType))
-      .withColumn("__side", lit(lSide))
-      .select(Seq(col(by), col("__t"), col("__side")) ++
-        leftCols.filterNot(_ == by).map(col) ++
-        rightPayload.map { case (_, out) => lit(null).as(out) }: _*)
-    val rTagged = r
-      .withColumn("__t", col(rt).cast(DoubleType))
-      .withColumn("__side", lit(rSide))
-      .select(Seq(col(by), col("__t"), col("__side")) ++
-        leftCols.filterNot(_ == by).map(_ => lit(null)).zip(leftCols.filterNot(_ == by))
-          .map { case (c, name) => c.as(name) } ++
-        rightPayload.map { case (in, out) => col(in).as(out) }: _*)
-
-    val tieBreak = rightPayload.collect {
-      case (in, out) if org.apache.spark.sql.catalyst.expressions.RowOrdering
-        .isOrderable(r.schema(in).dataType) => col(out)
-    }
+    val (union, leftCols, outRight, tieBreak) =
+      tagged(left, right, by, suffix, lSide)
     // BOTH directions run as a RUNNING frame ([unboundedPreceding,
     // current] + last non-null), forward via the fully REVERSED
     // ordering (r16 scale fix): the literal forward form — first() over
@@ -122,22 +148,19 @@ object AsofJoin {
       .orderBy(orderKeys: _*)
       .rowsBetween(
         org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    def fill(c: org.apache.spark.sql.Column) =
-      last(c, ignoreNulls = true).over(w)
-    val filled = lTagged.unionByName(rTagged)
-      .withColumns((outRight.map { c => c -> fill(col(c)) } :+
-        ("__rt" -> fill(when(col("__side") === rSide, col("__t"))))).toMap)
+    val filled = union.withColumn("__m",
+      last(matchedRow(outRight, rSide), ignoreNulls = true).over(w))
 
-    val matched = tolerance.foldLeft(
-      filled.filter(col("__side") === lSide)
-    )((d, tol) => d.withColumns(outRight.map { c =>
-      c -> when(
-        (if (forward) col("__rt") - col("__t") else col("__t") - col("__rt"))
-          <= tol.toDouble, col(c))
-    }.toMap))
-
-    new OrderedStream(
-      matched.select(leftCols.map(col) ++ outRight.map(col): _*), lt)
+    // a left row with a null time matches nothing (the backward frame
+    // already holds no right row for it; the reversed forward frame
+    // would hold them all)
+    val ok = col("__t").isNotNull && tolerance.fold(lit(true))(tol =>
+      (if (forward) col("__m.__rt") - col("__t")
+       else col("__t") - col("__m.__rt")) <= tol.toDouble)
+    val matched = filled.filter(col("__side") === lSide)
+    new OrderedStream(matched.select(leftCols.map(col) ++
+      outRight.map(c => when(ok, col("__m").getField(c)).as(c)): _*),
+      left.timeCol)
   }
 
   /** NEAREST as-of (pandas `merge_asof(direction="nearest")`,
@@ -156,39 +179,16 @@ object AsofJoin {
     * (what wins at Δt ties too), forward MIN.
     *
     * Output: leftCols, right payload (suffixed on collision), and
-    * `asof_dir` ∈ {"b", "f", null}. */
+    * `asof_dir` ∈ {"b", "f", null}; a left row with a null time gets
+    * null payload and a null `asof_dir`. */
   def unionTagNearest(
       left: OrderedStream,
       right: OrderedStream,
       by: String,
       suffix: String = "_right",
       tolerance: Option[Long] = None): OrderedStream = {
-    val lt = left.timeCol
-    val rt = right.timeCol
-    val l = left.df
-    val r = right.df
-    val leftCols = l.columns.toSeq
-    val rightPayload = r.columns.toSeq.filterNot(_ == by).map { c =>
-      c -> (if (leftCols.contains(c)) c + suffix else c)
-    }
-    val outRight = rightPayload.map(_._2)
-    val lTagged = l
-      .withColumn("__t", col(lt).cast(DoubleType))
-      .withColumn("__side", lit(1))
-      .select(Seq(col(by), col("__t"), col("__side")) ++
-        leftCols.filterNot(_ == by).map(col) ++
-        rightPayload.map { case (_, out) => lit(null).as(out) }: _*)
-    val rTagged = r
-      .withColumn("__t", col(rt).cast(DoubleType))
-      .withColumn("__side", lit(0))
-      .select(Seq(col(by), col("__t"), col("__side")) ++
-        leftCols.filterNot(_ == by)
-          .map(name => lit(null).as(name)) ++
-        rightPayload.map { case (in, out) => col(in).as(out) }: _*)
-    val tieBreak = rightPayload.collect {
-      case (in, out) if org.apache.spark.sql.catalyst.expressions.RowOrdering
-        .isOrderable(r.schema(in).dataType) => col(out)
-    }
+    val (union, leftCols, outRight, tieBreak) =
+      tagged(left, right, by, suffix, lSide = 1)
     // forward fill via the REVERSED running frame, not first() over
     // [current, unboundedFollowing] — Spark's UnboundedFollowing frame
     // is O(rows²) per key (see unionTagImpl, r16 scale fix). Same
@@ -208,37 +208,32 @@ object AsofJoin {
       .partitionBy(col(by)).orderBy(ascKeys.map(_.desc): _*)
       .rowsBetween(
         org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val rOnly = (c: org.apache.spark.sql.Column) =>
-      when(col("__side") === 0, c)
-    val both = lTagged.unionByName(rTagged)
-      .withColumns((
-        outRight.flatMap { c => Seq(
-          s"__b_$c" -> last(rOnly(col(c)), ignoreNulls = true).over(wB),
-          s"__f_$c" -> last(rOnly(col(c)), ignoreNulls = true).over(wF))
-        } ++ Seq(
-          "__bt" -> last(rOnly(col("__t")), ignoreNulls = true).over(wB),
-          "__ft" -> last(rOnly(col("__t")), ignoreNulls = true).over(wF))
-      ).toMap)
+    val both = union
+      .withColumns(Map(
+        "__b" -> last(matchedRow(outRight, 0), ignoreNulls = true).over(wB),
+        "__f" -> last(matchedRow(outRight, 0), ignoreNulls = true).over(wF)))
       .filter(col("__side") === 1)
-    // per-direction tolerance, then the nearest choice (tie → backward)
-    val bOk = col("__bt").isNotNull &&
-      tolerance.map(t => col("__t") - col("__bt") <= t.toDouble)
+    // per-direction tolerance, then the nearest choice (tie → backward);
+    // a null left time has no direction
+    val bOk = col("__b").isNotNull &&
+      tolerance.map(t => col("__t") - col("__b.__rt") <= t.toDouble)
         .getOrElse(lit(true))
-    val fOk = col("__ft").isNotNull &&
-      tolerance.map(t => col("__ft") - col("__t") <= t.toDouble)
+    val fOk = col("__f").isNotNull &&
+      tolerance.map(t => col("__f.__rt") - col("__t") <= t.toDouble)
         .getOrElse(lit(true))
-    val dir = when(bOk && fOk,
-        when(col("__t") - col("__bt") <= col("__ft") - col("__t"), "b")
-          .otherwise("f"))
+    val dir = when(col("__t").isNull, lit(null))
+      .when(bOk && fOk,
+        when(col("__t") - col("__b.__rt") <= col("__f.__rt") - col("__t"),
+          "b").otherwise("f"))
       .when(bOk, "b").when(fOk, "f")
     val picked = both.withColumn("asof_dir", dir)
       .withColumns(outRight.map { c =>
-        c -> when(col("asof_dir") === "b", col(s"__b_$c"))
-          .when(col("asof_dir") === "f", col(s"__f_$c"))
+        c -> when(col("asof_dir") === "b", col("__b").getField(c))
+          .when(col("asof_dir") === "f", col("__f").getField(c))
       }.toMap)
     new OrderedStream(
       picked.select(leftCols.map(col) ++ outRight.map(col) :+
-        col("asof_dir"): _*), lt)
+        col("asof_dir"): _*), left.timeCol)
   }
 
   /** Physical-operator formulation (SURVEY §7.3 tier (c)): plans a
@@ -248,12 +243,16 @@ object AsofJoin {
     * materialization (the cogroup formulation's). One exchange + sort
     * per side, exactly like a sort-merge join.
     *
-    * Measured tradeoff (sf0.1, narrow payload): unionTag wins (~3×) —
-    * its window runs in whole-stage codegen while this exec is an
-    * interpreted row merge. Prefer `merge` when payloads are wide or a
-    * hot key's unioned row-run would not fit a sort spill comfortably:
-    * here each side shuffles only its own columns and the right side
-    * never enters the output sort. unionTag remains the default. */
+    * Measured tradeoff (narrow payload): this interpreted row merge is
+    * the FASTER form, not the slower one. Round 18 recorded q49 (merge)
+    * at 0.315 s against q41 (unionTag, same join) at 0.419 s at sf0.1 on
+    * 32 cores, and 0.448 s against 0.704 s at sf1; on a 4-core VM at
+    * sf0.1 the medians of 48 runs were 264 ms against 393 ms. The merge
+    * also suits wide payloads and hot keys whose unioned row-run would
+    * not fit a sort spill comfortably: each side shuffles only its own
+    * columns and the right side never enters the output sort. unionTag
+    * remains the default because only it has the tolerance, forward and
+    * nearest variants. */
   def merge(
       left: OrderedStream,
       right: OrderedStream,

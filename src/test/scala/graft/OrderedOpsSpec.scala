@@ -258,7 +258,8 @@ class OrderedOpsSpec extends SparkSpecBase {
   * StreamingTieSpec): among right rows tied on time, backward picks the
   * MAX payload tuple and forward the MIN, identically in the unionTag
   * window formulation and the AsofJoinExec physical merge, regardless
-  * of input row order. */
+  * of input row order. Every payload value comes from the one matched
+  * right row, nulls included, and a null time never matches. */
 class BatchAsofTieSpec extends SparkSpecBase {
   import graft.api.OrderedStream
   import graft.ts.AsofJoin
@@ -304,6 +305,71 @@ class BatchAsofTieSpec extends SparkSpecBase {
     val exec = AsofJoin.merge(os(t, "px"), os(q, "bid"), by = "sym")
       .select("bid").collect().map(_.getDouble(0)).toSeq
     assert(exec == Seq(9.0))
+  }
+
+  /** Nullable (sym, t, v) rows: a null in any column is kept. */
+  private def nullable(v: String,
+      rows: (String, java.lang.Double, java.lang.Double)*): OrderedStream = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("sym", StringType),
+      StructField("t", DoubleType), StructField(v, DoubleType)))
+    new OrderedStream(spark.createDataFrame(java.util.Arrays.asList(
+      rows.map { case (k, t, x) => Row(k, t, x) }: _*), schema), "t")
+  }
+
+  /** (t, t_right, bid) per left row, null left times first. */
+  private def picked(out: OrderedStream) =
+    out.df.orderBy(col("t").asc_nulls_first)
+      .select("t", "t_right", "bid").collect()
+      .map(r => (0 to 2).map(i => Option(r.get(i))).toList).toSeq
+
+  // the matched quote's own null must not be back-filled from an older
+  // quote: every payload value comes from the one matched right row
+  private def quotesWithNull = nullable("bid",
+    ("A", 4.0, 77.0), ("A", 5.0, 99.0), ("A", 8.0, null))
+
+  test("backward: a null in the matched quote stays null (no torn row)") {
+    val out = AsofJoin.unionTag(nullable("px", ("A", 10.0, 1.0)),
+      quotesWithNull, by = "sym")
+    assert(picked(out) == Seq(List(Some(10.0), Some(8.0), None)))
+  }
+
+  test("forward: a null in the matched quote stays null (no torn row)") {
+    val q = nullable("bid", ("A", 2.0, null), ("A", 4.0, 77.0))
+    val out = AsofJoin.unionTagForward(nullable("px", ("A", 1.0, 1.0)), q,
+      by = "sym")
+    assert(picked(out) == Seq(List(Some(1.0), Some(2.0), None)))
+  }
+
+  test("nearest: the picked quote's null stays null (no torn row)") {
+    val out = AsofJoin.unionTagNearest(nullable("px", ("A", 10.0, 1.0)),
+      quotesWithNull, by = "sym")
+    assert(picked(out) == Seq(List(Some(10.0), Some(8.0), None)))
+    assert(out.df.select("asof_dir").collect().map(_.getString(0)).toSeq ==
+      Seq("b"))
+  }
+
+  test("a null left time matches nothing in any direction") {
+    val l = nullable("px", ("A", null, 1.0), ("A", 10.0, 2.0))
+    val q = nullable("bid", ("A", null, 98.0), ("A", 9.0, 99.0),
+      ("A", 12.0, 97.0))
+    val none = List(None, None, None)
+    assert(picked(AsofJoin.unionTag(l, q, by = "sym")) ==
+      Seq(none, List(Some(10.0), Some(9.0), Some(99.0))))
+    assert(picked(AsofJoin.unionTagForward(l, q, by = "sym")) ==
+      Seq(none, List(Some(10.0), Some(12.0), Some(97.0))))
+    val nearest = AsofJoin.unionTagNearest(l, q, by = "sym")
+    assert(picked(nearest) ==
+      Seq(none, List(Some(10.0), Some(9.0), Some(99.0))))
+    assert(nearest.df.orderBy(col("t").asc_nulls_first).select("asof_dir")
+      .collect().map(r => Option(r.getString(0))).toSeq ==
+      Seq(None, Some("b")))
+    // the physical merge already returned this
+    val exec = AsofJoin.merge(l, q, by = "sym")
+      .orderBy(col("t").asc_nulls_first).select("t", "t_right", "bid")
+      .collect().map(r => (0 to 2).map(i => Option(r.get(i))).toList).toSeq
+    assert(exec == Seq(none, List(Some(10.0), Some(9.0), Some(99.0))))
   }
 }
 
