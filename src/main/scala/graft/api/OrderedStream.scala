@@ -37,24 +37,28 @@ class OrderedStream(df0: DataFrame, val timeCol: String) extends DataStream(df0)
   }
 
   /** Backward as-of join per `by` symbol (reference `join_asof`,
-    * orderedstream.py:114-191 + SortedAsofExecutor ts_executors.py:324-383).
-    * See [[graft.ts.AsofJoin]] for the formulations (this is `unionTag`). */
+    * orderedstream.py:114-191 + SortedAsofExecutor ts_executors.py:324-383):
+    * [[graft.ts.AsofJoin]] with `AsofDirection.Backward`, the sorted-merge
+    * `AsofJoinExec`. */
   def asofJoin(
       right: OrderedStream,
       by: String,
       suffix: String = "_right",
       tolerance: Option[Long] = None): OrderedStream =
-    graft.ts.AsofJoin.unionTag(this, right, by, suffix, tolerance)
+    graft.ts.AsofJoin(this, right, by, graft.plans.AsofDirection.Backward,
+      suffix, tolerance)
 
   /** Forward as-of join: earliest right row at-or-after each left time
     * (polars `strategy="forward"`, used by the reference backtester,
-    * apps/rottnest/backtester.py:59). */
+    * apps/rottnest/backtester.py:59) — [[graft.ts.AsofJoin]] with
+    * `AsofDirection.Forward`. */
   def asofJoinForward(
       right: OrderedStream,
       by: String,
       suffix: String = "_right",
       tolerance: Option[Long] = None): OrderedStream =
-    graft.ts.AsofJoin.unionTagForward(this, right, by, suffix, tolerance)
+    graft.ts.AsofJoin(this, right, by, graft.plans.AsofDirection.Forward,
+      suffix, tolerance)
 
   /** Windowed aggregation (reference `windowed_transform`,
     * datastream.py:1650-1700) — spec × trigger per SURVEY §2.9. */

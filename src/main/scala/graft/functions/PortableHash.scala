@@ -275,9 +275,5 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
       (children: Seq[Expression]) =>
         org.apache.spark.sql.catalyst.expressions
           .BloomFilterMightContain(children.head, children(1))))
-    // the custom-operator tier: lowers AsofJoinNode → AsofJoinExec in
-    // every session (AsofJoin.merge also self-registers per session via
-    // experimental.extraStrategies for callers not using extensions)
-    e.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
   }
 }

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * (user_id = symbol, value = price):
   *   1. alpha signals → fills via FORWARD as-of join (first tick
   *      at-or-after the signal — backtester.py:59's
-  *      `join_asof(strategy="forward")`), one shuffle on symbol;
+  *      `join_asof(strategy="forward")`), the AsofJoinExec merge: one
+  *      exchange + sort on symbol per side;
   *   2. position/cash deltas at fill time; daily equity = running cash +
   *      Σ position(sym, day) × last price(sym, day), exactly the
   *      reference's per-day mark-to-market loop (backtester.py:74-92),

@@ -42,9 +42,9 @@ object TimeSeriesQueries {
         .sort(Seq("event_id")).df
     },
 
-    // the same as-of join through the custom physical operator
-    // (graft.plans.AsofJoinExec — SURVEY §7.3 tier (c)); identical oracle
-    // to q41 proves the operator at the driver gate.
+    // q41's as-of join under its own name: every as-of direction runs
+    // the custom physical operator (graft.plans.AsofJoinExec — SURVEY
+    // §7.3 tier (c)), so both names gate it with one oracle.
     "q49_asof_physical" -> { (s, d) =>
       val ev = events(s, d)
       val trades = new OrderedStream(
@@ -53,8 +53,8 @@ object TimeSeriesQueries {
       val quotes = new OrderedStream(
         ev.filter(col("event_type") === "view")
           .select("user_id", "ts", "value"), "ts")
-      graft.ts.AsofJoin.merge(trades, quotes, by = "user_id", suffix = "_right")
-        .orderBy("event_id")
+      trades.asofJoin(quotes, by = "user_id", suffix = "_right")
+        .sort(Seq("event_id")).df
     },
 
     // as-of with tolerance: match only views within the last 6 hours.
@@ -108,8 +108,8 @@ object TimeSeriesQueries {
 
     // NEAREST as-of (pandas direction="nearest"), completing the
     // backward/forward family: smallest |Δt| wins, ties to backward;
-    // both directional fills ride ONE exchange (two windows on the
-    // same union layout). Emits the picked direction for audit.
+    // one AsofJoinExec merge holds both candidates, so nearest shuffles
+    // exactly what backward does. Emits the picked direction for audit.
     "q205_asof_nearest" -> { (s, d) =>
       val ev = events(s, d)
       val trades = new OrderedStream(
@@ -118,8 +118,8 @@ object TimeSeriesQueries {
       val quotes = new OrderedStream(
         ev.filter(col("event_type") === "view")
           .select("user_id", "ts", "value"), "ts")
-      AsofJoin.unionTagNearest(trades, quotes, by = "user_id",
-          suffix = "_right")
+      AsofJoin(trades, quotes, by = "user_id",
+          direction = graft.plans.AsofDirection.Nearest, suffix = "_right")
         .sort(Seq("event_id")).df
     },
 

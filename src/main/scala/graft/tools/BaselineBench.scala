@@ -434,9 +434,9 @@ object BaselineBench {
       }
       val eF = timed(() => graft.Bench.force(engineFill()))
       record("tick as-of fill only", eF, eF,
-        "the tick-stream sort/window stage both formulations share; " +
-          "engine unionTag plans ONE exchange + window over the " +
-          "tagged union — already the minimal shuffle for an as-of")
+        "the tick-stream sort stage both formulations share; " +
+          "engine AsofJoinExec plans one exchange + sort per side and " +
+          "one merge — each side shuffles only its own columns")
     }
     backtestTier(
       sys.env.getOrElse("GRAFT_BT_TRADES", "20000000").toLong,

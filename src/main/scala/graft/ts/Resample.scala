@@ -95,9 +95,9 @@ object Resample {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // next-observed via the REVERSED running frame, not first() over
     // [current, unboundedFollowing]: Spark's UnboundedFollowing frame
-    // re-scans to the partition end per row — O(rows²) per key (the
-    // r16 as-of scale fix, graft.ts.AsofJoin). __b is unique per key
-    // (grid buckets), so the reversed last() picks the identical row.
+    // re-scans to the partition end per row — O(rows²) per key.
+    // __b is unique per key (grid buckets), so the reversed last()
+    // picks the identical row.
     val fwd = Window.partitionBy(col(keyCol)).orderBy(col("__b").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val p0 = last(obsPoint, ignoreNulls = true).over(back)

@@ -1,11 +1,12 @@
 package graft
 
 import graft.api.OrderedStream
+import graft.plans.AsofDirection
 import graft.ts._
 import org.apache.spark.sql.functions._
 
-/** Ordered-stream operators: asof join (both formulations), shift,
-  * windows, CEP (SURVEY §2.9). */
+/** Ordered-stream operators: asof join, shift, windows, CEP
+  * (SURVEY §2.9). */
 class OrderedOpsSpec extends SparkSpecBase {
 
   private def trades() = {
@@ -50,7 +51,7 @@ class OrderedOpsSpec extends SparkSpecBase {
     assert(e.getMessage.contains("sortedness contract violated"))
   }
 
-  test("asof unionTag: latest right at or before left time, per key") {
+  test("asof backward: latest right at or before left time, per key") {
     val out = trades().asofJoin(quotes(), "sym").df
       .orderBy("sym", "t")
       .select(col("sym"), col("t"), col("bid"))
@@ -63,9 +64,8 @@ class OrderedOpsSpec extends SparkSpecBase {
       ("B", 12.0, None)))        // B's only quote is later
   }
 
-  test("asof nearest: smallest |dt| wins, tie to backward, one exchange") {
-    import graft.ts.AsofJoin
-    val out = AsofJoin.unionTagNearest(trades(), quotes(), "sym").df
+  test("asof nearest: smallest |dt| wins, tie to backward, backward's exchanges") {
+    val out = AsofJoin(trades(), quotes(), "sym", AsofDirection.Nearest).df
     val rows = out.orderBy("sym", "t")
       .select(col("sym"), col("t"), col("bid"), col("asof_dir"))
       .collect()
@@ -76,16 +76,23 @@ class OrderedOpsSpec extends SparkSpecBase {
       ("A", 20.0, Some(100.7), "b"),  // exact-time tie: backward, d=0
       ("A", 35.0, Some(100.7), "b"),  // only backward exists
       ("B", 12.0, Some(199.0), "f"))) // only forward exists (quote@30)
-    // nearest must not pay a second shuffle: both windows ride one
-    // exchange over the (by)-partitioned union
-    // (a LocalRelation fixture can plan zero exchanges — the bound is
-    // what matters: nearest never pays a second directional shuffle)
-    val nEx = out.queryExecution.executedPlan.collect {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-    }.size
-    assert(nEx <= 1, s"expected at most 1 exchange, got $nEx")
+    // nearest keeps both candidates in the one merge, so it plans
+    // exactly backward's exchanges: one per side on the asof key, over
+    // multi-partition inputs (a one-partition LocalRelation plans none)
+    def exchanges(dir: AsofDirection) = {
+      def spread(o: OrderedStream) = new OrderedStream(o.df.repartition(3), "t")
+      val plan = AsofJoin(spread(trades()), spread(quotes()), "sym", dir)
+        .df.queryExecution.executedPlan
+      object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+      Aqe.collect(plan) {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      }.size
+    }
+    val nBackward = exchanges(AsofDirection.Backward)
+    assert(nBackward >= 2, s"expected an exchange per side, got $nBackward")
+    assert(exchanges(AsofDirection.Nearest) == nBackward)
     // tolerance bounds BOTH directions
-    val tol = AsofJoin.unionTagNearest(trades(), quotes(), "sym",
+    val tol = AsofJoin(trades(), quotes(), "sym", AsofDirection.Nearest,
         tolerance = Some(5L)).df
       .orderBy("sym", "t")
       .select(col("sym"), col("t"), col("asof_dir")).collect()
@@ -129,28 +136,9 @@ class OrderedOpsSpec extends SparkSpecBase {
       .select("user_id", "ts", "value"), "ts")
     val r = new OrderedStream(ev.filter(col("event_type") === "view")
       .select("user_id", "ts", "value"), "ts")
-    val a = AsofJoin.unionTag(l, r, "user_id").df
-    val b = AsofJoin.coGrouped(l, r, "user_id")
-    assert(a.count() == b.count())
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
-  }
-
-  test("physical asof operator (AsofJoinExec) agrees with unionTag") {
-    // crafted fixture: exact values
-    val direct = AsofJoin.merge(trades(), quotes(), "sym")
-      .orderBy("sym", "t").select(col("sym"), col("t"), col("bid")).collect()
-      .map(r => (r.getString(0), r.getDouble(1), Option(r.get(2)).map(_.asInstanceOf[Double])))
-    assert(direct.toSeq == Seq(
-      ("A", 10.0, Some(99.5)), ("A", 20.0, Some(100.7)),
-      ("A", 35.0, Some(100.7)), ("B", 12.0, None)))
     // self-derived sides (shared scan → exprId dedup path) on real data
-    val ev = graft.queries.Tables.events(spark, sf())
-    val l = new OrderedStream(ev.filter(col("event_type") === "purchase")
-      .select("user_id", "ts", "value"), "ts")
-    val r = new OrderedStream(ev.filter(col("event_type") === "view")
-      .select("user_id", "ts", "value"), "ts")
-    val a = AsofJoin.unionTag(l, r, "user_id").df
-    val b = AsofJoin.merge(l, r, "user_id")
+    val a = AsofJoin(l, r, "user_id").df
+    val b = AsofCoGroup.coGrouped(l, r, "user_id")
     assert(a.count() == b.count())
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
   }
@@ -168,7 +156,7 @@ class OrderedOpsSpec extends SparkSpecBase {
     val r = new OrderedStream(spark.createDataFrame(
       java.util.Arrays.asList(
         Row("A", null, 98.0), Row("A", 9.0, 99.0)), rSchema), "t")
-    val out = AsofJoin.merge(l, r, "sym")
+    val out = AsofJoin(l, r, "sym").df
       .orderBy(col("t").asc_nulls_first)
       .select(col("t"), col("bid")).collect()
       .map(x => (Option(x.get(0)), Option(x.get(1))))
@@ -185,6 +173,50 @@ class OrderedOpsSpec extends SparkSpecBase {
       .map(r => (r.getDouble(0), Option(r.get(1)).map(_.asInstanceOf[Double])))
     assert(out.toSeq == Seq(
       (10.0, Some(99.5)), (20.0, Some(100.7)), (35.0, None), (12.0, None)))
+  }
+
+  private def asofError(l: OrderedStream, r: OrderedStream, by: String) =
+    intercept[org.apache.spark.sql.AnalysisException](AsofJoin(l, r, by))
+      .getCondition
+
+  test("asof join rejects a missing by or time column") {
+    assert(asofError(trades(), quotes(), "nope") ==
+      "UNRESOLVED_COLUMN.WITH_SUGGESTION")
+    assert(asofError(new OrderedStream(trades().df, "nope"), quotes(), "sym") ==
+      "UNRESOLVED_COLUMN.WITH_SUGGESTION")
+    assert(asofError(trades(), new OrderedStream(quotes().df, "nope"), "sym") ==
+      "UNRESOLVED_COLUMN.WITH_SUGGESTION")
+  }
+
+  test("asof join rejects by columns whose types differ") {
+    val intKeys = new OrderedStream(quotes().df.withColumn("k", lit(1)), "t")
+    val longKeys = new OrderedStream(trades().df.withColumn("k", lit(1L)), "t")
+    assert(asofError(longKeys, intKeys, "k") ==
+      "DATATYPE_MISMATCH.BINARY_OP_DIFF_TYPES")
+  }
+
+  test("asof join rejects a time column that is neither numeric nor timestamp") {
+    val strTime = new OrderedStream(quotes().df.withColumn("s", lit("9")), "s")
+    assert(asofError(trades(), strTime, "sym") ==
+      "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE")
+    val dateTime = new OrderedStream(
+      trades().df.withColumn("d", current_date()), "d")
+    assert(asofError(dateTime, quotes(), "sym") ==
+      "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE")
+  }
+
+  test("asof join matches a double left time against a timestamp right time") {
+    val s = spark
+    import s.implicits._
+    val l = new OrderedStream(Seq(("A", 10.0), ("A", 20.5)).toDF("sym", "t"), "t")
+    val r = new OrderedStream(Seq(("A", 9L, 1.0), ("A", 20L, 2.0), ("A", 21L, 3.0))
+      .toDF("sym", "sec", "bid").select(col("sym"),
+        timestamp_seconds(col("sec")).as("ts"), col("bid")), "ts")
+    def bids(dir: AsofDirection) = AsofJoin(l, r, "sym", dir).df
+      .orderBy("t").select("bid").collect().map(_.getDouble(0)).toSeq
+    assert(bids(AsofDirection.Backward) == Seq(1.0, 2.0))
+    assert(bids(AsofDirection.Forward) == Seq(2.0, 3.0))
+    assert(bids(AsofDirection.Nearest) == Seq(1.0, 2.0)) // 20.5: |Δt| tie → b
   }
 
   test("shift = lag per key in time order") {
@@ -255,13 +287,14 @@ class OrderedOpsSpec extends SparkSpecBase {
 }
 
 /** Round-10 batch-as-of tie-proofing (the batch twin of
-  * StreamingTieSpec): among right rows tied on time, backward picks the
-  * MAX payload tuple and forward the MIN, identically in the unionTag
-  * window formulation and the AsofJoinExec physical merge, regardless
-  * of input row order. Every payload value comes from the one matched
-  * right row, nulls included, and a null time never matches. */
+  * StreamingTieSpec): among right rows tied on time, the AsofJoinExec
+  * merge picks the MAX payload tuple backward and the MIN forward,
+  * regardless of input row order. Every payload value comes from the
+  * one matched right row, nulls included, and a null time never
+  * matches. */
 class BatchAsofTieSpec extends SparkSpecBase {
   import graft.api.OrderedStream
+  import graft.plans.AsofDirection.{Forward, Nearest}
   import graft.ts.AsofJoin
 
   private def os(rows: Seq[(String, Double, Double)], v: String) = {
@@ -270,27 +303,23 @@ class BatchAsofTieSpec extends SparkSpecBase {
     new OrderedStream(rows.toDF("sym", "t", v), "t")
   }
 
-  test("backward: equal-ts quotes resolve to max value in both formulations") {
+  test("backward: equal-ts quotes resolve to max value, order-independent") {
     val t = Seq(("A", 10.0, 1.0), ("B", 10.0, 1.0))
     // A sees the low quote value first, B the high one first — the
     // winner (99.0, the max at the tied ts) must not depend on order
     val q = Seq(("A", 5.0, 11.0), ("A", 5.0, 99.0),
                 ("B", 5.0, 99.0), ("B", 5.0, 11.0))
-    val viaWindow = AsofJoin.unionTag(os(t, "px"), os(q, "bid"), by = "sym")
+    val rows = AsofJoin(os(t, "px"), os(q, "bid"), by = "sym")
       .df.select("sym", "bid").collect()
       .map(r => (r.getString(0), r.getDouble(1))).sorted.toSeq
-    val viaExec = AsofJoin.merge(os(t, "px"), os(q, "bid"), by = "sym")
-      .select("sym", "bid").collect()
-      .map(r => (r.getString(0), r.getDouble(1))).sorted.toSeq
-    assert(viaWindow == Seq(("A", 99.0), ("B", 99.0)))
-    assert(viaExec == viaWindow)
+    assert(rows == Seq(("A", 99.0), ("B", 99.0)))
   }
 
   test("forward: equal-ts ticks resolve to min value, order-independent") {
     val a = Seq(("A", 10.0, 1.0), ("B", 10.0, 1.0))
     val tk = Seq(("A", 15.0, 42.0), ("A", 15.0, 7.0),
                  ("B", 15.0, 7.0), ("B", 15.0, 42.0))
-    val rows = AsofJoin.unionTagForward(os(a, "d"), os(tk, "px"), by = "sym")
+    val rows = AsofJoin(os(a, "d"), os(tk, "px"), by = "sym", Forward)
       .df.select("sym", "px").collect()
       .map(r => (r.getString(0), r.getDouble(1))).sorted.toSeq
     assert(rows == Seq(("A", 7.0), ("B", 7.0)))
@@ -299,12 +328,9 @@ class BatchAsofTieSpec extends SparkSpecBase {
   test("tie at the trade's own instant still matches (inclusive <=)") {
     val t = Seq(("A", 10.0, 1.0))
     val q = Seq(("A", 10.0, 5.0), ("A", 10.0, 9.0))
-    val rows = AsofJoin.unionTag(os(t, "px"), os(q, "bid"), by = "sym")
+    val rows = AsofJoin(os(t, "px"), os(q, "bid"), by = "sym")
       .df.select("bid").collect().map(_.getDouble(0)).toSeq
     assert(rows == Seq(9.0))
-    val exec = AsofJoin.merge(os(t, "px"), os(q, "bid"), by = "sym")
-      .select("bid").collect().map(_.getDouble(0)).toSeq
-    assert(exec == Seq(9.0))
   }
 
   /** Nullable (sym, t, v) rows: a null in any column is kept. */
@@ -330,21 +356,21 @@ class BatchAsofTieSpec extends SparkSpecBase {
     ("A", 4.0, 77.0), ("A", 5.0, 99.0), ("A", 8.0, null))
 
   test("backward: a null in the matched quote stays null (no torn row)") {
-    val out = AsofJoin.unionTag(nullable("px", ("A", 10.0, 1.0)),
-      quotesWithNull, by = "sym")
+    val out = AsofJoin(nullable("px", ("A", 10.0, 1.0)), quotesWithNull,
+      by = "sym")
     assert(picked(out) == Seq(List(Some(10.0), Some(8.0), None)))
   }
 
   test("forward: a null in the matched quote stays null (no torn row)") {
     val q = nullable("bid", ("A", 2.0, null), ("A", 4.0, 77.0))
-    val out = AsofJoin.unionTagForward(nullable("px", ("A", 1.0, 1.0)), q,
-      by = "sym")
+    val out = AsofJoin(nullable("px", ("A", 1.0, 1.0)), q, by = "sym",
+      Forward)
     assert(picked(out) == Seq(List(Some(1.0), Some(2.0), None)))
   }
 
   test("nearest: the picked quote's null stays null (no torn row)") {
-    val out = AsofJoin.unionTagNearest(nullable("px", ("A", 10.0, 1.0)),
-      quotesWithNull, by = "sym")
+    val out = AsofJoin(nullable("px", ("A", 10.0, 1.0)), quotesWithNull,
+      by = "sym", Nearest)
     assert(picked(out) == Seq(List(Some(10.0), Some(8.0), None)))
     assert(out.df.select("asof_dir").collect().map(_.getString(0)).toSeq ==
       Seq("b"))
@@ -355,21 +381,16 @@ class BatchAsofTieSpec extends SparkSpecBase {
     val q = nullable("bid", ("A", null, 98.0), ("A", 9.0, 99.0),
       ("A", 12.0, 97.0))
     val none = List(None, None, None)
-    assert(picked(AsofJoin.unionTag(l, q, by = "sym")) ==
+    assert(picked(AsofJoin(l, q, by = "sym")) ==
       Seq(none, List(Some(10.0), Some(9.0), Some(99.0))))
-    assert(picked(AsofJoin.unionTagForward(l, q, by = "sym")) ==
+    assert(picked(AsofJoin(l, q, by = "sym", Forward)) ==
       Seq(none, List(Some(10.0), Some(12.0), Some(97.0))))
-    val nearest = AsofJoin.unionTagNearest(l, q, by = "sym")
+    val nearest = AsofJoin(l, q, by = "sym", Nearest)
     assert(picked(nearest) ==
       Seq(none, List(Some(10.0), Some(9.0), Some(99.0))))
     assert(nearest.df.orderBy(col("t").asc_nulls_first).select("asof_dir")
       .collect().map(r => Option(r.getString(0))).toSeq ==
       Seq(None, Some("b")))
-    // the physical merge already returned this
-    val exec = AsofJoin.merge(l, q, by = "sym")
-      .orderBy(col("t").asc_nulls_first).select("t", "t_right", "bid")
-      .collect().map(r => (0 to 2).map(i => Option(r.get(i))).toList).toSeq
-    assert(exec == Seq(none, List(Some(10.0), Some(9.0), Some(99.0))))
   }
 }
 

@@ -121,10 +121,10 @@ class PlanHygieneSpec extends SparkSpecBase {
     * UnboundedFollowing whose start is not UnboundedPreceding with
     * UnboundedFollowingWindowFunctionFrame, which rescans to the
     * partition end FOR EVERY ROW — invisible on sf fixtures, a
-    * 9-minute hang at 20M rows per key. The three known sites were
-    * rewritten as the exact-mirror reversed running frame
-    * (ts/AsofJoin, ts/Resample); this catalog-wide pin flushes any
-    * fourth site and blocks regression. Whole-partition frames
+    * 9-minute hang at 20M rows per key. The known sites were rewritten
+    * as the exact-mirror reversed running frame (ts/Resample) or replaced
+    * by a sorted merge (the as-of join); this catalog-wide pin flushes
+    * any new site and blocks regression. Whole-partition frames
     * [unboundedpreceding, unboundedfollowing] stay allowed: Spark
     * computes those once per partition (O(rows)). */
   test("no query plans a per-row UnboundedFollowing window frame") {
@@ -151,6 +151,19 @@ class PlanHygieneSpec extends SparkSpecBase {
     assert(offenders.isEmpty,
       "O(rows²) per-row UnboundedFollowing frames — express forward " +
         s"fills as the reversed running frame instead: $offenders")
+  }
+
+  /** Every as-of direction runs the one sorted-merge operator: each
+    * as-of catalog query plans exactly one AsofJoinExec. */
+  test("every as-of query plans exactly one AsofJoinExec") {
+    val asof = Set("q41_asof_join", "q42_asof_tolerance", "q49_asof_physical",
+      "q80_backtest", "q205_asof_nearest")
+    val counts = built.collect { case (name, df) if asof(name) =>
+      name -> df.queryExecution.sparkPlan.collect {
+        case e: graft.plans.AsofJoinExec => e
+      }.size
+    }.toMap
+    assert(counts == asof.map(_ -> 1).toMap)
   }
 
   test("nested-loop joins appear only under one-row scalar broadcasts") {

@@ -479,4 +479,57 @@ class PropertySpec extends SparkSpecBase {
       assert(got == exact, s"parts=$parts")
     }
   }
+  test("asof join with time ties equals brute force in every direction (seeded)") {
+    import graft.plans.AsofDirection
+    import graft.plans.AsofDirection._
+    import graft.ts.AsofJoin
+    import scala.math.Ordering.Double.TotalOrdering
+    val s = spark
+    import s.implicits._
+    val tieRnd = new Random(7)
+    // few distinct times per key, so both sides tie often; some null
+    // payloads, which order first among tied right rows
+    def rows(n: Int) = (1 to n).map { _ =>
+      (s"k${tieRnd.nextInt(3)}", tieRnd.nextInt(12).toDouble,
+        if (tieRnd.nextInt(6) == 0) None else Some(tieRnd.nextInt(5).toDouble))
+    }
+    // payload tuples (t, q) in the operator's order: ascending, nulls first
+    val byPayload: Ordering[(Double, Option[Double])] = Ordering.Tuple2
+    for (trial <- 1 to 3; tol <- Seq(None, Some(2L))) {
+      val left = rows(40)
+      val right = rows(40)
+      val l = new OrderedStream(left.toDF("k", "t", "v"), "t")
+      val r = new OrderedStream(right.toDF("k", "t", "q"), "t")
+      def ok(dt: Double) = tol.forall(dt <= _)
+      // backward: MAX (t, q) at or before; forward: MIN at or after;
+      // nearest: backward vs MIN strictly after, a |dt| tie to backward
+      def expect(dir: AsofDirection) = left.map { case (k, t, v) =>
+        val same = right.filter(_._1 == k).map(p => (p._2, p._3))
+        val b = same.filter(_._1 <= t).maxOption(byPayload).filter(p => ok(t - p._1))
+        val f = same.filter(p => if (dir == Nearest) p._1 > t else p._1 >= t)
+          .minOption(byPayload).filter(p => ok(p._1 - t))
+        val (m, d) = dir match {
+          case Backward => (b, None)
+          case Forward => (f, None)
+          case Nearest => (b, f) match {
+            case (Some(x), Some(y)) if t - x._1 <= y._1 - t => (b, Some("b"))
+            case (_, Some(_)) => (f, Some("f"))
+            case _ => (b, b.map(_ => "b"))
+          }
+        }
+        (k, t, v, m.map(_._1), m.flatMap(_._2), d)
+      }.sorted
+      for (dir <- Seq(Backward, Forward, Nearest)) {
+        val out = AsofJoin(l, r, "k", dir, tolerance = tol).df
+        val got = out.collect().map { x =>
+          (x.getString(0), x.getDouble(1),
+            Option(x.get(2)).map(_.asInstanceOf[Double]),
+            Option(x.get(3)).map(_.asInstanceOf[Double]),
+            Option(x.get(4)).map(_.asInstanceOf[Double]),
+            if (dir == Nearest) Option(x.getString(5)) else None)
+        }.toSeq.sorted
+        assert(got == expect(dir), s"trial $trial, $dir, tolerance $tol")
+      }
+    }
+  }
 }
