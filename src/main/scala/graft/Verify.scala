@@ -20,6 +20,8 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // before any query touches the session state (see GraftFunctions)
+    graft.functions.GraftFunctions.register(spark)
     // Clear any previous dump FIRST: a query that throws writes nothing,
     // and a stale result dir from an earlier run would otherwise pass
     // the oracle compare and mask the failure (burned in round 8).

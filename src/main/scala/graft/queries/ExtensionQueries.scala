@@ -146,7 +146,7 @@ object ExtensionQueries {
     // oracle aggregates the source directly, so any fidelity loss in the
     // write/read path (types, values, row count) fails the gate.
     "q83_sink_roundtrip" -> { (s, d) =>
-      val tmp = "/tmp/graft_q83_roundtrip"
+      val tmp = GateQueries.jvmTempDir("graft_q83_roundtrip")
       new DataStream(lineitem(s, d).filter(col("l_quantity") >= 45))
         .writeParquet(tmp)
       s.read.parquet(tmp)
@@ -161,7 +161,7 @@ object ExtensionQueries {
     // double text round-trips exactly, so even float sums must match the
     // direct-source oracle bit-for-bit within rtol.
     "q86_csv_roundtrip" -> { (s, d) =>
-      val tmp = "/tmp/graft_q86_roundtrip"
+      val tmp = GateQueries.jvmTempDir("graft_q86_roundtrip")
       val src = orders(s, d).select(col("o_custkey"), col("o_totalprice"),
         col("o_orderdate").cast("string").as("o_orderdate"))
       new DataStream(src).writeCsv(tmp)
@@ -174,7 +174,7 @@ object ExtensionQueries {
 
     // json source roundtrip (spark json write → readJson).
     "q87_json_roundtrip" -> { (s, d) =>
-      val tmp = "/tmp/graft_q87_roundtrip"
+      val tmp = GateQueries.jvmTempDir("graft_q87_roundtrip")
       val src = supplier(s, d).select(col("s_suppkey"), col("s_nationkey"),
         col("s_acctbal"))
       src.write.mode("overwrite").json(tmp)
@@ -188,7 +188,7 @@ object ExtensionQueries {
 
     // orc sink+source roundtrip (parity-plus format).
     "q92_orc_roundtrip" -> { (s, d) =>
-      val tmp = "/tmp/graft_q92_roundtrip"
+      val tmp = GateQueries.jvmTempDir("graft_q92_roundtrip")
       new DataStream(part(s, d).select(col("p_brand"), col("p_retailprice")))
         .writeOrc(tmp)
       new graft.api.QContext(s).readOrc(tmp).df
@@ -229,8 +229,7 @@ object ExtensionQueries {
     // back through the binaryFile source; digests must match DuckDB
     // hashing the source texts (ASCII corpus: bytes = text).
     "q88_binary_files" -> { (s, d) =>
-      val dir = java.nio.file.Paths.get("/tmp/graft_q88_blobs")
-      java.nio.file.Files.createDirectories(dir)
+      val dir = java.nio.file.Paths.get(GateQueries.jvmTempDir("graft_q88_blobs"))
       // fixed file set doc_0..doc_9; Files.write truncates, so reruns
       // overwrite in place and no stale files accumulate
       documents(s, d).filter(col("doc_id") < 10)

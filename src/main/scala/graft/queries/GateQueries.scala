@@ -51,7 +51,13 @@ object GateQueries {
     * 64+ store commits for two micro-batches of real work; they run at
     * 4 here, exactly as a production job sizes state partitions to key
     * cardinality (and raises them for a 100 TB stream). The conf is
-    * set/restored around the bounded run only. */
+    * set/restored around the bounded run only.
+    *
+    * Checkpoint I/O is fork-free: the offset/commit logs, state-store
+    * deltas and checksum files go through `graft.sources.LocalFileBinding`
+    * (bound by `GraftFunctions.register`), which sets modes and probes
+    * links through `java.nio` where stock Hadoop without `libhadoop`
+    * started a `chmod` or `readlink` process per file (152 per q100 run). */
   private def runToMemory(s: SparkSession, streamDf: DataFrame,
       name: String, outputMode: String = "complete"): DataFrame = {
     val shuffleKey = "spark.sql.shuffle.partitions"
@@ -179,6 +185,19 @@ object GateQueries {
     }))
     dirs
   }
+
+  private val jvmDirs =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** One scratch directory per (JVM, `prefix`) under `java.io.tmpdir`,
+    * made on first use and swept at exit. A query that rewrites it on
+    * every run repeats the same work, and never races another JVM (a
+    * test suite beside a bench run) writing the same fixed path. */
+  private[queries] def jvmTempDir(prefix: String): String =
+    jvmDirs.computeIfAbsent(prefix, _ => {
+      val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+      sweepAtExit.add(dir)
+      dir
+    })
 
   private val sentinelDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()

@@ -641,6 +641,8 @@ object Soak {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // before the replica build touches the session state
+    graft.functions.GraftFunctions.register(spark)
     val src = "/root/testdata/sf0.1"
     f.replicas.foreach(ensureBuilt(spark, src, _))
     val dirs = src +: f.replicas.map(_.dir)

@@ -1,0 +1,69 @@
+package graft
+
+import graft.sources.MergeOnRead
+import graft.streaming.StreamingOps
+import java.nio.file.{Files, Path}
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import scala.jdk.CollectionConverters._
+
+/** The local checkpoint, state and sink I/O of a streaming gate, a sink
+  * round trip and a streaming upsert starts no Hadoop `Shell` process
+  * (`chmod`, `readlink`): recorded in-process with JFR's
+  * `jdk.ProcessStart`. Processes Spark starts itself (its `rm -rf`
+  * temp-dir cleanup) carry no `Shell` frame and do not count, and
+  * `Shell`'s one `setsid` probe per JVM, run when the class loads, is
+  * taken before the recording starts. */
+class ForkRegressionSpec extends SparkSpecBase {
+  import org.apache.spark.sql.functions.col
+
+  private val queries =
+    Seq("q100_streaming_tumbling", "q86_csv_roundtrip", "q208_stream_upsert")
+
+  /** q208 lands its table once per JVM (an earlier suite may have built
+    * it), so its upsert sink also runs here on fresh directories: a
+    * parquet write, a checkpointed stream and merge-on-read commits. */
+  private def upsertSink(dir: Path): Unit = {
+    val src = dir.resolve("src").toString
+    val rows = spark.range(40).select((col("id") % 7).as("user_id"),
+      col("id").as("ts"), col("id").cast("double").as("value"))
+    rows.write.parquet(src)
+    val stream = spark.readStream.schema(rows.schema).parquet(src)
+    val mor = dir.resolve("mor").toString
+    StreamingOps.streamUpsertToMor(stream, mor, idCol = "user_id",
+      orderCol = "ts", checkpoint = dir.resolve("ckpt").toString)
+      .awaitTermination()
+    assert(MergeOnRead.readMerged(spark, mor, "user_id").count() == 7)
+  }
+
+  private def deleteTree(root: Path): Unit = {
+    val walk = Files.walk(root)
+    try walk.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    finally walk.close()
+  }
+
+  test(s"${queries.mkString(", ")} start no Hadoop Shell process") {
+    val dir = Files.createTempDirectory("graft-forks")
+    val dump = dir.resolve("forks.jfr")
+    try {
+      assert(!org.apache.hadoop.util.Shell.WINDOWS)
+      val rec = new Recording()
+      try {
+        rec.enable("jdk.ProcessStart").withStackTrace()
+        rec.start()
+        queries.foreach(q => SparkEntry.queries(q)(spark, sf()).collect())
+        upsertSink(dir)
+        rec.stop()
+        rec.dump(dump)
+      } finally rec.close()
+      val events = RecordingFile.readAllEvents(dump).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+      val shell = events.filter(e => Option(e.getStackTrace).exists(
+        _.getFrames.asScala.exists(
+          _.getMethod.getType.getName.startsWith("org.apache.hadoop.util.Shell"))))
+      assert(shell.isEmpty, s"${shell.size} of ${events.size} process starts " +
+        "came from Hadoop's Shell, e.g. " +
+        shell.take(3).map(_.getString("command")).mkString("; "))
+    } finally deleteTree(dir)
+  }
+}
