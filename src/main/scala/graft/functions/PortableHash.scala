@@ -50,15 +50,20 @@ case class PortableHash(child: Expression) extends UnaryExpression {
   override def prettyName: String = "portable_hash"
 }
 
-/** Session-level registration for graft's native functions and its
-  * fork-free `file:` binding. Idempotent; call once per SparkSession,
-  * before anything touches its session state (QContext, Tables.t, Verify,
-  * Bench and the specs all do). */
+/** Session-level registration for graft's native functions, its
+  * fork-free `file:` binding and the [[graft.plans.SmallInputCoalesce]]
+  * optimizer rule (one task, no exchange, for grouped aggregates,
+  * partitioned windows and global sorts that read less than AQE's
+  * one-partition floor).
+  * Idempotent; call once per SparkSession, before anything touches its
+  * session state (QContext, Tables.t, Verify, Bench and the specs all
+  * do). */
 object GraftFunctions {
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     // first: the session state copies this conf, and the first `file:`
     // FileSystem built from it stays in Hadoop's JVM-wide cache
     graft.sources.LocalFileBinding.install(spark.sparkContext.hadoopConfiguration)
+    graft.plans.SmallInputCoalesce.setup(spark)
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "portable_hash", (children: Seq[Expression]) => PortableHash(children.head),
       "scala_udf")

@@ -31,7 +31,10 @@ object PlanShape {
   * static physical plan for the queries PlanHygieneSpec pins, so the
   * expected values in the spec are recorded numbers, not guesses.
   * Run under the spec's exact session shape (local[4], 4 shuffle
-  * partitions) — plan choice is config-sensitive. */
+  * partitions) — plan choice is config-sensitive. The pins are
+  * at-scale shapes, so AQE's one-partition floor is one byte here, as
+  * around the spec's static-plan build: `graft.plans.SmallInputCoalesce`
+  * would otherwise drop every fixture-sized exchange. */
 object PlanCounts {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()
@@ -40,6 +43,7 @@ object PlanCounts {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names =

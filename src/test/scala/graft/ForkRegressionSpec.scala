@@ -10,15 +10,23 @@ import scala.jdk.CollectionConverters._
 /** The local checkpoint, state and sink I/O of a streaming gate, a sink
   * round trip and a streaming upsert starts no Hadoop `Shell` process
   * (`chmod`, `readlink`): recorded in-process with JFR's
-  * `jdk.ProcessStart`. Processes Spark starts itself (its `rm -rf`
-  * temp-dir cleanup) carry no `Shell` frame and do not count, and
-  * `Shell`'s one `setsid` probe per JVM, run when the class loads, is
-  * taken before the recording starts. */
+  * `jdk.ProcessStart` after one warm-up round. The only processes left
+  * are Spark's own, in two command shapes: `rm -rf
+  * <tmp>/artifacts-<uuid>/<uuid>`, the `ArtifactManager` cleanup of each
+  * streaming query's cloned session (`JavaUtils.deleteRecursively`), and
+  * `getconf PAGESIZE`, run once per JVM by `ProcfsMetricsGetter` on the
+  * heartbeat thread. `Shell`'s one `setsid` probe per JVM, run when the
+  * class loads, is taken in the warm-up. */
 class ForkRegressionSpec extends SparkSpecBase {
   import org.apache.spark.sql.functions.col
 
   private val queries =
     Seq("q100_streaming_tumbling", "q86_csv_roundtrip", "q208_stream_upsert")
+
+  private val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+  /** The command shapes Spark itself starts (see the class doc). */
+  private val sparkOwn = Seq(s"rm -rf \\S+/artifacts-$uuid/$uuid", "getconf PAGESIZE")
+    .map(_.r)
 
   /** q208 lands its table once per JVM (an earlier suite may have built
     * it), so its upsert sink also runs here on fresh directories: a
@@ -45,14 +53,18 @@ class ForkRegressionSpec extends SparkSpecBase {
   test(s"${queries.mkString(", ")} start no Hadoop Shell process") {
     val dir = Files.createTempDirectory("graft-forks")
     val dump = dir.resolve("forks.jfr")
+    def round(sink: Path): Unit = {
+      queries.foreach(q => SparkEntry.queries(q)(spark, sf()).collect())
+      upsertSink(Files.createDirectory(sink))
+    }
     try {
       assert(!org.apache.hadoop.util.Shell.WINDOWS)
+      round(dir.resolve("warm"))
       val rec = new Recording()
       try {
         rec.enable("jdk.ProcessStart").withStackTrace()
         rec.start()
-        queries.foreach(q => SparkEntry.queries(q)(spark, sf()).collect())
-        upsertSink(dir)
+        round(dir.resolve("timed"))
         rec.stop()
         rec.dump(dump)
       } finally rec.close()
@@ -64,6 +76,10 @@ class ForkRegressionSpec extends SparkSpecBase {
       assert(shell.isEmpty, s"${shell.size} of ${events.size} process starts " +
         "came from Hadoop's Shell, e.g. " +
         shell.take(3).map(_.getString("command")).mkString("; "))
+      val other = events.map(_.getString("command"))
+        .filterNot(c => sparkOwn.exists(_.matches(c)))
+      assert(other.isEmpty, s"${other.size} of ${events.size} process starts " +
+        s"are not Spark's own: ${other.take(3).mkString("; ")}")
     } finally deleteTree(dir)
   }
 }

@@ -2,12 +2,9 @@ package graft
 
 import graft.queries.Tables
 import graft.sources.{ParquetSchemas, Snapshots}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{BinaryType, StringType}
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** Pins [[ParquetSchemas]]: a repeated read of an unchanged file set
   * starts no schema-inference job, and a hit never returns a schema a
@@ -16,40 +13,6 @@ import java.util.concurrent.atomic.AtomicInteger
   * merged reads. */
 class ParquetSchemaCacheSpec extends SparkSpecBase {
   import spark.implicits._
-
-  /** Spark jobs started by `body` on this thread. Jobs carry the
-    * thread's job group; a sentinel job in the same group, started
-    * after `body`, marks the point up to which every earlier job-start
-    * event has been delivered (the listener bus is ordered). */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"parquet-schema-cache-${java.util.UUID.randomUUID}"
-    val sentinel = "sentinel"
-    val started = new AtomicInteger(0)
-    val sentinelSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
-          .foreach { p =>
-            if (p.getProperty("spark.job.description") == sentinel)
-              sentinelSeen.countDown()
-            else started.incrementAndGet()
-          }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "")
-      body
-      sc.setJobDescription(sentinel)
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinelSeen.await(60, TimeUnit.SECONDS), "sentinel job not seen")
-      started.get
-    } finally {
-      sc.clearJobGroup()
-      sc.setJobDescription(null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted

@@ -94,14 +94,27 @@ class PlanHygieneSpec extends SparkSpecBase {
     // with the 10-row literal bin range to materialize unused cells
     "q236_calibration_by_group")
 
+  /** `body` with AQE's one-partition floor at one byte. The pins here
+    * guard exchanges that only hurt at scale, where
+    * [[graft.plans.SmallInputCoalesce]] never fires; at the fixture's
+    * size it would drop them, so the static plans are built, as
+    * `graft.tools.PlanCounts` records them, with the floor out of reach. */
+  private def atScale[T](body: => T): T =
+    withConf("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")(body)
+
   /** Built once and shared by all tests — several catalog queries do
     * eager work (sink writes, collects) at construction time, so planning
     * the whole catalog twice would double that cost. The DataFrames are
     * kept (not just plan strings) so the broadcast-hint audit can walk
-    * the optimized logical plan of the same single construction. */
+    * the optimized logical plan of the same single construction. Each
+    * plan is fixed inside [[atScale]] (a QueryExecution keeps it). */
   private lazy val built: Seq[(String, org.apache.spark.sql.DataFrame)] =
-    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> fn(spark, sf())
+    atScale {
+      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+        val df = fn(spark, sf())
+        df.queryExecution.executedPlan
+        name -> df
+      }
     }
 
   private lazy val plans: Seq[(String, String)] =
@@ -521,12 +534,14 @@ class PlanHygieneSpec extends SparkSpecBase {
     * eval metric scans its input twice (caught live during r14: the
     * optimizer rewrote the count to count(1), pruned the branch into a
     * different subtree, and doubled the scans). */
-  test("cardinality-guard branches reuse exchanges — inputs scanned once") {
-    val byName = built.toMap
+  private val guardScans = Map("q185_auc_exact" -> 1, "q224_ks_drift" -> 2,
+    "q235_quantized_ks" -> 2)
+
+  /** The guarded queries among `byName` that scan their input more times
+    * than pinned or share no exchange. */
+  private def lostReuse(byName: String => org.apache.spark.sql.DataFrame): Seq[String] = {
     val scanPat = "FileScan parquet".r
-    val expected = Map("q185_auc_exact" -> 1, "q224_ks_drift" -> 2,
-      "q235_quantized_ks" -> 2)
-    val bad = expected.toSeq.sortBy(_._1).flatMap { case (q, n) =>
+    guardScans.toSeq.sortBy(_._1).flatMap { case (q, n) =>
       val df = byName(q)
       // AQE materializes reuse only at runtime: execute, then read the
       // FINAL plan section (toString appends the initial plan after it)
@@ -538,6 +553,18 @@ class PlanHygieneSpec extends SparkSpecBase {
       else Some(s"$q: $scans scans (want $n), reused=" +
         plan.contains("ReusedExchange"))
     }
+  }
+
+  test("cardinality-guard branches reuse exchanges — inputs scanned once") {
+    val bad = lostReuse(built.toMap)
+    assert(bad.isEmpty, s"guard branch lost exchange reuse:\n" +
+      bad.mkString("\n"))
+  }
+
+  test("cardinality-guard branches reuse exchanges at fixture scale too") {
+    // under the default conf graft.plans.SmallInputCoalesce sees the
+    // guard's twice-read input and leaves both of its exchanges in place
+    val bad = lostReuse(q => SparkEntry.queries(q)(spark, sf()))
     assert(bad.isEmpty, s"guard branch lost exchange reuse:\n" +
       bad.mkString("\n"))
   }
@@ -568,6 +595,37 @@ class PlanHygieneSpec extends SparkSpecBase {
     }
     assert(diffs.isEmpty, "plan shape drift (run graft.tools.PlanCounts " +
       s"and update pins only if intentional):\n${diffs.mkString("\n")}")
+  }
+
+  /** The fixture-scale counterpart of the at-scale pins: the ten queries
+    * `perfbench` times, at its scales (interactive sf0.01, pipelines
+    * sf0.001) and under the default conf. Every grouped aggregate,
+    * partitioned window and global sort over an input under AQE's
+    * one-partition floor runs in one task
+    * ([[graft.plans.SmallInputCoalesce]]). Only q3's aggregate over a
+    * join (sized as a product, far above the floor), q190's windows over
+    * exploded postings (a `Generate` is not sized) and q157's global
+    * stats aggregate (already one reducer) keep their shuffles. */
+  test("the benched queries plan no exchange AQE would merge at fixture scale") {
+    val pins = Seq(
+      ("q3_join_inner", "sf0.01") -> ((1, 2)),
+      ("q2c_grouping_sets", "sf0.01") -> ((0, 0)),
+      ("q18_window_rank", "sf0.01") -> ((0, 0)),
+      ("q30_string_funcs", "sf0.01") -> ((0, 0)),
+      ("q90_fromseq", "sf0.01") -> ((0, 0)),
+      ("q190_setsim_join", "sf0.001") -> ((5, 3)),
+      ("q157_bm25", "sf0.001") -> ((1, 1)),
+      ("q100_streaming_tumbling", "sf0.001") -> ((0, 0)),
+      ("q208_stream_upsert", "sf0.001") -> ((0, 0)),
+      ("q86_csv_roundtrip", "sf0.001") -> ((0, 0)))
+    val diffs = pins.flatMap { case ((name, dir), exp) =>
+      val plan = SparkEntry.queries(name)(spark, sf(dir))
+        .queryExecution.executedPlan.toString
+      val got = graft.tools.PlanShape.counts(plan)
+      if (got == exp) None else Some(s"$name@$dir: got (shuffle, broadcast)=" +
+        s"$got, pinned $exp")
+    }
+    assert(diffs.isEmpty, diffs.mkString("\n"))
   }
 
   /** Streaming-gate shape pins (round-8 verdict item 6): the catalog
