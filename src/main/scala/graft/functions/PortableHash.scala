@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -55,14 +56,44 @@ case class PortableHash(child: Expression) extends UnaryExpression {
   * optimizer rule (one task, no exchange, for grouped aggregates,
   * partitioned windows and global sorts that read less than AQE's
   * one-partition floor).
+  *
+  * It also keeps Spark's JVM-wide cache of generated classes
+  * (`CodeGenerator.cache`, keyed by class loader and source) warm across
+  * repeated queries, through two existing Spark confs. A value the
+  * caller set for either one wins.
+  *  - `spark.sql.artifact.isolation.enabled` is set to `false` on the
+  *    session. With it on, the executor gives every session UUID its own
+  *    class loader, and `writeStream.start()` clones the session, so
+  *    each run of a streaming query compiled its task-side classes again
+  *    under a new loader (14 per q100 run), and those dead-loader
+  *    entries evicted live ones. Graft adds no session artifacts, and
+  *    the clones inherit the conf, so their tasks share the executor's
+  *    default loader.
+  *  - `spark.sql.codegen.cache.maxEntries` sizes the cache at 1000
+  *    entries instead of 100: the five perfbench `pipelines` queries
+  *    alone need about 120 classes, so with 100 every interleaved pass
+  *    recompiled 56-64 of them. It is a static conf that `CodeGenerator`
+  *    reads once, when it loads, so `register` loads it under a clone of
+  *    the session conf that holds the size; the session's own conf does
+  *    not change. First touch wins: if anything in the JVM generated code
+  *    before the first `register`, the cache keeps the size it was built
+  *    with.
+  *
   * Idempotent; call once per SparkSession, before anything touches its
   * session state (QContext, Tables.t, Verify, Bench and the specs all
   * do). */
 object GraftFunctions {
+  /** Generated classes Spark's cache holds when the caller left its size
+    * unset. The five perfbench `pipelines` queries need about 120 and the
+    * whole catalog several thousand; at about 8 KB of class metadata per
+    * entry, 1000 bounds the cache near 8 MB. */
+  private val CodegenCacheEntries = 1000
+
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     // first: the session state copies this conf, and the first `file:`
     // FileSystem built from it stays in Hadoop's JVM-wide cache
     graft.sources.LocalFileBinding.install(spark.sparkContext.hadoopConfiguration)
+    shareGeneratedClasses(spark)
     graft.plans.SmallInputCoalesce.setup(spark)
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "portable_hash", (children: Seq[Expression]) => PortableHash(children.head),
@@ -160,6 +191,22 @@ object GraftFunctions {
         org.apache.spark.sql.catalyst.expressions
           .BloomFilterMightContain(children.head, children(1)),
       "scala_udf")
+  }
+
+  /** The two code-generation settings of the object doc, each only where
+    * the caller left it unset. */
+  private def shareGeneratedClasses(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val conf = spark.sessionState.conf
+    val isolation = SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key
+    if (!conf.contains(isolation)) spark.conf.set(isolation, "false")
+    val maxEntries = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+    if (!conf.contains(maxEntries)) {
+      val sized = conf.clone()
+      sized.setConfString(maxEntries, CodegenCacheEntries.toString)
+      // any member access initializes `CodeGenerator`, and so builds its
+      // cache, unless that already happened
+      SQLConf.withExistingConf(sized)(CodeGenerator.compileTime)
+    }
   }
 }
 

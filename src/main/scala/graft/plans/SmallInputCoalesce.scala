@@ -49,17 +49,21 @@ object SmallInputCoalesce extends Rule[LogicalPlan] {
     if (!conf.adaptiveExecutionEnabled || !conf.coalesceShufflePartitionsEnabled ||
         plan.isStreaming) return plan
     val floor = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
-    val shared = plan.collect { case p if distributes(p) => p.children.head.canonicalized }
-      .groupBy(identity).collect { case (in, n) if n.size > 1 => in }.toSet
+    // the sizes first: most inputs fail them, and they read cached
+    // statistics, where the `Generate` walk visits the whole input and
+    // `shared` canonicalizes every distributing node's input
     def small(in: LogicalPlan): Boolean =
-      !in.exists(_.isInstanceOf[Generate]) && in.stats.sizeInBytes <= floor &&
-        in.collectLeaves().map(_.stats.sizeInBytes).sum <= floor
+      in.stats.sizeInBytes <= floor &&
+        in.collectLeaves().map(_.stats.sizeInBytes).sum <= floor &&
+        !in.exists(_.isInstanceOf[Generate])
+    lazy val shared = plan.collect { case p if distributes(p) => p.children.head.canonicalized }
+      .groupBy(identity).collect { case (in, n) if n.size > 1 => in }.toSet
     // bottom-up: once the lowest node reads one partition, every node
     // above it sees that partition through `onePartition`
     plan.transformUp {
       case p if distributes(p) =>
         val in = p.children.head
-        if (onePartition(in) || shared(in.canonicalized) || !small(in)) p
+        if (onePartition(in) || !small(in) || shared(in.canonicalized)) p
         else p.withNewChildren(Seq(Repartition(1, shuffle = false, in)))
     }
   }

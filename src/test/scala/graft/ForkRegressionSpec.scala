@@ -12,11 +12,15 @@ import scala.jdk.CollectionConverters._
   * (`chmod`, `readlink`): recorded in-process with JFR's
   * `jdk.ProcessStart` after one warm-up round. The only processes left
   * are Spark's own, in two command shapes: `rm -rf
-  * <tmp>/artifacts-<uuid>/<uuid>`, the `ArtifactManager` cleanup of each
-  * streaming query's cloned session (`JavaUtils.deleteRecursively`), and
-  * `getconf PAGESIZE`, run once per JVM by `ProcfsMetricsGetter` on the
-  * heartbeat thread. `Shell`'s one `setsid` probe per JVM, run when the
-  * class loads, is taken in the warm-up. */
+  * <tmp>/artifacts-<uuid>/<uuid>`, run by the `Cleaner` of a
+  * garbage-collected session's `ArtifactManager`
+  * (`cleanUpGlobalResources`, `JavaUtils.deleteRecursively`) whether or
+  * not artifact isolation is on, so how many land in the recording
+  * depends on when the collector frees a streaming query's cloned
+  * session; and `getconf PAGESIZE`, run once per JVM by
+  * `ProcfsMetricsGetter` on the heartbeat thread. `Shell`'s one
+  * `setsid` probe per JVM, run when the class loads, is taken in the
+  * warm-up. */
 class ForkRegressionSpec extends SparkSpecBase {
   import org.apache.spark.sql.functions.col
 
