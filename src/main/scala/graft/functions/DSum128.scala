@@ -1,14 +1,15 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{
   Add, AttributeReference, BinaryExpression, BitwiseAnd, BitwiseNot,
-  BitwiseOr, EvalMode, Expression, If, IsNotNull, IsNull, Literal, Or,
+  BitwiseOr, Cast, EvalMode, Expression, If, IsNotNull, IsNull, Literal, Or,
   ShiftRight, ShiftRightUnsigned}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.types.{BooleanType, DataType, Decimal,
-  DecimalType, LongType}
+import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, Decimal,
+  DecimalType, IntegerType, LongType, ShortType}
 
 /** Runtime for [[Int128ToDecimal]]: exact (hi, lo) two's-complement
   * int128 → Decimal(38,0). Called once per GROUP (evaluate), so the
@@ -61,11 +62,17 @@ case class Int128ToDecimal(left: Expression, right: Expression)
   *
   * Adds use `EvalMode.LEGACY` explicitly: lane arithmetic REQUIRES
   * two's-complement wraparound, which ANSI mode (Spark 4 default) would
-  * turn into an overflow error. */
+  * turn into an overflow error. Narrower integral inputs are widened to
+  * `BIGINT`; any other input type fails analysis. */
 case class DSum128(child: Expression)
     extends DeclarativeAggregate with UnaryLike[Expression] {
   override def dataType: DataType = DecimalType(38, 0)
   override def nullable: Boolean = true
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ByteType | ShortType | IntegerType | LongType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"dsum128 requires an integral argument, got $other")
+  }
 
   private lazy val hi = AttributeReference("hi", LongType, nullable = false)()
   private lazy val lo = AttributeReference("lo", LongType, nullable = false)()
@@ -92,7 +99,7 @@ case class DSum128(child: Expression)
   }
 
   override lazy val updateExpressions: Seq[Expression] = {
-    val x = child
+    val x = if (child.dataType == LongType) child else Cast(child, LongType)
     val xHi = ShiftRight(x, Literal(63)) // sign-extend into the high lane
     val (nHi, nLo) = add128(hi, lo, xHi, x)
     Seq(

@@ -69,18 +69,13 @@ case class EdFreqGate(left: Expression, right: Expression, cap: Int)
 object EdFreqGate {
   /** The SQL builder: `ed_freq_gate(a, b, cap)` with `cap` a non-null,
     * foldable integral value in [0, Int.MaxValue] (Int and Long literals
-    * both accepted). Any other argument list raises a typed
-    * `AnalysisException` at analysis time. */
-  def fromArgs(children: Seq[Expression]): EdFreqGate = {
+    * both accepted). Any other cap raises a typed `AnalysisException` at
+    * analysis time; [[GraftFunction]] checks the argument count. */
+  def fromArgs(left: Expression, right: Expression, capExpr: Expression): EdFreqGate = {
     def fail(errorClass: String, params: (String, String)*): Nothing =
       throw new AnalysisException(errorClass, params.toMap)
-    if (children.length != 3)
-      fail("WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        "functionName" -> "`ed_freq_gate`", "expectedNum" -> "3",
-        "actualNum" -> children.length.toString,
-        "docroot" -> org.apache.spark.SPARK_DOC_ROOT)
-    val capExpr = children(2)
-    val sqlExpr = "\"ed_freq_gate(" + children.map(_.sql).mkString(", ") + ")\""
+    val sqlExpr =
+      "\"ed_freq_gate(" + Seq(left, right, capExpr).map(_.sql).mkString(", ") + ")\""
     val intOrBigint = "(\"INT\" or \"BIGINT\")"
     if (!capExpr.foldable)
       fail("DATATYPE_MISMATCH.NON_FOLDABLE_INPUT", "sqlExpr" -> sqlExpr,
@@ -104,6 +99,6 @@ object EdFreqGate {
       fail("DATATYPE_MISMATCH.VALUE_OUT_OF_RANGE", "sqlExpr" -> sqlExpr,
         "exprName" -> "`cap`", "valueRange" -> s"[0, ${Int.MaxValue}]",
         "currentValue" -> cap.toString)
-    EdFreqGate(children(0), children(1), cap.toInt)
+    EdFreqGate(left, right, cap.toInt)
   }
 }

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
-import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled loop behind [[PortableHash]] — called from generated code
@@ -36,12 +34,8 @@ object PortableHashImpl {
   * higher-order functions are interpreted — a codegen'd scalar turns the
   * per-character expression-tree walk into one compiled loop.
   * Registered as SQL function `portable_hash` by [[GraftFunctions]]. */
-case class PortableHash(child: Expression) extends UnaryExpression {
+case class PortableHash(child: Expression) extends StringArgument {
   override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"portable_hash requires a string argument, got ${child.dataType}")
   override def nullSafeEval(input: Any): Any =
     PortableHashImpl.hash(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -49,287 +43,4 @@ case class PortableHash(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(newChild: Expression): PortableHash =
     copy(child = newChild)
   override def prettyName: String = "portable_hash"
-}
-
-/** Session-level registration for graft's native functions, its
-  * fork-free `file:` binding and the [[graft.plans.SmallInputCoalesce]]
-  * optimizer rule (one task, no exchange, for grouped aggregates,
-  * partitioned windows and global sorts that read less than AQE's
-  * one-partition floor).
-  *
-  * It also keeps Spark's JVM-wide cache of generated classes
-  * (`CodeGenerator.cache`, keyed by class loader and source) warm across
-  * repeated queries, through two existing Spark confs. A value the
-  * caller set for either one wins.
-  *  - `spark.sql.artifact.isolation.enabled` is set to `false` on the
-  *    session. With it on, the executor gives every session UUID its own
-  *    class loader, and `writeStream.start()` clones the session, so
-  *    each run of a streaming query compiled its task-side classes again
-  *    under a new loader (14 per q100 run), and those dead-loader
-  *    entries evicted live ones. Graft adds no session artifacts, and
-  *    the clones inherit the conf, so their tasks share the executor's
-  *    default loader.
-  *  - `spark.sql.codegen.cache.maxEntries` sizes the cache at 1000
-  *    entries instead of 100: the five perfbench `pipelines` queries
-  *    alone need about 120 classes, so with 100 every interleaved pass
-  *    recompiled 56-64 of them. It is a static conf that `CodeGenerator`
-  *    reads once, when it loads, so `register` loads it under a clone of
-  *    the session conf that holds the size; the session's own conf does
-  *    not change. First touch wins: if anything in the JVM generated code
-  *    before the first `register`, the cache keeps the size it was built
-  *    with.
-  *
-  * Idempotent; call once per SparkSession, before anything touches its
-  * session state (QContext, Tables.t, Verify, Bench and the specs all
-  * do). */
-object GraftFunctions {
-  /** Generated classes Spark's cache holds when the caller left its size
-    * unset. The five perfbench `pipelines` queries need about 120 and the
-    * whole catalog several thousand; at about 8 KB of class metadata per
-    * entry, 1000 bounds the cache near 8 MB. */
-  private val CodegenCacheEntries = 1000
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    // first: the session state copies this conf, and the first `file:`
-    // FileSystem built from it stays in Hadoop's JVM-wide cache
-    graft.sources.LocalFileBinding.install(spark.sparkContext.hadoopConfiguration)
-    shareGeneratedClasses(spark)
-    graft.plans.SmallInputCoalesce.setup(spark)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "portable_hash", (children: Seq[Expression]) => PortableHash(children.head),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      (children: Seq[Expression]) => DotProduct(children.head, children(1)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_count",
-      (children: Seq[Expression]) => BpeCount(children.head, children(1)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_merge_batch",
-      (children: Seq[Expression]) => BpeMergeBatch(children.head, children(1)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dsum128",
-      (children: Seq[Expression]) => DSum128(children.head),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "text_metrics",
-      (children: Seq[Expression]) => TextMetrics(children.head,
-        graft.text.TextOps.langStopwords.map(_._2)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes",
-      (children: Seq[Expression]) => ShingleHashes(children.head, children(1)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_hashes",
-      (children: Seq[Expression]) => NgramHashesMulti(children.head, children(1)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rouge_overlap",
-      (children: Seq[Expression]) =>
-        RougeOverlap(children.head, children(1), children(2)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_from_hashes",
-      (children: Seq[Expression]) => MinhashFromHashes(children.head, children(1)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_hash",
-      (children: Seq[Expression]) => SimhashHash(children.head, children(1)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dup_ngram_fracs",
-      (children: Seq[Expression]) => DupNgramFracs(children.head, children(1)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fingerprint_hash",
-      (children: Seq[Expression]) => FingerprintHash(children.head),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tokens_of",
-      (children: Seq[Expression]) => TokensOf(children.head),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_windows",
-      (children: Seq[Expression]) =>
-        TokenWindows(children.head, children(1), children(2)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize",
-      (children: Seq[Expression]) => NfcNormalize(children.head),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "normalize_doc_text",
-      (children: Seq[Expression]) => NormalizeDocText(children.head),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ed_freq_gate",
-      (children: Seq[Expression]) => EdFreqGate.fromArgs(children),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fingerprints",
-      (children: Seq[Expression]) =>
-        WinnowFingerprints(children.head, children(1), children(2)),
-      "scala_udf")
-    // Spark ships a distributed bloom-filter build/probe pair for its
-    // runtime row-group filters but exposes no SQL surface for them;
-    // graft registers the internal expressions directly (the aggregate
-    // merges per-partition sketches with a bitwise OR, so the built
-    // filter is partition-order independent).
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg",
-      (children: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(children.head, children(1), children(2)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      (children: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain(children.head, children(1)),
-      "scala_udf")
-  }
-
-  /** The two code-generation settings of the object doc, each only where
-    * the caller left it unset. */
-  private def shareGeneratedClasses(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val conf = spark.sessionState.conf
-    val isolation = SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key
-    if (!conf.contains(isolation)) spark.conf.set(isolation, "false")
-    val maxEntries = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
-    if (!conf.contains(maxEntries)) {
-      val sized = conf.clone()
-      sized.setConfString(maxEntries, CodegenCacheEntries.toString)
-      // any member access initializes `CodeGenerator`, and so builds its
-      // cache, unless that already happened
-      SQLConf.withExistingConf(sized)(CodeGenerator.compileTime)
-    }
-  }
-}
-
-/** `SparkSessionExtensions` hook — the deployment-idiomatic registration:
-  * `--conf spark.sql.extensions=graft.functions.GraftExtensions` makes
-  * `portable_hash` available in every session without code changes
-  * (SURVEY §7.3 custom-Catalyst tier). */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("portable_hash"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[PortableHash].getCanonicalName, "portable_hash"),
-      (children: Seq[Expression]) => PortableHash(children.head)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[DotProduct].getCanonicalName, "graft_dot"),
-      (children: Seq[Expression]) => DotProduct(children.head, children(1))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("bpe_count"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[BpeCount].getCanonicalName, "bpe_count"),
-      (children: Seq[Expression]) => BpeCount(children.head, children(1))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("bpe_merge_batch"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[BpeMergeBatch].getCanonicalName, "bpe_merge_batch"),
-      (children: Seq[Expression]) => BpeMergeBatch(children.head, children(1))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("dsum128"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[DSum128].getCanonicalName, "dsum128"),
-      (children: Seq[Expression]) => DSum128(children.head)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("text_metrics"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[TextMetrics].getCanonicalName, "text_metrics"),
-      (children: Seq[Expression]) => TextMetrics(children.head,
-        graft.text.TextOps.langStopwords.map(_._2))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("shingle_hashes"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[ShingleHashes].getCanonicalName, "shingle_hashes"),
-      (children: Seq[Expression]) => ShingleHashes(children.head, children(1))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("ngram_hashes"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[NgramHashesMulti].getCanonicalName, "ngram_hashes"),
-      (children: Seq[Expression]) => NgramHashesMulti(children.head, children(1))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("rouge_overlap"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[RougeOverlap].getCanonicalName, "rouge_overlap"),
-      (children: Seq[Expression]) =>
-        RougeOverlap(children.head, children(1), children(2))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_from_hashes"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[MinhashFromHashes].getCanonicalName, "minhash_from_hashes"),
-      (children: Seq[Expression]) => MinhashFromHashes(children.head, children(1))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("simhash_hash"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[SimhashHash].getCanonicalName, "simhash_hash"),
-      (children: Seq[Expression]) => SimhashHash(children.head, children(1))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("dup_ngram_fracs"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[DupNgramFracs].getCanonicalName, "dup_ngram_fracs"),
-      (children: Seq[Expression]) => DupNgramFracs(children.head, children(1))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("fingerprint_hash"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[FingerprintHash].getCanonicalName, "fingerprint_hash"),
-      (children: Seq[Expression]) => FingerprintHash(children.head)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("tokens_of"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[TokensOf].getCanonicalName, "tokens_of"),
-      (children: Seq[Expression]) => TokensOf(children.head)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("token_windows"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[TokenWindows].getCanonicalName, "token_windows"),
-      (children: Seq[Expression]) =>
-        TokenWindows(children.head, children(1), children(2))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("nfc_normalize"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[NfcNormalize].getCanonicalName, "nfc_normalize"),
-      (children: Seq[Expression]) => NfcNormalize(children.head)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("normalize_doc_text"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[NormalizeDocText].getCanonicalName, "normalize_doc_text"),
-      (children: Seq[Expression]) => NormalizeDocText(children.head)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("ed_freq_gate"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[EdFreqGate].getCanonicalName, "ed_freq_gate"),
-      (children: Seq[Expression]) => EdFreqGate.fromArgs(children)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("winnow_fingerprints"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[WinnowFingerprints].getCanonicalName, "winnow_fingerprints"),
-      (children: Seq[Expression]) =>
-        WinnowFingerprints(children.head, children(1), children(2))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_agg"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate].getCanonicalName, "bloom_agg"),
-      (children: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(children.head, children(1), children(2))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_might_contain"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain].getCanonicalName, "bloom_might_contain"),
-      (children: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain(children.head, children(1))))
-  }
 }

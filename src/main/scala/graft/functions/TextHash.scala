@@ -524,13 +524,8 @@ case class RougeOverlap(first: Expression, second: Expression,
 }
 
 /** `tokens_of(text)` → array<string> lower-cased whitespace tokens. */
-case class TokensOf(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+case class TokensOf(child: Expression) extends StringArgument {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"tokens_of requires a string argument, got ${child.dataType}")
   override def nullSafeEval(t: Any): Any =
     TextHashImpl.tokensOf(t.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -541,13 +536,8 @@ case class TokensOf(child: Expression)
 }
 
 /** `fingerprint_hash(text)` → bigint rolling fingerprint. */
-case class FingerprintHash(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+case class FingerprintHash(child: Expression) extends StringArgument {
   override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"fingerprint_hash requires a string argument, got ${child.dataType}")
   override def nullSafeEval(t: Any): Any =
     TextHashImpl.fingerprint(t.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

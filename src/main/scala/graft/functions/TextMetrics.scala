@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -85,7 +84,7 @@ object TextMetricsImpl {
   * compiled static call inside whole-stage codegen — the same pattern
   * as [[PortableHash]]/[[BpeCount]]. */
 case class TextMetrics(child: Expression, stopLists: Seq[Seq[String]])
-    extends UnaryExpression {
+    extends StringArgument {
   override def dataType: DataType = StructType(Seq(
     StructField("n_chars", IntegerType, nullable = false),
     StructField("n_alpha", IntegerType, nullable = false),
@@ -95,11 +94,6 @@ case class TextMetrics(child: Expression, stopLists: Seq[Seq[String]])
     StructField("hits", ArrayType(IntegerType, containsNull = false),
       nullable = false),
     StructField("n_stop", IntegerType, nullable = false)))
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"text_metrics requires a string argument, got ${child.dataType}")
 
   @transient private lazy val stop: java.util.HashMap[String, Integer] = {
     val m = new java.util.HashMap[String, Integer]()

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -77,12 +76,8 @@ object NormalizeDocTextImpl {
 /** `normalize_doc_text(text)` → dedup-normalized string (lowercase,
   * non-alphanumerics to single spaces, trimmed) as a codegen'd
   * expression — see [[NormalizeDocTextImpl]]. */
-case class NormalizeDocText(child: Expression) extends UnaryExpression {
+case class NormalizeDocText(child: Expression) extends StringArgument {
   override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"normalize_doc_text requires a string argument, got ${child.dataType}")
   override def nullSafeEval(input: Any): Any =
     NormalizeDocTextImpl.normalize(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -93,12 +88,8 @@ case class NormalizeDocText(child: Expression) extends UnaryExpression {
   override def prettyName: String = "normalize_doc_text"
 }
 
-case class NfcNormalize(child: Expression) extends UnaryExpression {
+case class NfcNormalize(child: Expression) extends StringArgument {
   override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"nfc_normalize requires a string argument, got ${child.dataType}")
   override def nullSafeEval(input: Any): Any =
     TextNormImpl.nfc(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

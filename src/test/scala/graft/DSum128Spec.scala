@@ -2,12 +2,9 @@ package graft
 
 import graft.functions.Det
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** [[graft.functions.DSum128]] — the int128 engine behind Det.dsum. */
-class DSum128Spec extends AnyFunSuite {
-  private def spark = SharedSpark.spark
-
+class DSum128Spec extends SparkSpecBase {
   private def raw(xs: Seq[java.lang.Long], parts: Int = 4) = {
     val s = spark
     import s.implicits._
@@ -40,6 +37,28 @@ class DSum128Spec extends AnyFunSuite {
     assert(raw(Seq(java.lang.Long.valueOf(5L), null, java.lang.Long.valueOf(7L)))
       .getDecimal(0).longValueExact() == 12L)
     assert(raw(Seq(null, null)).isNullAt(0))
+  }
+
+  test("dsum128 sums every integral width exactly") {
+    assert(spark.sql("SELECT dsum128(x) FROM VALUES (1), (2) AS t(x)")
+      .head().getDecimal(0).longValueExact() == 3L)
+    Seq("TINYINT", "SMALLINT", "INT", "BIGINT").foreach { t =>
+      val r = spark.sql(s"SELECT dsum128(CAST(x AS $t)) FROM VALUES (-128), (127), (-1) AS v(x)")
+      assert(r.head().getDecimal(0).longValueExact() == -2L, t)
+    }
+    // past the input type's own range: the sum is widened, not wrapped
+    assert(spark.sql("SELECT dsum128(x) FROM VALUES (2147483647), (2147483647) AS t(x)")
+      .head().getDecimal(0).longValueExact() == 4294967294L)
+  }
+
+  test("dsum128 over a non-integral column fails analysis and starts no job") {
+    Seq("STRING", "DOUBLE", "DECIMAL(10,2)", "BOOLEAN").foreach { t =>
+      val jobs = jobsDuring {
+        intercept[org.apache.spark.sql.AnalysisException](spark.sql(
+          s"SELECT dsum128(CAST(x AS $t)) FROM VALUES (1), (2) AS v(x)").collect())
+      }
+      assert(jobs == 0, t)
+    }
   }
 
   test("Det.dsum equals the decimal(25,0) reference form bit-for-bit") {
