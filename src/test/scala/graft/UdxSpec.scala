@@ -1,7 +1,9 @@
 package graft
 
 import graft.api.QContext
+import graft.functions.GraftExtensions
 import graft.udx.Aggregators.WelfordMeanVar
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Extension points: custom Aggregator + REST source. */
@@ -26,6 +28,25 @@ class UdxSpec extends SparkSpecBase {
     Seq(1.0, 2.0, 3.0).toDF("x").createOrReplaceTempView("t_mv")
     val r = s.sql("SELECT meanvar(x) AS mv FROM t_mv").select("mv.mean", "mv.variance").head()
     assert(r.getDouble(0) == 2.0 && math.abs(r.getDouble(1) - 2.0 / 3) < 1e-12)
+  }
+
+  test("GraftExtensions wires portable_hash into SparkSessionExtensions") {
+    // a fresh session sees portable_hash only through the hook: `register`
+    // wrote to the shared session's own registry, not to a new one's
+    spark // `register` sizes the code cache before any other session compiles
+    val plain = spark.newSession()
+    intercept[org.apache.spark.sql.AnalysisException](plain.sql("SELECT portable_hash('abc')"))
+    // `create()` makes the new session the active and default one
+    val (active, default) = (SparkSession.getActiveSession, SparkSession.getDefaultSession)
+    val hooked =
+      try SparkSession.builder().withExtensions(e => new GraftExtensions().apply(e)).create()
+      finally {
+        active.foreach(SparkSession.setActiveSession)
+        default.foreach(SparkSession.setDefaultSession)
+      }
+    val h = hooked.sql("SELECT portable_hash('abc') AS h").head().getLong(0)
+    val expect = "abc".foldLeft(0L)((a, c) => (a * 31 + c.toLong) % 1000000007L)
+    assert(h == expect)
   }
 
   test("readRest pulls paginated JSON until exhaustion") {
