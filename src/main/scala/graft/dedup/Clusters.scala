@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.iter.Rounds
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -44,8 +45,8 @@ object Clusters {
     * Nodes absent from `pairs` are their own cluster. Edge direction in
     * `pairs` is ignored (the relation is symmetrized internally).
     *
-    * @param maxRounds hard stop; with pointer jumping each round doubles
-    *   reach, so 16 covers graphs of diameter ~2^16.
+    * @param maxRounds hard stop, past which the call raises; with pointer
+    *   jumping each round doubles reach, so 16 covers diameter ~2^16.
     */
   def connectedComponents(
       pairs: DataFrame, id1: String, id2: String,
@@ -57,7 +58,8 @@ object Clusters {
     // Symmetrize by EXPLODING both directions from one scan — a
     // union of two projections would run the pair-generating pipeline
     // (LSH candidate join + Jaccard confirm, at corpus scale the
-    // expensive part) once per branch during materialization.
+    // expensive part) once per branch during materialization. Released
+    // on every exit, so a failed round leaves no cache entry behind.
     val edges = pairs
       .select(explode(array(
         struct(col(id1).as("s"), col(id2).as("d")),
@@ -67,9 +69,9 @@ object Clusters {
       .repartition(col("__src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    var labels = nodes.select(col(idCol).as("__id"), col(idCol).as("__lbl"))
-    // FRONTIER (r18, guide §2.3/§2.4): the step join only needs the
-    // labels of nodes whose label CHANGED last round. Exact, not a
+    // Round state: (__id, __lbl, __chg). FRONTIER (r18, guide
+    // §2.3/§2.4): the step join only needs the labels of nodes whose
+    // label CHANGED (__chg) last round. Exact, not a
     // heuristic: for a non-frontier neighbor u, lbl(u) is unchanged
     // since the previous round, whose step already enforced
     // lbl(v) ≤ lbl(u) for every neighbor (and the jump only lowers
@@ -78,90 +80,64 @@ object Clusters {
     // are therefore IDENTICAL to the full-join form; late rounds join
     // the edge table against the unconverged residue instead of the
     // whole label table. Round 1 starts from "everything changed".
-    var frontier = labels
-    // rows in `frontier` (-1 = unknown/all): known exactly from the
+    val init = nodes.select(col(idCol).as("__id"), col(idCol).as("__lbl"),
+      lit(true).as("__chg"))
+    // rows in the frontier (-1 = unknown/all): known exactly from the
     // convergence count, so a small residue can be broadcast — the
     // late-round step then probes the PERSISTED edge layout map-side
     // with no exchange at all. 1M rows ≈ 16 MB broadcast, safely under
     // driver/executor headroom at any scale.
     var frontierRows = -1L
     val broadcastCap = 1000000L
-    var round = 0
-    var converged = false
-    // round-10: per-round stage timing behind an env flag, so a noisy
-    // bench rep (round-9 verdict: q126's 1.8-10.1 s reps, which did not
-    // reproduce on a quiet machine — spread 1.16 at 3 reps) can be
-    // attributed to a specific round/step instead of guessed at
-    val progress = sys.env.contains("GRAFT_CC_PROGRESS")
-    while (round < maxRounds && !converged) {
-      val t0 = System.nanoTime()
-      // neighbor-min over the frontier: lbl'(v) = min(lbl(v),
-      // min over (u,v)∈E, u∈F of lbl(u)) — equal to the all-neighbor
-      // min by the frontier invariant above
-      val fl = (if (frontierRows >= 0 && frontierRows <= broadcastCap)
-                  broadcast(frontier) else frontier)
-        .select(col("__id").as("__fid"), col("__lbl").as("__flbl"))
-      val nbrMin = edges
-        .join(fl, col("__src") === col("__fid"))
-        .groupBy(col("__dst").as("__id2"))
-        .agg(min(col("__flbl")).as("__nmin"))
-      // `__prev` carries the round-start label through the jump so
-      // convergence is a flag scan of the checkpoint just written, not
-      // a separate shuffle join back against `labels` (r17: the old
-      // per-round convergence check cost two exchanges + a join per
-      // round — at corpus scale a full label-table shuffle each round).
-      // The self-join below embeds `stepped` twice, but its HEAVY
-      // inner pieces (the edges⨝labels neighbor-min join + partial
-      // agg) are identical exchange subtrees on both sides, which
-      // Catalyst's ReuseExchange deduplicates — measured r17: an
-      // explicit persist() of `stepped` made rounds ~25% SLOWER
-      // (cache write + lost pipeline fusion) because the duplicate
-      // compute it targeted was already shared.
-      val stepped = labels
-        .join(nbrMin, col("__id") === col("__id2"), "left")
-        .select(col("__id"),
-          least(col("__lbl"), coalesce(col("__nmin"), col("__lbl"))).as("__lbl"),
-          col("__lbl").as("__prev"))
-      // pointer jump: lbl''(v) = lbl'(lbl'(v)) — chases chains in one
-      // hop (self-join on the label table, so both sides need explicit
-      // aliases). Labels satisfy lbl(v) <= v invariantly (initialized
-      // to v, only ever lowered), so lbl'(lbl'(v)) <= lbl'(v) and the
-      // parent's label can be taken directly — no least() needed.
-      val jumped = stepped.as("s")
-        .join(stepped.as("p"), col("s.__lbl") === col("p.__id"))
-        .select(col("s.__id").as("__id"), col("p.__lbl").as("__lbl"),
-          (col("p.__lbl") =!= col("s.__prev")).as("__chg"))
-        // LOCAL CHECKPOINT, not persist: the self-join embeds `stepped`
-        // twice and `stepped` embeds `labels` twice, so without real
-        // truncation the LOGICAL plan (and its analysis/treeString cost)
-        // grows exponentially with rounds — a persist only shortcuts the
-        // physical side. Each dead round's checkpoint blocks (two longs
-        // per node) are reclaimed by ContextCleaner once the var
-        // reassignment drops the last reference.
-        .localCheckpoint(true)
-      val tCkpt = System.nanoTime()
-      // one scalar action per round — a LOCAL scan of the checkpoint
-      // blocks just written (no join, no exchange). A full count, not
-      // limit(1): the count IS the next frontier's size, which decides
-      // whether the residue is broadcastable (same blocks scanned
-      // either way).
-      val changed = jumped.filter(col("__chg")).count()
-      converged = changed == 0
-      frontier = jumped.filter(col("__chg")).select(col("__id"), col("__lbl"))
-      frontierRows = changed
-      labels = jumped.select(col("__id"), col("__lbl"))
-      round += 1
-      if (progress) println(f"[cc] round $round%d: " +
-        f"step+jump+checkpoint ${(tCkpt - t0) / 1e9}%.3fs " +
-        f"convergence-count ${(System.nanoTime() - tCkpt) / 1e9}%.3fs " +
-        f"frontier=$changed%d converged=$converged")
-    }
-    edges.unpersist(false)
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxRounds rounds — " +
-        "labels would be silently wrong (duplicates kept). With pointer " +
-        "jumping each round doubles reach, so this graph's diameter " +
-        s"exceeds ~2^$maxRounds; raise maxRounds")
+    val labels = try Rounds.run("connectedComponents", init, maxRounds) {
+      (state, _) =>
+        val frontier = state.filter(col("__chg"))
+        // neighbor-min over the frontier: lbl'(v) = min(lbl(v),
+        // min over (u,v)∈E, u∈F of lbl(u)) — equal to the all-neighbor
+        // min by the frontier invariant above
+        val fl = (if (frontierRows >= 0 && frontierRows <= broadcastCap)
+                    broadcast(frontier) else frontier)
+          .select(col("__id").as("__fid"), col("__lbl").as("__flbl"))
+        val nbrMin = edges
+          .join(fl, col("__src") === col("__fid"))
+          .groupBy(col("__dst").as("__id2"))
+          .agg(min(col("__flbl")).as("__nmin"))
+        // `__prev` carries the round-start label through the jump so
+        // convergence is a flag scan of the truncated state, not a
+        // separate shuffle join back against the labels (r17: the old
+        // per-round convergence check cost two exchanges + a join per
+        // round — at corpus scale a full label-table shuffle each round).
+        // The self-join below embeds `stepped` twice, but its HEAVY
+        // inner pieces (the edges⨝labels neighbor-min join + partial
+        // agg) are identical exchange subtrees on both sides, which
+        // Catalyst's ReuseExchange deduplicates — measured r17: an
+        // explicit persist() of `stepped` made rounds ~25% SLOWER
+        // (cache write + lost pipeline fusion) because the duplicate
+        // compute it targeted was already shared.
+        val stepped = state
+          .join(nbrMin, col("__id") === col("__id2"), "left")
+          .select(col("__id"),
+            least(col("__lbl"), coalesce(col("__nmin"), col("__lbl"))).as("__lbl"),
+            col("__lbl").as("__prev"))
+        // pointer jump: lbl''(v) = lbl'(lbl'(v)) — chases chains in one
+        // hop (self-join on the label table, so both sides need explicit
+        // aliases). Labels satisfy lbl(v) <= v invariantly (initialized
+        // to v, only ever lowered), so lbl'(lbl'(v)) <= lbl'(v) and the
+        // parent's label can be taken directly — no least() needed.
+        // Truncation is not optional: the self-join embeds `stepped`
+        // twice, so the LOGICAL plan would grow exponentially with rounds.
+        Some(stepped.as("s")
+          .join(stepped.as("p"), col("s.__lbl") === col("p.__id"))
+          .select(col("s.__id").as("__id"), col("p.__lbl").as("__lbl"),
+            (col("p.__lbl") =!= col("s.__prev")).as("__chg")))
+    } { (state, _) =>
+      // one scalar action per round — a LOCAL scan of the truncated
+      // state's blocks (no join, no exchange). A full count, not limit(1):
+      // the count IS the next frontier's size, which decides whether the
+      // residue is broadcastable (same blocks scanned either way).
+      frontierRows = state.filter(col("__chg")).count()
+      frontierRows == 0
+    } finally edges.unpersist(false)
     labels.select(col("__id").as(idCol), col("__lbl").as("cluster_id"))
   }
 

@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.iter.Rounds
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -53,17 +54,14 @@ object GraphOps {
     * on src, and the persisted InMemoryRelation keeps that partitioning,
     * so every iteration's join on src reuses it instead of re-shuffling
     * the (large) edge side; only the (small) rank vector moves per
-    * iteration. Lineage is truncated every `checkpointInterval` rounds so
-    * deep iteration counts don't accumulate a re-execution cliff. The
-    * persisted edges are released before returning — the result is
-    * materialized first, so no cached state outlives the call.
+    * iteration. Each iteration is one [[graft.iter.Rounds]] round, which
+    * truncates its rank vector. The persisted edges are released on every
+    * exit, after the last round's ranks are materialized.
     */
   def pagerank(edges: DataFrame, srcCol: String, dstCol: String,
                weightCol: String, nodes: DataFrame, idCol: String,
                iterations: Int, damping: Double = 0.85,
-               checkpointInterval: Int = 5,
                detScale: Option[Int] = None): DataFrame = {
-    require(iterations >= 1, "pagerank needs at least one iteration")
     val n = nodes.count().toDouble
     val reset = (1.0 - damping) / n
     val trans = edges
@@ -77,9 +75,8 @@ object GraphOps {
     // Past the broadcast threshold, fall back to a shuffle join that
     // reuses the cached src-partitioning of `trans`.
     val broadcastRanks = n <= 5e6
-    var ranks = nodes.select(col(idCol).as("id")).withColumn("pr", lit(1.0 / n))
-    var i = 1
-    while (i <= iterations) {
+    val init = nodes.select(col(idCol).as("id")).withColumn("pr", lit(1.0 / n))
+    try Rounds.run("pagerank", init, iterations) { (ranks, _) =>
       val rSide = if (broadcastRanks) broadcast(ranks) else ranks
       // detScale: the inflow sum runs through Det (order-independent
       // decimal sum) so iterated ranks are bit-stable at any
@@ -91,17 +88,11 @@ object GraphOps {
           case Some(sc) => graft.functions.Det.dsum(col("__p") * col("pr"), sc)
           case None => sum(col("__p") * col("pr"))
         }).as("__inflow"))
-      ranks = nodes.select(col(idCol).as("id"))
+      Some(nodes.select(col(idCol).as("id"))
         .join(inflow, col("id") === col("__dst"), "left")
         .select(col("id"),
           (lit(reset) + lit(damping) * coalesce(col("__inflow"), lit(0.0)))
-            .as("pr"))
-      if (i % checkpointInterval == 0 && i < iterations)
-        ranks = ranks.localCheckpoint(true)
-      i += 1
-    }
-    val out = ranks.localCheckpoint(true)
-    trans.unpersist(false)
-    out
+            .as("pr")))
+    } { (_, i) => i == iterations } finally trans.unpersist(false)
   }
 }

@@ -34,7 +34,7 @@ object GateQueries {
     * final result table — the harness that lets true streaming plans run
     * under the batch DuckDB oracle gate.
     *
-    * Cost floor (measured round 9 via GRAFT_STREAM_PROGRESS): each gate
+    * Cost floor (round 9, from `StreamingQuery.recentProgress`): each gate
     * is ~1.3–1.9 s regardless of fixture size — two micro-batches (the
     * watermark only ripens results in the batch AFTER the data batch; a
     * bounded run cannot skip the flush batch), ~0.5 s of state-store
@@ -69,10 +69,6 @@ object GateQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      if (sys.env.contains("GRAFT_STREAM_PROGRESS"))
-        q.recentProgress.foreach(p => System.err.println(
-          s"[stream] $name batch=${p.batchId} rows=${p.numInputRows} " +
-          s"ms=${p.durationMs}"))
     } finally s.conf.set(shuffleKey, prev)
     s.table(name)
   }

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.iter.Rounds
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,9 +19,9 @@ import org.apache.spark.sql.functions._
   *    adjacent symbol pairs weighted by word freq (map-combined sum —
   *    one partial row per partition per pair), select a BATCH of
   *    non-interacting top merges (below), and rewrite every word with
-  *    one compiled `bpe_merge_batch` pass. `localCheckpoint` truncates
-  *    the per-round lineage exactly as in `Clusters`' pointer-jumping
-  *    loop.
+  *    one compiled `bpe_merge_batch` pass. Each round is one
+  *    [[graft.iter.Rounds]] round, which truncates the rewritten words;
+  *    a round that finds no adjacent pair ends the loop with no rewrite.
   *
   * Batched selection (round-11: a 32k-merge vocabulary must not cost
   * 32k sequential Spark jobs) is EXACT, not approximate — the learned
@@ -70,14 +71,13 @@ object BpeTrain {
       .select(explode(TextOps.tokens(col(textCol))).as("__w"))
       .groupBy(col("__w")).agg(count(lit(1)).as("__f"))
     // each word starts as its character (codepoint) sequence
-    var state = words.select(col("__f"),
+    val init = Rounds.truncate(words.select(col("__f"),
       expr("transform(sequence(1, char_length(__w)), i -> substring(__w, i, 1))")
-        .as("__t"))
-      .localCheckpoint(true)
+        .as("__t")))
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, String, Long)]
-    var exhausted = false
-    while (merges.size < numMerges && !exhausted) {
+    // every round keeps at least one merge, so numMerges rounds suffice
+    Rounds.run("learnMerges", init, numMerges) { (state, _) =>
       val want = math.min(batchCap, numMerges - merges.size)
       val top = state
         .filter(size(col("__t")) >= 2)
@@ -89,7 +89,7 @@ object BpeTrain {
         .orderBy(col("__c").desc, col("__l"), col("__r"))
         .limit(want + 1)
         .collect()
-      if (top.isEmpty) exhausted = true
+      if (top.isEmpty) None
       else {
         // non-interacting prefix selection (see scaladoc)
         val used = scala.collection.mutable.HashSet.empty[String]
@@ -115,17 +115,12 @@ object BpeTrain {
         kept.foreach { case (l, r, c) =>
           merges += ((merges.size + 1, l, r, l + r, c))
         }
-        // localCheckpoint truncates the per-round lineage; dead rounds'
-        // blocks are reclaimed by ContextCleaner after the reassignment
-        // (same lifecycle as Clusters' pointer-jumping loop)
         val mergeList = array(kept.toSeq.map { case (l, r, _) =>
           lit(l + "\u0000" + r) }: _*)
-        state = state
-          .select(col("__f"),
-            call_function("bpe_merge_batch", col("__t"), mergeList).as("__t"))
-          .localCheckpoint(true)
+        Some(state.select(col("__f"),
+          call_function("bpe_merge_batch", col("__t"), mergeList).as("__t")))
       }
-    }
+    } { (_, _) => merges.size >= numMerges }
     import spark.implicits._
     merges.toSeq
       .toDF("rank", "left", "right", "merged", "pair_count")

@@ -1,5 +1,6 @@
 package graft.vector
 
+import graft.iter.Rounds
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -66,21 +67,18 @@ object KMeans {
       .agg(expr("transform(array_sort(collect_list(struct(__pos, __m)))," +
         " s -> s.__m)").as(cvecCol))
 
-  /** `rounds` full assign→update iterations from `initCentroids`, then a
-    * final assignment against the last centroids. Returns
-    * (idCol, cluster). */
+  /** `rounds` (≥ 1) full assign→update iterations from `initCentroids`,
+    * each a [[graft.iter.Rounds]] round, then a final assignment against
+    * the last centroids. Returns (idCol, cluster). */
   def lloyd(points: DataFrame, idCol: String, vecCol: String,
             initCentroids: DataFrame, cidCol: String, cvecCol: String,
             rounds: Int): DataFrame = {
-    require(rounds >= 0, "rounds must be non-negative")
-    var cents = initCentroids.select(
+    val init = initCentroids.select(
       col(cidCol), col(cvecCol).cast("array<double>").as(cvecCol))
-    var r = 0
-    while (r < rounds) {
-      val assigned = assign(points, idCol, vecCol, cents, cidCol, cvecCol)
-      cents = update(assigned, cidCol, cvecCol).localCheckpoint(true)
-      r += 1
-    }
+    val cents = Rounds.run("lloyd", init, rounds) { (c, _) =>
+      Some(update(assign(points, idCol, vecCol, c, cidCol, cvecCol),
+        cidCol, cvecCol))
+    } { (_, r) => r == rounds }
     assign(points, idCol, vecCol, cents, cidCol, cvecCol)
       .select(col(idCol), col("cluster"))
   }

@@ -33,7 +33,7 @@ class GraphMlSpec extends SparkSpecBase {
     val edges = Seq((0, 1, 1.0), (1, 2, 1.0), (2, 0, 1.0)).toDF("s", "t", "w")
     val nodes = Seq(0, 1, 2).toDF("id")
     val pr = GraphOps.pagerank(edges, "s", "t", "w", nodes, "id",
-        iterations = 7, checkpointInterval = 3)
+        iterations = 7)
       .as[(Int, Double)].collect().toMap
     assert(pr.values.forall(v => math.abs(v - 1.0 / 3) < 1e-12))
     assert(math.abs(pr.values.sum - 1.0) < 1e-12)

@@ -51,7 +51,7 @@ class PropertySpec extends SparkSpecBase {
       yield (u, v, 1.0 + rnd.nextInt(5))).toSeq
     val pr = graft.graph.GraphOps.pagerank(
         edges.toDF("s", "t", "w"), "s", "t", "w",
-        (0 until n).toDF("id"), "id", iterations = 6, checkpointInterval = 2)
+        (0 until n).toDF("id"), "id", iterations = 6)
       .as[(Int, Double)].collect().toMap
     // dense reference: r' = reset + d * Pᵀ r
     val outW = Array.tabulate(n)(u => edges.filter(_._1 == u).map(_._3).sum)

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
 
 /** One session for the whole test JVM (Test/fork runs all suites in a
   * single forked JVM; Spark startup is ~5s, so share it). */
@@ -36,23 +36,27 @@ abstract class SparkSpecBase extends AnyFunSuite {
     try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  /** Spark jobs started by `body` on this thread. Jobs carry the
-    * thread's job group; a sentinel job in the same group, started
-    * after `body`, marks the point up to which every earlier job-start
-    * event has been delivered (the listener bus is ordered). */
-  def jobsDuring(body: => Unit): Int = {
+  /** Spark jobs started by `body` on this thread. */
+  def jobsDuring(body: => Unit): Int = jobDescriptionsDuring(body).size
+
+  /** Descriptions of the Spark jobs started by `body` on this thread, in
+    * start order ("" for a job that ran under no description). Jobs
+    * carry the thread's job group; a sentinel job in the same group,
+    * started after `body`, marks the point up to which every earlier
+    * job-start event has been delivered (the listener bus is ordered). */
+  def jobDescriptionsDuring(body: => Unit): Seq[String] = {
     val sc = spark.sparkContext
     val group = s"jobs-during-${java.util.UUID.randomUUID}"
     val sentinel = "sentinel"
-    val started = new AtomicInteger(0)
+    val started = new ConcurrentLinkedQueue[String]()
     val sentinelSeen = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
           .foreach { p =>
-            if (p.getProperty("spark.job.description") == sentinel)
-              sentinelSeen.countDown()
-            else started.incrementAndGet()
+            val description = p.getProperty("spark.job.description", "")
+            if (description == sentinel) sentinelSeen.countDown()
+            else started.add(description)
           }
     }
     sc.addSparkListener(listener)
@@ -62,7 +66,7 @@ abstract class SparkSpecBase extends AnyFunSuite {
       sc.setJobDescription(sentinel)
       sc.parallelize(Seq(1), 1).count()
       assert(sentinelSeen.await(60, TimeUnit.SECONDS), "sentinel job not seen")
-      started.get
+      started.asScala.toSeq
     } finally {
       sc.clearJobGroup()
       sc.setJobDescription(null)
