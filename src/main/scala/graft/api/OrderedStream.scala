@@ -77,16 +77,14 @@ class OrderedStream(df0: DataFrame, val timeCol: String) extends DataStream(df0)
     statefulTransform(Seq(by), Seq(timeCol))(f)
 
   /** Complex-event pattern recognition (reference `pattern_recognize`,
-    * orderedstream.py:37-53 + cep_executors.py). Dense data auto-routes
-    * from the k-way range join to the streaming NFA (same semantics,
-    * same schema) when the candidate pre-check trips — set
-    * `autoRouteToNfa = false` for the fail-fast throw instead. */
+    * orderedstream.py:37-53 + cep_executors.py) on the per-key NFA of
+    * [[graft.ts.Cep.patternRecognize]]: SQL event predicates (`name.col`
+    * for earlier events, bare names for the event's own columns), all
+    * matches within `maxSpan`, output `by` then `<name>_<col>` per
+    * event. */
   def patternRecognize(
       events: Seq[(String, String)],
       maxSpan: Long,
-      by: String,
-      maxCandidatesPerKey: Long = 1L << 24,
-      autoRouteToNfa: Boolean = true): DataFrame =
-    graft.ts.Cep.patternRecognize(this, events, maxSpan.toDouble, by,
-      maxCandidatesPerKey, autoRouteToNfa)
+      by: String): DataFrame =
+    graft.ts.Cep.patternRecognize(this, events, maxSpan.toDouble, by)
 }

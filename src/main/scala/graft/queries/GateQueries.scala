@@ -890,18 +890,17 @@ object GateQueries {
         .orderBy("id")
     },
 
-    // The CEP auto-route target (Cep.patternRecognizeViaNfa) gated
-    // directly: the q48 pattern — SQL string predicates compiled and run
-    // on the streaming NFA engine, full-payload output, TIMESTAMP time
-    // axis (exercises the epoch-seconds conversion) — against the same
-    // 3-way-join oracle as the join form. If auto-routing ever changes
-    // semantics (a predicate compiles differently, the payload emit
-    // reorders columns), this diverges from q48's oracle and fails.
+    // q48's pattern through Cep.patternRecognize over a DOUBLE time
+    // axis, cast(ts AS double): q48 gates the TIMESTAMP time type and
+    // this gates the numeric one (both read µs / 1e6 seconds), against
+    // the same 3-way-join oracle. If the SQL predicates compile
+    // differently per time type, or the payload emit reorders columns,
+    // this diverges from q48's oracle and fails.
     "q111_cep_nfa_route" -> { (s, d) =>
       val ev = new OrderedStream(
-        events(s, d).select(col("user_id"), col("ts"), col("event_type"),
-          col("value"), col("event_id")), "ts")
-      Cep.patternRecognizeViaNfa(ev, Seq(
+        events(s, d).select(col("user_id"), col("ts").cast("double").as("tsd"),
+          col("event_type"), col("value"), col("event_id")), "tsd")
+      Cep.patternRecognize(ev, Seq(
           "a" -> "a.event_type = 'view'",
           "b" -> "b.event_type = 'click' and b.value > a.value",
           "c" -> "c.event_type = 'purchase'"),

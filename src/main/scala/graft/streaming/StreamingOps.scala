@@ -342,11 +342,10 @@ object StreamingOps {
   }
 
   /** [[streamingCep]] keyed state: `pending` = arrived events the
-    * watermark has not passed yet; `live` = partial matches (stage name,
-    * event) in match order, newest last. */
-  case class CepState(
-      pending: List[(Long, String, Double)],
-      live: List[List[(String, Long, String, Double)]])
+    * watermark has not passed yet; `live` = partial matches as
+    * [[graft.ts.Cep.nfaStep]] keeps them, newest first, each the matched
+    * (stage name, event) prefix in match order. */
+  case class CepState(pending: List[CepEv], live: List[List[(String, CepEv)]])
 
   /** True streaming CEP — the watermarked form of
     * [[graft.ts.Cep.nfaPatternRecognize]] (reference `nfa_cep*`
@@ -360,7 +359,8 @@ object StreamingOps {
     * (µs-exact, like [[streamingAsof]]: ripe iff us <= wm*1000 — every
     * not-yet-arrived event is strictly later, so the per-key
     * time-order scan the NFA needs is complete up to the watermark),
-    * then run through the same transition function in time order.
+    * then run in time order through [[graft.ts.Cep.nfaStep]], the
+    * batch engine's transition function, with times in `tsd` seconds.
     * Emission is append-mode correct: a match emits exactly once, when
     * its completing event ripens.
     *
@@ -369,13 +369,16 @@ object StreamingOps {
     * once the watermark passes head + maxSpan, and hard-capped by
     * `maxLiveStatesPerKey` — same dense-burst guard as batch). A quiet
     * key flushes via event-time timeout, and a key with no pending and
-    * no live state removes itself from the store.
+    * no live state removes itself from the store. `maxMatchesPerKey`
+    * bounds one key's matches in ONE micro-batch: a combinatorial
+    * blow-up shows inside one batch's ripe set, while a healthy hot key
+    * matching steadily for weeks must not trip a lifetime counter.
     *
     * Input columns: key (string), ts (timestamp), etype (string),
     * value (double). Output: (key, <name>_t timestamp per stage). */
   def streamingCep(
       events: DataFrame,
-      pattern: Seq[(String, CepEv => Boolean, (CepEv, Map[String, CepEv]) => Boolean)],
+      pattern: Seq[graft.ts.Cep.Event[CepEv]],
       maxSpanSeconds: Double,
       watermarkDelay: String,
       maxLiveStatesPerKey: Int = 10000,
@@ -390,7 +393,7 @@ object StreamingOps {
         pattern.map(p => StructField(s"${p._1}_t", TimestampType)))
     implicit val outEnc: org.apache.spark.sql.Encoder[Row] = Encoders.row(outSchema)
     val stages = pattern.toIndexedSeq
-    val nStages = stages.length
+    val tsd = (e: CepEv) => e.tsd
 
     events.select(col("key").cast("string"), col("ts"),
         col("etype").cast("string"), col("value").cast("double"))
@@ -400,84 +403,38 @@ object StreamingOps {
       .flatMapGroupsWithState[CepState, Row](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) { (key, rows, state) =>
         val s0 = state.getOption.getOrElse(CepState(Nil, Nil))
-        var pending = s0.pending
-        rows.foreach { case (_, t, et, v) =>
-          pending = (micros(t), et, v) :: pending
+        val pending = rows.foldLeft(s0.pending) { case (p, (_, t, et, v)) =>
+          CepEv(micros(t), et, v) :: p
         }
         val wm = state.getCurrentWatermarkMs()
         val wmUs = wm * 1000
-        val (ripe, rest) = pending.sortBy(_._1).partition(_._1 <= wmUs)
-        var live = s0.live
-        var liveN = live.length
-        // dense-burst guard, PER INVOCATION: the batch NFA counts per
-        // bounded run; the streaming analog is per micro-batch — a
-        // combinatorial blow-up manifests inside one batch's ripe set,
-        // while a healthy hot key matching steadily for weeks must NOT
-        // trip a lifetime counter
+        val (ripe, rest) = pending.sortBy(_.us).partition(_.us <= wmUs)
         var matches = 0L
         val out = List.newBuilder[Row]
-        def emitMatch(row: Row): Unit = {
+        def emit(matched: Vector[(String, CepEv)]): Unit = {
           matches += 1
           if (maxMatchesPerKey > 0 && matches > maxMatchesPerKey)
             throw new IllegalStateException(
               s"streaming CEP match blow-up: > $maxMatchesPerKey complete " +
               s"matches for key '$key' in one micro-batch (all-matches " +
               "semantics are combinatorial on dense bursts)")
-          out += row
+          out += Row.fromSeq(key +: matched.map(e => toTs(e._2.us)))
         }
-        ripe.foreach { case (us, et, v) =>
-          val ev = CepEv(us, et, v)
-          // span prune + extension strictness in DOUBLE SECONDS — the
-          // batch NFA's (and the SQL oracle's) exact arithmetic
-          val now = ev.tsd
-          val keep = List.newBuilder[List[(String, Long, String, Double)]]
-          var keepN = 0
-          live.foreach { s =>
-            if (now <= CepEv(s.head._2, s.head._3, s.head._4).tsd + maxSpanSeconds) {
-              keep += s; keepN += 1
-            }
-          }
-          live = keep.result(); liveN = keepN
-          var fresh = List.empty[List[(String, Long, String, Double)]]
-          var extN = 0
-          val extended = live.flatMap { s =>
-            val (name, self, cross) = stages(s.length)
-            val lastTsd = CepEv(s.last._2, s.last._3, s.last._4).tsd
-            lazy val ctx = s.map(e => e._1 -> CepEv(e._2, e._3, e._4)).toMap
-            if (now > lastTsd && self(ev) && cross(ev, ctx)) {
-              val ns = s :+ ((name, us, et, v))
-              if (ns.length == nStages) {
-                emitMatch(Row.fromSeq(key +: ns.map(e => toTs(e._2))))
-                None
-              } else { extN += 1; Some(ns) }
-            } else None
-          }
-          val (n0, self0, _) = stages(0)
-          if (self0(ev)) {
-            if (nStages == 1) emitMatch(Row.fromSeq(Seq(key, toTs(us))))
-            else fresh = List(List((n0, us, et, v)))
-          }
-          live = extended ::: fresh ::: live
-          liveN += extN + fresh.length
-          if (liveN > maxLiveStatesPerKey)
-            throw new IllegalStateException(
-              s"streaming CEP state blow-up: > $maxLiveStatesPerKey live " +
-              s"partial matches for key '$key' inside maxSpan=" +
-              s"$maxSpanSeconds (tighten predicates or maxSpan, or raise " +
-              "maxLiveStatesPerKey)")
-        }
-        // a live state whose head the watermark has left maxSpan behind
-        // can never be extended (every future event is > wm in µs)
-        live = live.filter(s =>
-          wmUs / 1e6 <= CepEv(s.head._2, s.head._3, s.head._4).tsd + maxSpanSeconds)
+        val live = ripe.foldLeft(s0.live.map(_.toVector)) { (l, ev) =>
+          graft.ts.Cep.nfaStep(stages, tsd, maxSpanSeconds,
+            maxLiveStatesPerKey, s"for key '$key'")(l, ev, emit)
+        }.filter(s =>
+          // a live state whose head the watermark has left maxSpan
+          // behind can never be extended (every future event is > wm)
+          wmUs / 1e6 <= s.head._2.tsd + maxSpanSeconds)
         if (rest.isEmpty && live.isEmpty) state.remove()
         else {
-          state.update(CepState(rest, live))
+          state.update(CepState(rest, live.map(_.toList)))
           // wake when the earliest pending event ripens, or when the
           // earliest live state expires — whichever is sooner
           val spanUs = (maxSpanSeconds * 1e6).toLong
-          val wake = (rest.map(_._1 / 1000 + 1) ++
-            live.map(s => (s.head._2 + spanUs) / 1000 + 1)).minOption
+          val wake = (rest.map(_.us / 1000 + 1) ++
+            live.map(s => (s.head._2.us + spanUs) / 1000 + 1)).minOption
           wake.foreach(w => state.setTimeoutTimestamp(math.max(w, wm + 1)))
         }
         out.result().iterator

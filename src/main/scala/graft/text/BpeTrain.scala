@@ -76,7 +76,8 @@ object BpeTrain {
         .as("__t")))
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, String, Long)]
-    // every round keeps at least one merge, so numMerges rounds suffice
+    // every round keeps at least one merge, so by round numMerges the
+    // step has ended the loop (None) on its own
     Rounds.run("learnMerges", init, numMerges) { (state, _) =>
       val want = math.min(batchCap, numMerges - merges.size)
       val top = state
@@ -115,12 +116,17 @@ object BpeTrain {
         kept.foreach { case (l, r, c) =>
           merges += ((merges.size + 1, l, r, l + r, c))
         }
-        val mergeList = array(kept.toSeq.map { case (l, r, _) =>
-          lit(l + "\u0000" + r) }: _*)
-        Some(state.select(col("__f"),
-          call_function("bpe_merge_batch", col("__t"), mergeList).as("__t")))
+        // the round that reaches numMerges ends the loop: nothing reads
+        // its rewritten words
+        if (merges.size >= numMerges) None
+        else {
+          val mergeList = array(kept.toSeq.map { case (l, r, _) =>
+            lit(l + "\u0000" + r) }: _*)
+          Some(state.select(col("__f"),
+            call_function("bpe_merge_batch", col("__t"), mergeList).as("__t")))
+        }
       }
-    } { (_, _) => merges.size >= numMerges }
+    } { (_, _) => false }
     import spark.implicits._
     merges.toSeq
       .toDF("rank", "left", "right", "merged", "pair_count")

@@ -367,14 +367,13 @@ object CorpusOps {
     *
     * Scale shape: tf is one hash aggregate on (id, token); df derives
     * from tf by a second aggregate on token (no rescan); the score join
-    * is keyed on token — `broadcastVocab` broadcasts the df side when
-    * the vocabulary is known to be small, the default shuffle join is
-    * the honest 100 TB shape (a web-scale token universe is not
-    * broadcastable); the top-k is a per-doc window on the id exchange.
+    * is keyed on token with no broadcast hint (a web-scale token
+    * universe is not broadcastable; Catalyst still broadcasts a small
+    * one); the top-k is a per-doc window on the id exchange.
     *
     * Returns (idCol, kw_rank, token, tf, df, score), kw_rank 1-based. */
-  def tfIdfKeywords(df: DataFrame, idCol: String, textCol: String, k: Int,
-      broadcastVocab: Boolean = false): DataFrame = {
+  def tfIdfKeywords(df: DataFrame, idCol: String, textCol: String, k: Int)
+      : DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     // materialize the slim (id, token, tf) relation ONCE: both the df
     // aggregate and the score join consume it, and the upstream
@@ -387,8 +386,7 @@ object CorpusOps {
       .localCheckpoint(true)
     // tf is already distinct per (id, token), so count(*) IS the
     // distinct-document frequency — no countDistinct pass needed
-    val dfreq0 = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val dfreq = if (broadcastVocab) broadcast(dfreq0) else dfreq0
+    val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol))
       .orderBy(col("score").desc, col("token").asc)

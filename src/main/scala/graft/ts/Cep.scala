@@ -1,206 +1,195 @@
 package graft.ts
 
 import graft.api.OrderedStream
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{AnalysisException, DataFrame, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, GenericInternalRow, Predicate}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, NumericType, StructField, StructType, TimestampType}
 
 /** Complex-event pattern recognition (MATCH_RECOGNIZE-lite) — the
-  * reference's `pattern_recognize` (orderedstream.py:37-53, executors
-  * cep_executors.py:13-178).
+  * reference's `pattern_recognize` (orderedstream.py:37-53) run the way
+  * its `nfa_cep` executor runs it (cep_executors.py:196-272).
   *
-  * A pattern is an ordered list of named events `(name, predicate)`;
-  * later predicates may reference earlier events' columns with
-  * `name.column` syntax (e.g. `"b.value > a.value"`). A match is a
-  * strictly time-increasing tuple of rows, one per event, same `by` key,
-  * with `last.time <= first.time + maxSpan`. All matches are emitted
-  * (the reference's DFS enumerates all candidate tuples).
+  * A pattern is an ordered list of named events. A match is a strictly
+  * time-increasing tuple of rows, one per event, same `by` key, with
+  * `last.time <= first.time + maxSpan`. All matches are emitted (the
+  * reference's DFS enumerates the same tuples).
   *
-  * Implementation: declarative iterative join instead of the reference's
-  * string-substituted per-row DFS —
-  *   1. each event's self-referencing conjuncts prefilter its stream
-  *      (the reference's pushed OR-prefilter, cep_executors.py:34-84,
-  *      done per-event which is strictly tighter);
-  *   2. events are joined left-to-right on (same key, strictly later
-  *      time, within maxSpan of the first event) — a range join Catalyst
-  *      plans with the time bound as join condition;
-  *   3. cross-event conjuncts are evaluated as join filters.
-  * Everything stays in DataFrame land: pushdown, AQE and codegen apply.
+  * One engine runs every entry: a per-key NFA whose transition is
+  * [[nfaStep]]. [[patternRecognize]] takes SQL predicates and emits the
+  * full payload, [[nfaPatternRecognize]] takes typed predicates and
+  * emits per-event times, and
+  * [[graft.streaming.StreamingOps.streamingCep]] feeds the same step
+  * the events a watermark has ripened.
+  *
+  * Times compare as `cast(time AS double)`: numerics pass through,
+  * timestamps become fractional epoch seconds (µs-exact). Rows with a
+  * null key or a null time never match. A missing `by` or time column,
+  * or a time that is neither numeric nor TIMESTAMP, fails on the driver
+  * before any job, with the analyzer's error classes.
   */
 // Serializable: executor-side closures (the NFA's emit/time lambdas)
 // reference object-private helpers, which scalac compiles as captures of
 // this singleton — deserialization resolves back to the module instance.
 object Cep extends Serializable {
 
+  /** One pattern event: its name, a predicate on the event alone, and a
+    * predicate on the event plus the matched prefix by event name. */
+  type Event[E] = (String, E => Boolean, (E, Map[String, E]) => Boolean)
+
   /** Rewrite `name.column` references to the flattened `name_column`. */
   private[ts] def rewrite(pred: String): String =
     pred.replaceAll("""\b([A-Za-z_]\w*)\.([A-Za-z_]\w*)""", "$1_$2")
 
-  /** Names referenced by a predicate (the `x` of `x.col`). */
-  private[ts] def referenced(pred: String): Set[String] =
-    """\b([A-Za-z_]\w*)\.""".r.findAllMatchIn(pred).map(_.group(1)).toSet
+  /** The NFA's transition on one event `ev` of one key. `live` holds the
+    * key's partial matches, newest first, each the matched (event name,
+    * event) prefix in match order; the result is the new live list.
+    *
+    * The step drops a match whose first event lies more than `maxSpan`
+    * before `ev`, extends every match whose next event accepts `ev` at a
+    * strictly later time (all-matches semantics, like the reference's
+    * DFS) and hands the complete ones to `emit`, then starts a fresh
+    * match when the first event accepts `ev`.
+    *
+    * A dense burst (many events matching every predicate inside one span)
+    * grows the live set combinatorially; past `maxLive` live matches the
+    * step throws "CEP state blow-up" (`scope` names the key) instead of
+    * running the executor out of memory. Complete matches are not
+    * counted: each caller bounds them in its own scope. */
+  private[graft] def nfaStep[E](
+      events: IndexedSeq[Event[E]],
+      time: E => Double,
+      maxSpan: Double,
+      maxLive: Int,
+      scope: => String)(
+      live: List[Vector[(String, E)]],
+      ev: E,
+      emit: Vector[(String, E)] => Unit): List[Vector[(String, E)]] = {
+    val now = time(ev)
+    val kept = List.newBuilder[Vector[(String, E)]]
+    val grown = List.newBuilder[Vector[(String, E)]]
+    var n = 0
+    live.foreach { s =>
+      if (now <= time(s.head._2) + maxSpan) {
+        kept += s; n += 1
+        val (name, self, cross) = events(s.length)
+        if (now > time(s.last._2) && self(ev) && cross(ev, s.toMap)) {
+          val ns = s :+ (name -> ev)
+          if (ns.length == events.length) emit(ns) else { grown += ns; n += 1 }
+        }
+      }
+    }
+    val (first, self0, _) = events.head
+    if (self0(ev)) {
+      if (events.length == 1) emit(Vector(first -> ev))
+      else { grown += Vector(first -> ev); n += 1 }
+    }
+    if (n > maxLive)
+      throw new IllegalStateException(
+        s"CEP state blow-up: > $maxLive live partial matches $scope " +
+        s"inside maxSpan=$maxSpan (all-matches semantics are " +
+        "combinatorial on dense bursts). Tighten event predicates or " +
+        "maxSpan, or raise maxLiveStatesPerKey explicitly.")
+    grown.result() ::: kept.result()
+  }
 
-  /** Event time as a double, matching the join form's
-    * `cast(timeCol as double)` semantics: numerics pass through,
-    * timestamps become fractional epoch seconds (µs-exact). */
-  private def timeAsDouble(v: Any): Double = v match {
-    case n: Number => n.doubleValue()
+  /** Event time in seconds, as `cast(time AS double)` reads it: numerics
+    * pass through, timestamps (`Instant` under the Java 8 datetime API)
+    * become fractional epoch seconds, µs-exact. [[checkInput]] rules out
+    * every other type. */
+  private def seconds(v: Any): Double = v match {
+    case n: Number => n.doubleValue
     case t: java.sql.Timestamp =>
       (t.getTime * 1000 + (t.getNanos / 1000) % 1000) / 1e6
-    case other => throw new IllegalArgumentException(
-      s"CEP time column must be numeric or timestamp, got: " +
-      s"${if (other == null) "null" else other.getClass.getName}")
+    case i: java.time.Instant =>
+      (i.getEpochSecond * 1000000 + i.getNano / 1000) / 1e6
   }
 
-  /** NFA formulation (reference `nfa_cep`, cep_executors.py:196-272):
-    * one time-ordered pass per key, maintaining partial-match states.
-    * Linear in events × live-states where the join formulation is a
-    * k-way join — the right shape when the pattern is long or
-    * selective prefilters don't exist. Predicates are Scala functions
-    * (current row, matched prefix by event name) → Boolean, the typed
-    * analog of the reference's string-substituted predicates. Emits one
-    * row per complete match: key + per-event times, same shape as
-    * [[patternRecognize]]'s (by, name_t...) columns.
-    *
-    * Scale: ONE shuffle (repartition by `by`) + sortWithinPartitions
-    * (key, time) + a streaming mapPartitions with key-change detection —
-    * the statefulTransform shape. A key's rows are NEVER materialized:
-    * input streams through, matches emit incrementally (per-row pending
-    * queue, bounded by the live set), so a hot key with 10⁸ rows holds
-    * only its live partial states in memory.
-    *
-    * `maxLiveStatesPerKey` is the blow-up guard on LIVE PARTIAL STATES:
-    * all-matches semantics keep every partial match alive within
-    * `maxSpan`, so a dense burst (many rows matching every predicate
-    * inside one span) grows the live set combinatorially (reference hits
-    * the same wall, its DFS enumerates the identical tuples,
-    * cep_executors.py:86-178). Exceeding it throws with a clear message
-    * instead of OOM-killing the executor: fail fast, then the caller
-    * tightens predicates/maxSpan or raises the cap knowingly.
-    *
-    * Complete matches now STREAM OUT instead of buffering per key, so
-    * output volume no longer threatens executor memory and is not
-    * counted against the live cap (pre-round-8 behavior conflated the
-    * two). `maxMatchesPerKey` (off by default, <= 0) is a separate
-    * optional sanity bound for callers who want runaway output to fail
-    * fast rather than fill the sink. */
-  def nfaPatternRecognize(
-      os: OrderedStream,
-      events: Seq[(String, org.apache.spark.sql.Row => Boolean, (org.apache.spark.sql.Row, Map[String, org.apache.spark.sql.Row]) => Boolean)],
-      maxSpan: Double,
-      by: String,
-      maxLiveStatesPerKey: Int = 1 << 20,
-      maxMatchesPerKey: Long = -1L): DataFrame = {
-    import org.apache.spark.sql.Row
-    val df = os.df
-    val tIdx = df.columns.indexOf(os.timeCol)
-    val keyIdx = df.columns.indexOf(by)
-    val names = events.map(_._1)
-    val outSchema = org.apache.spark.sql.types.StructType(
-      df.schema(by).copy(nullable = false) +:
-        names.map(n => org.apache.spark.sql.types.StructField(
-          s"${n}_t", org.apache.spark.sql.types.DoubleType)))
-    def t(r: Row) = timeAsDouble(r.get(tIdx))
-    nfaRun(df, events, maxSpan, by, maxLiveStatesPerKey, maxMatchesPerKey,
-      os.timeCol, outSchema,
-      (key, matched) => Row.fromSeq(key +: matched.map(p => t(p._2))))
-      .toDF(by +: names.map(n => s"${n}_t"): _*)
+  /** Driver-side checks before any job: `by` and the time column exist,
+    * and the time is numeric or TIMESTAMP. */
+  private def checkInput(os: OrderedStream, by: String): Unit = {
+    val schema = os.df.schema
+    def field(name: String) = schema.find(_.name == name).getOrElse(
+      throw new AnalysisException("UNRESOLVED_COLUMN.WITH_SUGGESTION", Map(
+        "objectName" -> s"`$name`",
+        "proposal" -> schema.fieldNames.map(c => s"`$c`").mkString(", "))))
+    field(by)
+    val t = field(os.timeCol)
+    t.dataType match {
+      case _: NumericType | TimestampType => ()
+      case other => throw new AnalysisException(
+        "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", Map(
+          "sqlExpr" -> s""""pattern recognize on `$by`, `${t.name}`"""",
+          "paramIndex" -> "second",
+          "requiredType" -> "(\"NUMERIC\" or \"TIMESTAMP\")",
+          "inputSql" -> s""""`${t.name}`"""",
+          "inputType" -> ("\"" + other.sql + "\"")))
+    }
   }
 
-  /** The streaming NFA engine shared by [[nfaPatternRecognize]] (emits
-    * per-event times) and [[patternRecognizeViaNfa]] (emits full payload):
-    * one repartition + sortWithinPartitions + key-change-detecting
-    * mapPartitions; `emit` builds the output row from (key value, matched
-    * (name, row) prefix). */
+  /** The batch engine behind both entries: ONE shuffle on `by`, a sort
+    * by (key, time) within partitions, and a streaming mapPartitions
+    * that feeds each key's rows through [[nfaStep]] (the
+    * statefulTransform shape). Rows with a null key or time are dropped.
+    * `emitRow` builds the output row from the key and a complete match.
+    *
+    * A key's rows are NEVER materialized: input streams through and
+    * matches emit incrementally (a per-row queue, bounded by the live
+    * set), so a hot key with 10⁸ rows holds only its live partial
+    * matches in memory. `maxMatchesPerKey` (off when <= 0) bounds one
+    * key's complete matches, for callers who want runaway output to
+    * fail fast rather than fill the sink. */
   private def nfaRun(
       df: DataFrame,
-      events: Seq[(String, org.apache.spark.sql.Row => Boolean, (org.apache.spark.sql.Row, Map[String, org.apache.spark.sql.Row]) => Boolean)],
-      maxSpan: Double,
+      timeCol: String,
       by: String,
+      events: Seq[Event[Row]],
+      maxSpan: Double,
       maxLiveStatesPerKey: Int,
       maxMatchesPerKey: Long,
-      timeCol: String,
-      outSchema: org.apache.spark.sql.types.StructType,
-      emitRow: (Any, Vector[(String, org.apache.spark.sql.Row)]) => org.apache.spark.sql.Row)
-      : org.apache.spark.sql.Dataset[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.{Encoder, Encoders, Row}
+      outSchema: StructType)(
+      emitRow: (Any, Vector[(String, Row)]) => Row): DataFrame = {
     require(events.nonEmpty)
-    val tIdx = df.columns.indexOf(timeCol)
     val keyIdx = df.columns.indexOf(by)
+    val tIdx = df.columns.indexOf(timeCol)
+    val evs = events.toIndexedSeq
+    val time = (r: Row) => seconds(r.get(tIdx))
     implicit val enc: Encoder[Row] = Encoders.row(outSchema)
     // no explicit count: picks up the shuffle-partitions conf (which may
     // be non-numeric, e.g. "auto") and lets AQE coalesce natively; hash
     // partitioning co-locates each key at any partition count
-    df.repartition(col(by))
+    df.filter(col(by).isNotNull && col(timeCol).isNotNull)
+      .repartition(col(by))
       .sortWithinPartitions(col(by), col(timeCol))
       .mapPartitions { rows =>
         new Iterator[Row] {
-          // per-row output queue: at most (live states completing on this
-          // row + 1) matches — bounded by the live cap, never by key size
           private val pending = scala.collection.mutable.Queue.empty[Row]
-          private var curKey: Any = null
+          private var key: Any = null
           private var started = false
-          // partial state: matched rows so far, by event name, in order;
-          // liveN tracks live's length (List.length is O(n) per call)
           private var live = List.empty[Vector[(String, Row)]]
-          private var liveN = 0
-          private var matchesForKey = 0L
-          private def t(r: Row) = timeAsDouble(r.get(tIdx))
+          private var matches = 0L
           private def emit(matched: Vector[(String, Row)]): Unit = {
-            matchesForKey += 1
-            if (maxMatchesPerKey > 0 && matchesForKey > maxMatchesPerKey)
+            matches += 1
+            if (maxMatchesPerKey > 0 && matches > maxMatchesPerKey)
               throw new IllegalStateException(
                 s"CEP match blow-up: > $maxMatchesPerKey complete matches " +
                 s"for one '$by' key inside maxSpan=$maxSpan (all-matches " +
                 "semantics are combinatorial on dense bursts). Tighten " +
                 "event predicates or maxSpan, or raise maxMatchesPerKey.")
-            pending.enqueue(emitRow(curKey, matched))
-          }
-          private def process(r: Row): Unit = {
-            val k = r.get(keyIdx)
-            if (!started || !java.util.Objects.equals(k, curKey)) {
-              curKey = k; started = true
-              live = Nil; liveN = 0; matchesForKey = 0L
-            }
-            val now = t(r)
-            val keep = List.newBuilder[Vector[(String, Row)]]
-            var keepN = 0
-            live.foreach { s =>
-              if (now <= t(s.head._2) + maxSpan) { keep += s; keepN += 1 }
-            }
-            live = keep.result(); liveN = keepN
-            // extend every live state whose next event matches (all-
-            // matches semantics, like the reference's DFS); then try
-            // starting fresh
-            var extN = 0
-            val extended = live.flatMap { s =>
-              val (name, self, cross) = events(s.length)
-              val ctx = s.toMap
-              if (self(r) && cross(r, ctx) && now > t(s.last._2)) {
-                val ns = s :+ (name -> r)
-                if (ns.length == events.length) {
-                  emit(ns); None
-                } else { extN += 1; Some(ns) }
-              } else None
-            }
-            val (n0, self0, _) = events.head
-            val fresh =
-              if (!self0(r)) Nil
-              else if (events.length == 1) {
-                emit(Vector(n0 -> r)); Nil
-              } else List(Vector(n0 -> r))
-            live = extended ::: fresh ::: live
-            liveN += extN + fresh.length
-            if (liveN > maxLiveStatesPerKey)
-              throw new IllegalStateException(
-                s"CEP state blow-up: > $maxLiveStatesPerKey live partial " +
-                s"matches for one '$by' key inside maxSpan=$maxSpan " +
-                "(all-matches semantics are combinatorial on dense " +
-                "bursts). Tighten event predicates or maxSpan, or raise " +
-                "maxLiveStatesPerKey explicitly.")
+            pending.enqueue(emitRow(key, matched))
           }
           def hasNext: Boolean = {
-            while (pending.isEmpty && rows.hasNext) process(rows.next())
+            while (pending.isEmpty && rows.hasNext) {
+              val r = rows.next()
+              val k = r.get(keyIdx)
+              if (!started || !java.util.Objects.equals(k, key)) {
+                key = k; started = true; live = Nil; matches = 0L
+              }
+              live = nfaStep(evs, time, maxSpan,
+                maxLiveStatesPerKey, s"for one '$by' key")(live, r, emit)
+            }
             pending.nonEmpty
           }
           def next(): Row = {
@@ -209,219 +198,132 @@ object Cep extends Serializable {
           }
         }
       }
+      .toDF()
   }
 
-  /** Serializable compiled SQL predicate over a fixed row layout:
-    * resolved and type-coerced ONCE driver-side (via an empty frame's
-    * analyzed Filter — names, implicit casts, function lookup all go
-    * through the real analyzer), then codegen-compiled lazily per
-    * executor. Null results follow Filter semantics (null → false). */
-  private class CompiledPred(
-      cond: org.apache.spark.sql.catalyst.expressions.Expression,
-      attrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
-      types: Seq[org.apache.spark.sql.types.DataType]) extends Serializable {
-    @transient private lazy val pred =
-      org.apache.spark.sql.catalyst.expressions.Predicate.create(cond, attrs)
-    @transient private lazy val convs = types.map(
-      org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToCatalystConverter)
-    def eval(values: Array[Any]): Boolean = {
-      val c = convs
-      val ir = org.apache.spark.sql.catalyst.InternalRow.fromSeq(
-        Seq.tabulate(values.length)(i => c(i)(values(i))))
-      pred.eval(ir)
+  /** Typed-predicate entry: predicates are Scala functions over the input
+    * row (its columns in `os.df` order), the typed analog of the
+    * reference's string-substituted predicates.
+    * Emits one row per complete match: the key, then `<name>_t` (the
+    * event's time as a double) per event.
+    *
+    * `maxLiveStatesPerKey` is the dense-burst guard on live partial
+    * matches (see [[nfaStep]]); `maxMatchesPerKey` (off when <= 0)
+    * bounds one key's complete matches. */
+  def nfaPatternRecognize(
+      os: OrderedStream,
+      events: Seq[Event[Row]],
+      maxSpan: Double,
+      by: String,
+      maxLiveStatesPerKey: Int = 1 << 20,
+      maxMatchesPerKey: Long = -1L): DataFrame = {
+    checkInput(os, by)
+    val tIdx = os.df.columns.indexOf(os.timeCol)
+    val outSchema = StructType(os.df.schema(by).copy(nullable = false) +:
+      events.map(e => StructField(s"${e._1}_t", DoubleType)))
+    nfaRun(os.df, os.timeCol, by, events, maxSpan, maxLiveStatesPerKey,
+      maxMatchesPerKey, outSchema) { (key, matched) =>
+      Row.fromSeq(key +: matched.map(m => seconds(m._2.get(tIdx))))
     }
   }
 
-  private def compilePred(
-      spark: org.apache.spark.sql.SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      sql: String): CompiledPred = {
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      .filter(expr(sql))
-    val f = empty.queryExecution.analyzed.collectFirst {
-      case fl: org.apache.spark.sql.catalyst.plans.logical.Filter => fl
-    }.getOrElse(throw new IllegalArgumentException(
-      s"CEP predicate did not analyze to a Filter: $sql"))
-    new CompiledPred(f.condition, f.child.output,
-      schema.fields.toSeq.map(_.dataType))
+  /** An event's SQL predicate, analyzed ONCE on the driver (names,
+    * implicit casts and function lookup all go through the real
+    * analyzer, via an empty frame's Filter), then compiled per executor
+    * on first use. It reads only the inputs it references: input k is
+    * column `colIdx(k)` of event `from(k)`'s row, where the predicate's
+    * own event `own` means the current row. Null results count as false,
+    * as in a Filter. */
+  private class CompiledPred(
+      cond: Expression,
+      inputs: Seq[Attribute],
+      from: Array[Int],
+      colIdx: Array[Int],
+      own: Int,
+      names: IndexedSeq[String]) extends Serializable {
+    @transient private lazy val pred = {
+      val p = Predicate.create(cond, inputs)
+      p.initialize(org.apache.spark.TaskContext.getPartitionId())
+      p
+    }
+    @transient private lazy val convs = inputs.map(a =>
+      CatalystTypeConverters.createToCatalystConverter(a.dataType)).toArray
+    def selfOnly: Boolean = from.forall(_ == own)
+    def eval(r: Row, prefix: Map[String, Row]): Boolean = {
+      val values = new Array[Any](colIdx.length)
+      var k = 0
+      while (k < colIdx.length) {
+        val src = if (from(k) == own) r else prefix(names(from(k)))
+        values(k) = convs(k)(src.get(colIdx(k)))
+        k += 1
+      }
+      pred.eval(new GenericInternalRow(values))
+    }
   }
 
-  /** Join-form SEMANTICS executed on the streaming NFA engine: the SQL
-    * event predicates are resolved once driver-side against the
-    * flattened (`a_*`, `b_*`, …) prefix schemas and evaluated per
-    * row/state transition; output is the join form's full payload
-    * schema (`by`, `a_<col>`…, `b_<col>`…). Null `by` keys are dropped
-    * to match equi-join semantics. Linear in events × live states —
-    * immune to the k-way join's candidate blow-up, so this is where
-    * [[patternRecognize]] auto-routes when its density pre-check trips. */
-  def patternRecognizeViaNfa(
+  /** Compile `sql` against `layout`: (field, event index, column index)
+    * per input the predicate may name. */
+  private def compilePred(
+      spark: SparkSession,
+      layout: Seq[(StructField, Int, Int)],
+      sql: String,
+      own: Int,
+      names: IndexedSeq[String]): CompiledPred = {
+    val empty = spark.createDataFrame(
+      new java.util.ArrayList[Row](), StructType(layout.map(_._1)))
+      .filter(expr(sql))
+    val f = empty.queryExecution.analyzed.collectFirst {
+      case fl: Filter => fl
+    }.getOrElse(throw new IllegalArgumentException(
+      s"CEP predicate did not analyze to a Filter: $sql"))
+    val out = f.child.output
+    val used = out.indices.filter(k => f.condition.references.contains(out(k)))
+    new CompiledPred(f.condition, used.map(out), used.map(layout(_)._2).toArray,
+      used.map(layout(_)._3).toArray, own, names)
+  }
+
+  /** SQL-predicate entry. Later predicates may reference earlier events'
+    * columns as `name.column` (e.g. `"b.value > a.value"`); a predicate
+    * may also name its own event's columns bare (`"v < 20"`). Each
+    * predicate compiles once on the driver against the flattened
+    * `<name>_<column>` layout of its event and the ones before it. The
+    * output is `by`, then `<name>_<column>` for every non-key column of
+    * every event, in event order and with the source types.
+    *
+    * `maxLiveStatesPerKey` and `maxMatchesPerKey` are the guards of
+    * [[nfaPatternRecognize]]. */
+  def patternRecognize(
       os: OrderedStream,
       events: Seq[(String, String)],
       maxSpan: Double,
       by: String,
       maxLiveStatesPerKey: Int = 1 << 20,
       maxMatchesPerKey: Long = -1L): DataFrame = {
-    import org.apache.spark.sql.Row
-    require(events.nonEmpty)
-    val spark = os.df.sparkSession
-    val df = os.df.filter(col(by).isNotNull)
-    val payload = df.columns.toSeq.filterNot(_ == by)
-    val payloadIdx = payload.map(c => df.columns.indexOf(c)).toArray
-    val names = events.map(_._1)
-    def stepSchema(i: Int) = org.apache.spark.sql.types.StructType(
-      (0 to i).flatMap { j =>
-        payload.map(c => df.schema(c).copy(name = s"${names(j)}_$c"))
-      })
-    val preds = events.zipWithIndex.map { case ((_, pr), i) =>
-      compilePred(spark, stepSchema(i), rewrite(pr))
-    }
-    val nP = payload.length
-    val nfaEvents = events.zipWithIndex.map { case ((nm, _), i) =>
-      val p = preds(i)
-      if (i == 0)
-        (nm,
-          (r: Row) => {
-            val vals = new Array[Any](nP)
-            var k = 0
-            while (k < nP) { vals(k) = r.get(payloadIdx(k)); k += 1 }
-            p.eval(vals)
-          },
+    checkInput(os, by)
+    val schema = os.df.schema
+    val cols = schema.fieldNames.toIndexedSeq
+    val payload = cols.indices.filterNot(cols(_) == by)
+    val names = events.map(_._1).toIndexedSeq
+    def flat(j: Int) = payload.map(c =>
+      (schema(c).copy(name = s"${names(j)}_${cols(c)}"), j, c))
+    val nfaEvents = names.indices.map { i =>
+      val prefix = (0 to i).flatMap(flat)
+      val taken = prefix.map(_._1.name.toLowerCase).toSet
+      val own = cols.indices.filterNot(c => taken(cols(c).toLowerCase))
+        .map(c => (schema(c), i, c))
+      val p = compilePred(os.df.sparkSession, prefix ++ own,
+        rewrite(events(i)._2), i, names)
+      if (p.selfOnly)
+        (names(i), (r: Row) => p.eval(r, Map.empty),
           (_: Row, _: Map[String, Row]) => true)
-      else {
-        val priorNames = names.take(i)
-        (nm,
-          (_: Row) => true,
-          (r: Row, ctx: Map[String, Row]) => {
-            val vals = new Array[Any]((i + 1) * nP)
-            var j = 0
-            while (j < i) {
-              val pr = ctx(priorNames(j))
-              var k = 0
-              while (k < nP) {
-                vals(j * nP + k) = pr.get(payloadIdx(k)); k += 1
-              }
-              j += 1
-            }
-            var k = 0
-            while (k < nP) { vals(i * nP + k) = r.get(payloadIdx(k)); k += 1 }
-            p.eval(vals)
-          })
-      }
+      else
+        (names(i), (_: Row) => true,
+          (r: Row, matched: Map[String, Row]) => p.eval(r, matched))
     }
-    val outSchema = org.apache.spark.sql.types.StructType(
-      df.schema(by) +: stepSchema(events.length - 1).fields.toSeq)
-    nfaRun(df, nfaEvents, maxSpan, by, maxLiveStatesPerKey,
-      maxMatchesPerKey, os.timeCol, outSchema,
-      (key, matched) => Row.fromSeq(
-        key +: matched.flatMap { case (_, r) => payloadIdx.map(r.get) }))
-      .toDF(outSchema.fieldNames.toSeq: _*)
-  }
-
-  /** Join-form pattern recognition. `maxCandidatesPerKey` is the dense-
-    * burst guard the NFA form has natively: before joining, one cheap
-    * aggregation job upper-bounds the candidate tuples any single
-    * (key, maxSpan-bucket) can emit — first-event rows in the bucket ×
-    * Π(later-event rows in the bucket and the next one; a match spans at
-    * most two buckets since every event lies within maxSpan of the
-    * first). Self-predicates prefilter the counts; cross-event conjuncts
-    * can only shrink the true number, so the estimate stays an upper
-    * bound. When the cap trips, the query AUTO-ROUTES to
-    * [[patternRecognizeViaNfa]] (round-8: the streaming NFA is
-    * unconditionally hot-key-safe, so dense data degrades to the linear
-    * incremental plan instead of failing) — same semantics, same output
-    * schema; pass `autoRouteToNfa = false` to get the old fail-fast
-    * throw. Pass `maxCandidatesPerKey <= 0` to skip the pre-check (and
-    * its extra scan) when density is known. */
-  def patternRecognize(
-      os: OrderedStream,
-      events: Seq[(String, String)],
-      maxSpan: Double,
-      by: String,
-      maxCandidatesPerKey: Long = 1L << 24,
-      autoRouteToNfa: Boolean = true): DataFrame = {
-    require(events.nonEmpty)
-    val t = os.timeCol
-    val payload = os.df.columns.toSeq.filterNot(_ == by)
-
-    // Per-event stream: payload columns prefixed name_, key kept as-is.
-    def eventDf(name: String, pred: String): DataFrame = {
-      val renamed = os.df.select(
-        col(by) +: payload.map(c => col(c).as(s"${name}_$c")): _*)
-      if (referenced(pred).subsetOf(Set(name)))
-        renamed.filter(expr(rewrite(pred)))  // pure self-predicate: prefilter
-      else renamed
+    val outSchema = StructType(schema(by) +: names.indices.flatMap(flat).map(_._1))
+    nfaRun(os.df, os.timeCol, by, nfaEvents, maxSpan, maxLiveStatesPerKey,
+      maxMatchesPerKey, outSchema) { (key, matched) =>
+      Row.fromSeq(key +: matched.flatMap { case (_, r) => payload.map(r.get) })
     }
-
-    if (maxCandidatesPerKey > 0 && events.length > 1) {
-      val k = events.length
-      // (key, bucket, event) → row count; later events also credited to
-      // the previous bucket (starts there can still use them).
-      val tagged = events.zipWithIndex.map { case ((nm, pr), i) =>
-        val base = eventDf(nm, pr).select(col(by).as("__k"),
-          floor(col(s"${nm}_$t").cast(DoubleType) / lit(maxSpan))
-            .cast("long").as("__w"),
-          lit(i).as("__e"))
-        if (i == 0) base
-        else base.select(col("__k"),
-          explode(array(col("__w"), col("__w") - 1)).as("__w"), col("__e"))
-      }.reduce(_ unionByName _)
-      // log2 of the per-(key, bucket) product bound — products of counts
-      // overflow long fast, their logs never do.
-      val bound = tagged.groupBy("__k", "__w", "__e")
-        .agg(count(lit(1)).as("__n"))
-        .groupBy("__k", "__w").agg(
-          sum(when(col("__e") === 0, col("__n")).otherwise(lit(0))).as("__c0"),
-          sum(when(col("__e") > 0, log2(col("__n")))).as("__ls"),
-          countDistinct(when(col("__e") > 0, col("__e"))).as("__ne"))
-        .filter(col("__c0") > 0 && col("__ne") === (k - 1))
-        .agg(max(log2(col("__c0")) + col("__ls"))).head()
-      val maxLog =
-        if (bound.isNullAt(0)) Double.NegativeInfinity else bound.getDouble(0)
-      if (maxLog > math.log(maxCandidatesPerKey.toDouble) / math.log(2)) {
-        if (autoRouteToNfa) {
-          // visible, not capped: the route must reproduce the join form's
-          // FULL result (PropertySpec pins routed == joined), and the
-          // pre-check bound is a loose candidate-tuple estimate — actual
-          // matches may be far fewer, so a derived match cap would fail
-          // legitimate dense queries. The warning keeps the density
-          // visible; callers needing a hard output bound call
-          // nfaPatternRecognize with maxMatchesPerKey directly.
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            f"CEP join-form candidate bound ~2^$maxLog%.1f exceeds " +
-            f"$maxCandidatesPerKey; auto-routing to the streaming NFA " +
-            "(match volume unbounded — the NFA caps live state, not output)")
-          return patternRecognizeViaNfa(os, events, maxSpan, by)
-        }
-        throw new IllegalStateException(
-          f"CEP join-form candidate blow-up: a single ('$by', maxSpan-" +
-          f"bucket) group could emit ~2^$maxLog%.1f > $maxCandidatesPerKey " +
-          "candidate tuples through the k-way range join. Use " +
-          "nfaPatternRecognize (incremental, live-state-capped), tighten " +
-          "event predicates or maxSpan, or raise maxCandidatesPerKey " +
-          "explicitly.")
-      }
-    }
-
-    val (n0, p0) = events.head
-    var acc = eventDf(n0, p0)
-    if (!referenced(p0).subsetOf(Set(n0)))
-      acc = acc.filter(expr(rewrite(p0)))
-    var prevName = n0
-
-    for ((name, pred) <- events.tail) {
-      val next = eventDf(name, pred)
-      val cond =
-        col(s"${name}_$t").cast(DoubleType) > col(s"${prevName}_$t").cast(DoubleType) &&
-        col(s"${name}_$t").cast(DoubleType) <=
-          col(s"${n0}_$t").cast(DoubleType) + maxSpan
-      var joined = acc.join(next, Seq(by)).filter(cond)
-      if (!referenced(pred).subsetOf(Set(name)))
-        joined = joined.filter(expr(rewrite(pred)))
-      acc = joined
-      prevName = name
-    }
-    acc
   }
 }

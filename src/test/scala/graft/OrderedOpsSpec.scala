@@ -284,6 +284,37 @@ class OrderedOpsSpec extends SparkSpecBase {
       Seq("a" -> "v < 20", "b" -> "v > 40"), maxSpan = 5L, by = "k")
     assert(out.select("k").collect().map(_.getString(0)).toSeq == Seq("u1"))
   }
+
+  test("CEP entries raise typed errors on the driver before any job") {
+    import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
+    val s = spark
+    import s.implicits._
+    val base = Seq(("u1", 1.0, 10.0)).toDF("k", "t", "v")
+    val typed: Seq[Cep.Event[Row]] =
+      Seq(("a", (_: Row) => true, (_: Row, _: Map[String, Row]) => true))
+    // each case through both entries: SQL and typed predicates
+    def error(df: DataFrame, time: String, by: String): Seq[AnalysisException] = {
+      val os = new OrderedStream(df, time)
+      Seq(() => Cep.patternRecognize(os, Seq("a" -> "v > 0"), 5.0, by),
+        () => Cep.nfaPatternRecognize(os, typed, 5.0, by)).map { build =>
+        var e: AnalysisException = null
+        assert(jobsDuring { e = intercept[AnalysisException](build()) } == 0)
+        e
+      }
+    }
+    (error(base, "t", "user") ++ error(base, "ts", "k")).foreach { e =>
+      assert(e.getCondition == "UNRESOLVED_COLUMN.WITH_SUGGESTION", e)
+    }
+    Seq("STRING" -> col("t").cast("string"),
+      "DATE" -> to_date(lit("2024-01-01")),
+      "TIMESTAMP_NTZ" -> to_timestamp_ntz(lit("2024-01-01 00:00:00")))
+      .foreach { case (sqlType, t) =>
+        error(base.withColumn("t", t), "t", "k").foreach { e =>
+          assert(e.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", e)
+          assert(e.getMessageParameters.get("inputType") == s"\"$sqlType\"")
+        }
+      }
+  }
 }
 
 /** Round-10 batch-as-of tie-proofing (the batch twin of

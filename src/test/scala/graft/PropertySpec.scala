@@ -180,12 +180,12 @@ class PropertySpec extends SparkSpecBase {
     assert(got == expect)
   }
 
-  test("NFA CEP agrees with the join formulation on random data") {
+  test("typed and SQL CEP entries agree on random data") {
     val s = spark
     import s.implicits._
     val ev = randEvents(60, 3)
     val os = new OrderedStream(ev.toDF("k", "t", "v"), "t")
-    val joinForm = os.patternRecognize(
+    val sqlForm = os.patternRecognize(
       Seq("a" -> "a.v < 50", "b" -> "b.v > a.v + 20"), maxSpan = 15L, by = "k")
       .select("k", "a_t", "b_t").collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).toSet
@@ -198,7 +198,7 @@ class PropertySpec extends SparkSpecBase {
             r.getDouble(2) > ctx("a").getDouble(2) + 20)),
       maxSpan = 15.0, by = "k")
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).toSet
-    assert(nfaForm == joinForm)
+    assert(nfaForm == sqlForm)
   }
 
   test("NFA CEP guards: live-state cap and match cap trip independently") {
@@ -233,59 +233,67 @@ class PropertySpec extends SparkSpecBase {
     assert(run(500) == 120L * 119 / 2)
   }
 
-  test("join-form CEP guard trips on a dense burst, passes sparse data") {
+  test("SQL CEP output is the key, then each event's payload, with source types") {
     val s = spark
     import s.implicits._
-    val burst = (1 to 200).map(i => ("hot", i.toDouble, 1.0))
-    val os = new OrderedStream(burst.toDF("k", "t", "v"), "t")
-    val pattern = Seq("a" -> "a.v > 0", "b" -> "b.v > 0", "c" -> "c.v > 0")
-    // 200 candidate firsts × (200+200)² later-event slots ≈ 2^25 tuples
-    // — with auto-route disabled, the pre-check fails fast
-    val ex = intercept[IllegalStateException] {
-      os.patternRecognize(pattern, maxSpan = 1000L, by = "k",
-        maxCandidatesPerKey = 100000L, autoRouteToNfa = false)
-    }
-    assert(ex.getMessage.contains("CEP join-form candidate blow-up"))
-    // default cap: sparse random data sails through with exact results
+    // a hot and a cold key, so a partition sees a key change mid-stream
+    val rows = (1 to 40).map(i => ("hot", i.toDouble, i.toDouble, i)) ++
+      (1 to 10).map(i => ("cold", i.toDouble, i.toDouble, i))
+    val src = rows.toDF("k", "t", "v", "n")
+    val out = new OrderedStream(src, "t").patternRecognize(
+      Seq("a" -> "a.v < 30", "b" -> "b.v > a.v + 5"), maxSpan = 100L, by = "k")
+    val expectFields = src.schema("k") +: Seq("a", "b").flatMap(e =>
+      Seq("t", "v", "n").map(c => src.schema(c).copy(name = s"${e}_$c")))
+    assert(out.schema.map(f => (f.name, f.dataType)) ==
+      expectFields.map(f => (f.name, f.dataType)))
+    val got = out.select("k", "a_n", "b_n").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toSet
+    val brute = (for {
+      (k1, t1, v1, n1) <- rows if v1 < 30
+      (k2, t2, v2, n2) <- rows
+      if k2 == k1 && t2 > t1 && t2 <= t1 + 100.0 && v2 > v1 + 5
+    } yield (k1, n1, n2)).toSet
+    assert(got == brute)
+  }
+
+  test("SQL CEP builds without running a job, then matches sparse data exactly") {
+    val s = spark
+    import s.implicits._
     val ev = randEvents(60, 3)
-    val os2 = new OrderedStream(ev.toDF("k", "t", "v"), "t")
-    val got = os2.patternRecognize(
-      Seq("a" -> "a.v < 50", "b" -> "b.v > a.v + 20"), maxSpan = 15L, by = "k")
-      .count()
+    val os = new OrderedStream(ev.toDF("k", "t", "v"), "t")
+    var out: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring {
+      out = os.patternRecognize(
+        Seq("a" -> "a.v < 50", "b" -> "b.v > a.v + 20"), maxSpan = 15L, by = "k")
+    } == 0)
     val expect = (for {
       (k1, t1, v1) <- ev if v1 < 50
       (k2, t2, v2) <- ev
       if k2 == k1 && t2 > t1 && t2 <= t1 + 15.0 && v2 > v1 + 20
     } yield 1).size
-    assert(got == expect)
+    assert(out.count() == expect)
   }
 
-  test("dense join-form CEP auto-routes to the NFA with identical results") {
+  test("SQL CEP drops null-time and null-key rows, like brute force") {
     val s = spark
     import s.implicits._
-    // small but over-cap burst so the routed NFA result is brute-force
-    // checkable; plus a second key to exercise key-change detection
-    val rows = (1 to 40).map(i => ("hot", i.toDouble, i.toDouble)) ++
-      (1 to 10).map(i => ("cold", i.toDouble, i.toDouble))
-    val os = new OrderedStream(rows.toDF("k", "t", "v"), "t")
-    val pattern = Seq("a" -> "a.v < 30", "b" -> "b.v > a.v + 5")
-    // tiny cap → pre-check trips → auto-route (default on)
-    val routed = os.patternRecognize(pattern, maxSpan = 100L, by = "k",
-      maxCandidatesPerKey = 10L)
-    // same query through the join path (pre-check skipped)
-    val joined = os.patternRecognize(pattern, maxSpan = 100L, by = "k",
-      maxCandidatesPerKey = -1L)
-    assert(routed.columns.toSeq == joined.columns.toSeq,
-      s"${routed.columns.toSeq} vs ${joined.columns.toSeq}")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|"))
-    assert(canon(routed).toSeq == canon(joined).toSeq)
-    val brute = (for {
-      (k1, t1, v1) <- rows if v1 < 30
-      (k2, t2, v2) <- rows
-      if k2 == k1 && t2 > t1 && t2 <= t1 + 100.0 && v2 > v1 + 5
-    } yield 1).size
-    assert(routed.count() == brute)
+    // every fourth time and every seventh key null
+    val ev = randEvents(80, 3).zipWithIndex.map { case ((k, t, v), i) =>
+      (Option.when(i % 7 != 3)(k), Option.when(i % 4 != 1)(t), v)
+    }
+    val os = new OrderedStream(ev.toDF("k", "t", "v"), "t")
+    val got = os.patternRecognize(
+      Seq("a" -> "a.v < 50", "b" -> "b.v > a.v + 10"), maxSpan = 20L, by = "k")
+      .select("k", "a_t", "b_t").collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).toSet
+    val known = ev.collect { case (Some(k), Some(t), v) => (k, t, v) }
+    val expect = (for {
+      (k1, t1, v1) <- known if v1 < 50
+      (k2, t2, v2) <- known
+      if k2 == k1 && t2 > t1 && t2 <= t1 + 20.0 && v2 > v1 + 10
+    } yield (k1, t1, t2)).toSet
+    assert(expect.nonEmpty)
+    assert(got == expect)
   }
 
   test("minhash similarity estimate tracks true jaccard (monotone check)") {
