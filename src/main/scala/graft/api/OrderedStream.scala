@@ -36,29 +36,21 @@ class OrderedStream(df0: DataFrame, val timeCol: String) extends DataStream(df0)
     new OrderedStream(df.withColumns(shifted), timeCol)
   }
 
-  /** Backward as-of join per `by` symbol (reference `join_asof`,
+  /** As-of join per `by` symbol (reference `join_asof`,
     * orderedstream.py:114-191 + SortedAsofExecutor ts_executors.py:324-383):
-    * [[graft.ts.AsofJoin]] with `AsofDirection.Backward`, the sorted-merge
-    * `AsofJoinExec`. */
+    * [[graft.ts.AsofJoin]], the sorted-merge `AsofJoinExec`. `direction`
+    * picks the latest right row at-or-before each left time (`Backward`),
+    * the earliest at-or-after it (`Forward`, polars `strategy="forward"`,
+    * used by the reference backtester, apps/rottnest/backtester.py:59) or
+    * the closer of the two (`Nearest`). */
   def asofJoin(
       right: OrderedStream,
       by: String,
       suffix: String = "_right",
-      tolerance: Option[Long] = None): OrderedStream =
-    graft.ts.AsofJoin(this, right, by, graft.plans.AsofDirection.Backward,
-      suffix, tolerance)
-
-  /** Forward as-of join: earliest right row at-or-after each left time
-    * (polars `strategy="forward"`, used by the reference backtester,
-    * apps/rottnest/backtester.py:59) — [[graft.ts.AsofJoin]] with
-    * `AsofDirection.Forward`. */
-  def asofJoinForward(
-      right: OrderedStream,
-      by: String,
-      suffix: String = "_right",
-      tolerance: Option[Long] = None): OrderedStream =
-    graft.ts.AsofJoin(this, right, by, graft.plans.AsofDirection.Forward,
-      suffix, tolerance)
+      tolerance: Option[Long] = None,
+      direction: graft.plans.AsofDirection = graft.plans.AsofDirection.Backward)
+      : OrderedStream =
+    graft.ts.AsofJoin(this, right, by, direction, suffix, tolerance)
 
   /** Windowed aggregation (reference `windowed_transform`,
     * datastream.py:1650-1700) — spec × trigger per SURVEY §2.9. */

@@ -1010,8 +1010,9 @@ object Multimodal {
   /** REAL image resize: decode with `javax.imageio`, scale with
     * `Graphics2D` (bilinear), re-encode as PNG — all per-partition, the
     * blob never shuffles. Output schema (id, blob, width, height);
-    * undecodable blobs fall back to [[resize]]'s byte-stride downsample
-    * (so mixed media still flows) with the requested dims recorded. */
+    * undecodable blobs fall back to a deterministic byte-stride
+    * downsample (so mixed media still flows) with the requested dims
+    * recorded. */
   def imageResize(df: DataFrame, idCol: String, blobCol: String,
                   targetW: Int, targetH: Int): DataFrame = {
     val spark = df.sparkSession
@@ -1058,25 +1059,6 @@ object Multimodal {
     val stride = math.max(1, bytes.length / target)
     Array.range(0, math.min(target, bytes.length))
       .map(i => bytes(math.min(i.toLong * stride, bytes.length - 1).toInt))
-  }
-
-  /** STUB resize — deterministic byte-stride downsample standing in for a
-    * real NON-IMAGE media scaler (for images use [[imageResize]], which
-    * is real). Output schema (id, blob, width, height) is the production
-    * shape: resized payload stays binary and never shuffles. */
-  def resize(df: DataFrame, idCol: String, blobCol: String,
-             targetW: Int, targetH: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(blobCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          (id, byteStrideDownsample(bytes, targetW, targetH),
-            targetW, targetH)
-        }
-      }
-      .toDF(idCol, blobCol, "width", "height")
   }
 
   /** STUB feature extraction — a normalized 16-bin byte histogram as the

@@ -161,7 +161,7 @@ object GateQueries {
   /** Sentinel dirs to delete at JVM exit — ONE shared shutdown hook
     * over a concurrent set (round-10 review: the first cut registered a
     * Thread per dir and leaked a DirectoryStream per level). */
-  private[queries] lazy val sweepAtExit: java.util.Set[String] = {
+  private[graft] lazy val sweepAtExit: java.util.Set[String] = {
     val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() => {
       dirs.forEach { dir =>
@@ -290,8 +290,9 @@ object GateQueries {
 
   private[graft] def q105Plan(s: SparkSession, d: String): DataFrame = {
     val ev = eventsStreamWithSentinel(s, d, et = "purchase")
-    graft.streaming.StreamingOps.streamingAsofForward(
-      asofSide(ev, "purchase"), asofSide(ev, "view"), "0 seconds")
+    graft.streaming.StreamingOps.streamingAsof(
+      asofSide(ev, "purchase"), asofSide(ev, "view"), "0 seconds",
+      graft.plans.AsofDirection.Forward)
   }
 
   private[graft] def q128Plan(s: SparkSession, d: String): DataFrame = {
@@ -665,10 +666,11 @@ object GateQueries {
           col("n"), col("value_sum"))
         .orderBy("user_id", "session_start")
     },
-    // TRUE streaming backward as-of join (StreamingOps.streamingAsof:
-    // unbounded two-sided flatMapGroupsWithState with watermark-driven
-    // emission + state trim) driven to completion on the bounded fixture
-    // and gated against the same DuckDB ASOF JOIN oracle as batch q41.
+    // TRUE streaming backward as-of join (StreamingOps.streamingAsof,
+    // Backward: unbounded two-sided flatMapGroupsWithState with
+    // watermark-driven emission + state trim) driven to completion on
+    // the bounded fixture and gated against the same DuckDB ASOF JOIN
+    // oracle as batch q41.
     // With delay 0s the final watermark reaches max event time, so every
     // purchase emits exactly its batch as-of row.
     "q104_streaming_asof" -> { (s, d) =>
@@ -682,7 +684,7 @@ object GateQueries {
         .orderBy("user_id", "tsd")
     },
 
-    // TRUE streaming FORWARD as-of (StreamingOps.streamingAsofForward:
+    // TRUE streaming FORWARD as-of (StreamingOps.streamingAsof, Forward:
     // each alpha fills at the earliest tick at-or-after it, emitted only
     // once the watermark passes the candidate). Every fill candidate is
     // at-or-before the final watermark, so the bounded run emits exactly
@@ -1009,6 +1011,7 @@ object GateQueries {
       import s.implicits._
       val dir = java.nio.file.Files
         .createTempDirectory("graft_q115_snapshots").toString
+      sweepAtExit.add(dir)
       val qc = new QContext(s)
       val region = Tables.region(s, d)
         .select(col("r_regionkey").cast("long").as("k"))
@@ -1561,6 +1564,7 @@ object GateQueries {
       // concurrent catalog builders (spec suite vs Verify at another SF)
       val tmp = java.nio.file.Files
         .createTempDirectory("graft_q98_sorted_csv").toString
+      sweepAtExit.add(tmp)
       val ev = events(s, d).select(col("event_id"), col("user_id"),
         col("ts").cast("double").as("tsd"), col("value"))
       new DataStream(ev.orderBy(col("tsd"))).writeCsv(tmp)

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.api.OrderedStream
 import graft.functions.Det
+import graft.plans.AsofDirection
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -58,7 +59,8 @@ object RottnestQueries {
           col("a.direction").as("direction"))
         .dropDuplicates("symbol", "ts", "direction")
       val fills = new OrderedStream(alphas, "ts")
-        .asofJoinForward(new OrderedStream(trades, "ts"), by = "symbol").df
+        .asofJoin(new OrderedStream(trades, "ts"), by = "symbol",
+          direction = AsofDirection.Forward).df
         .filter(col("price").isNotNull)
         .select(col("symbol"), col("direction"), col("price").as("fill_price"),
           to_date(col("ts_right")).as("fill_day"))

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.plans.AsofDirection
 
 /** Structured Streaming variants of the windowed/stateful operators
   * (SURVEY §2.9 parity-plus — the reference only runs *bounded* streams,
@@ -21,37 +22,30 @@ object StreamingOps {
   /** Hopping (size, hop) or tumbling (size == hop) event-time window agg
     * with watermark — the OnCompletionTrigger analog: a window emits once
     * the watermark passes its end (append mode). */
-  def windowedAgg(
-      df: DataFrame,
-      timeCol: String,
-      key: String,
-      size: String,
-      hop: String,
-      watermarkDelay: String,
-      aggs: Map[String, Column]): DataFrame =
-    df.withWatermark(timeCol, watermarkDelay)
-      .groupBy(col(key), window(col(timeCol), size, hop))
-      .agg(aggs.head._2.as(aggs.head._1),
-        aggs.tail.map { case (n, a) => a.as(n) }.toSeq: _*)
-      .select(Seq(col(key), col("window.start").as("window_start"),
-        col("window.end").as("window_end")) ++
-        aggs.keys.toSeq.map(col): _*)
+  def windowedAgg(df: DataFrame, timeCol: String, key: String, size: String,
+      hop: String, watermarkDelay: String, aggs: Map[String, Column]): DataFrame =
+    keyedWindowAgg(df, timeCol, key, window(col(timeCol), size, hop),
+      "window", "window", watermarkDelay, aggs)
 
   /** Session windows with gap timeout (reference SessionWindow,
     * windowtypes.py:78) via the built-in `session_window`. */
-  def sessionAgg(
-      df: DataFrame,
-      timeCol: String,
-      key: String,
-      gap: String,
-      watermarkDelay: String,
+  def sessionAgg(df: DataFrame, timeCol: String, key: String, gap: String,
+      watermarkDelay: String, aggs: Map[String, Column]): DataFrame =
+    keyedWindowAgg(df, timeCol, key, session_window(col(timeCol), gap),
+      "session_window", "session", watermarkDelay, aggs)
+
+  /** Watermarked per-(key, window) aggregation: `win` is the window
+    * expression Spark names `winName`, and its bounds come out as
+    * `<prefix>_start` / `<prefix>_end`. */
+  private def keyedWindowAgg(df: DataFrame, timeCol: String, key: String,
+      win: Column, winName: String, prefix: String, watermarkDelay: String,
       aggs: Map[String, Column]): DataFrame =
     df.withWatermark(timeCol, watermarkDelay)
-      .groupBy(col(key), session_window(col(timeCol), gap))
+      .groupBy(col(key), win)
       .agg(aggs.head._2.as(aggs.head._1),
         aggs.tail.map { case (n, a) => a.as(n) }.toSeq: _*)
-      .select(Seq(col(key), col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end")) ++
+      .select(Seq(col(key), col(s"$winName.start").as(s"${prefix}_start"),
+        col(s"$winName.end").as(s"${prefix}_end")) ++
         aggs.keys.toSeq.map(col): _*)
 
   /** Watermarked STREAM-STREAM interval join (parity-plus — the
@@ -140,23 +134,11 @@ object StreamingOps {
     df.withWatermark(timeCol, watermarkDelay)
       .dropDuplicates(keys :+ timeCol)
 
-  /** Per-key state for [[streamingAsof]]: buffered quotes/trades not yet
-    * past the watermark. */
-  case class AsofState(
-      quotes: List[(Long, Double)],  // (epochMicros, value)
-      trades: List[(Long, Double)])
-
   /** Epoch MICROS of a Timestamp — `getTime` alone is ms-truncated
     * (the nanos field carries the full fractional second), and fixture
     * event times are µs-precision: buffering ms would silently reorder
     * same-ms events and emit truncated times the oracle compare would
-    * only pass under float tolerance. Ripeness/trim compare in MICROS
-    * against `wm * 1000` (round-8 fix): Spark's late filter drops
-    * exactly `eventTimeMicros <= wmMs * 1000`, so a future event always
-    * has `t > wm * 1000` — an ms-truncated ripeness test (`t/1000 <= wm`)
-    * wrongly ripens a trade with a sub-ms offset inside the watermark's
-    * ms, while a same-ms quote with a larger sub-ms offset can still
-    * legally arrive. */
+    * only pass under float tolerance. */
   private def micros(t: java.sql.Timestamp): Long =
     t.getTime * 1000 + (t.getNanos / 1000) % 1000
   private def toTs(us: Long): java.sql.Timestamp = {
@@ -165,171 +147,131 @@ object StreamingOps {
     t
   }
 
-  /** True streaming backward as-of join — beyond the reference, which
-    * only processes *bounded* sorted streams (its sortedness contract is
-    * the watermark, SURVEY §2.9): here both sides are unbounded and
-    * unordered within the watermark delay.
+  /** The event-time rule of the keyed machines below ([[streamingAsof]],
+    * [[streamingCep]]), read off one invocation's `state`.
     *
-    * Union-tag the two sides, group by symbol, and run a
-    * flatMapGroupsWithState machine per key: buffer both sides, and once
-    * the event-time watermark passes a trade, emit it joined to the
-    * latest quote at-or-before it. State is trimmed to quotes newer than
-    * the single latest one at-or-before the watermark — exactly the
-    * reference's streaming trim (SortedAsofExecutor,
-    * ts_executors.py:359-376) driven by a real watermark instead of
-    * sortedness.
+    * Ripeness is µs-exact (round-8 fix): Spark's late filter drops
+    * exactly `eventTimeMicros <= wmMs * 1000`, so an event is ripe iff
+    * `us <= wmMs * 1000` — every not-yet-arrived event is strictly later,
+    * and a key's ripe events are complete and can run in time order. An
+    * ms-truncated test (`us / 1000 <= wmMs`) would ripen an event with a
+    * sub-ms offset inside the watermark's ms while a same-ms event with a
+    * larger offset can still legally arrive.
     *
-    * Typed shape (key, ts, value) — the generic-schema batch operator is
-    * `graft.ts.AsofJoin`. Output: (key, ts, value, quote_ts, quote_value),
-    * quote fields null when no quote precedes the trade. */
+    * The wake-up for an instant `us` is the first ms whose watermark
+    * ripens it, `us / 1000 + 1` (waking at `us / 1000` would fire with
+    * `wmMs * 1000 < us` and re-pend forever), and never at or before the
+    * current watermark, which Spark rejects. */
+  private final class EventClock(state: GroupState[_]) {
+    val wmMs: Long = state.getCurrentWatermarkMs()
+    val wmUs: Long = wmMs * 1000
+    def ripe(us: Long): Boolean = us <= wmUs
+    /** Wakes the key when the watermark ripens the earliest of `us`. */
+    def wakeAt(us: Iterable[Long]): Unit = us.minOption.foreach(u =>
+      state.setTimeoutTimestamp(math.max(u / 1000 + 1, wmMs + 1)))
+  }
+
+  /** One [[streamingAsof]] input row: µs event time, value, and side. */
+  case class AsofRow(us: Long, value: Double, left: Boolean)
+
+  /** [[streamingAsof]] keyed state: `pending` = arrived rows of either
+    * side the watermark has not passed yet; `carry` = the ripe rows later
+    * ripe rows still need — the last right row (backward) or the ripe
+    * left rows no right row has filled yet (forward). */
+  case class AsofState(pending: List[AsofRow], carry: List[AsofRow])
+
+  /** True streaming as-of join — beyond the reference, which only
+    * processes *bounded* sorted streams (its sortedness contract is the
+    * watermark, SURVEY §2.9): here both sides are unbounded and
+    * unordered within the watermark delay. `direction` is the batch
+    * operator's ([[graft.ts.AsofJoin]]):
+    *   - `Backward`: each left row joins the latest right row at or
+    *     before it (among equal-time right rows, the max value) — the
+    *     reference's SortedAsofExecutor (ts_executors.py:324-383).
+    *     Output (key, ts, value, quote_ts, quote_value), quote fields
+    *     null when no right row precedes the left row.
+    *   - `Forward`: each left row (alpha signal) fills at the earliest
+    *     right row (tick) at or after it (among equal-time right rows,
+    *     the min value) — the streaming form of the reference
+    *     backtester's unfilled-alpha carry (apps/rottnest/backtester.py:
+    *     62-64). Output (key, ts, value, fill_ts, fill_value); a left row
+    *     no right row fills never emits.
+    *   - `Nearest` is not supported and fails here, before any query.
+    *
+    * Union-tag the two sides, group by key, and run one
+    * flatMapGroupsWithState step per key: rows buffer until the
+    * watermark passes them ([[EventClock]]), then run in time order —
+    * at equal times ordered so that a right row at a left row's time
+    * matches in either direction. Backward keeps only the last ripe
+    * right row and emits every ripe left row against it at once (the
+    * reference's watermark-trimmed state); forward holds ripe left rows
+    * until the next ripe right row fills them. A quiet key flushes via
+    * event-time timeout, and a key with no state left is removed.
+    *
+    * Unfilled forward left rows persist indefinitely by default
+    * (reference behavior: the backtester carries unexecuted alphas
+    * forward). `leftTtlMs` (default off = -1) evicts a held left row
+    * the watermark has left more than `leftTtlMs` behind — at 100 TB a
+    * dead symbol otherwise accumulates unfilled state with no escape
+    * hatch, and an evicted row can never emit. A backward left row is
+    * never held, so the TTL has nothing to evict there.
+    *
+    * Typed shape: both sides have columns key, ts (timestamp), value —
+    * the generic-schema batch operator is [[graft.ts.AsofJoin]]. */
   def streamingAsof(
-      trades: DataFrame,   // columns: key, ts (timestamp), value
-      quotes: DataFrame,   // columns: key, ts (timestamp), value
-      watermarkDelay: String): DataFrame = {
-    val spark = trades.sparkSession
+      left: DataFrame,
+      right: DataFrame,
+      watermarkDelay: String,
+      direction: AsofDirection = AsofDirection.Backward,
+      leftTtlMs: Long = -1L): DataFrame = {
+    require(direction != AsofDirection.Nearest,
+      "streamingAsof supports the Backward and Forward directions, not Nearest")
+    val backward = direction == AsofDirection.Backward
+    val spark = left.sparkSession
     import spark.implicits._
-    val tagged = trades.select(col("key").cast("string"), col("ts"),
-        col("value").cast("double"), lit(1).as("side"))
-      .unionByName(quotes.select(col("key").cast("string"), col("ts"),
-        col("value").cast("double"), lit(0).as("side")))
+    def side(df: DataFrame, isLeft: Boolean) = df.select(col("key").cast("string"),
+      col("ts"), col("value").cast("double"), lit(isLeft).as("left"))
+    // time order; at equal times backward takes right rows first (the
+    // last one of them, the max value, is the match) and forward left
+    // rows first (the first right row, the min value, fills them)
+    val order = Ordering.by((r: AsofRow) =>
+      (r.us, if (backward) r.left else !r.left, r.value))
+    val (tsCol, valueCol) =
+      if (backward) ("quote_ts", "quote_value") else ("fill_ts", "fill_value")
+
+    side(left, isLeft = true).unionByName(side(right, isLeft = false))
       .withWatermark("ts", watermarkDelay)
       // keep the watermarked ts column itself through to the stateful op
       // (projecting it away would detach the watermark)
-      .as[(String, java.sql.Timestamp, Double, Int)]
-
-    tagged.groupByKey(_._1)
+      .as[(String, java.sql.Timestamp, Double, Boolean)]
+      .groupByKey(_._1)
       .flatMapGroupsWithState[AsofState,
         (String, java.sql.Timestamp, Double, Option[java.sql.Timestamp], Option[Double])](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) { (key, rows, state) =>
-        // invoked with new rows OR on event-time timeout (watermark passed
-        // a pending trade — without the timeout a quiet key would never
-        // flush its ripe trades)
         val s0 = state.getOption.getOrElse(AsofState(Nil, Nil))
-        var quotes = s0.quotes
-        var trades = s0.trades
-        rows.foreach { case (_, t, v, side) =>
-          val us = micros(t)
-          if (side == 0) quotes = (us, v) :: quotes else trades = (us, v) :: trades
+        val clock = new EventClock(state)
+        val (ripe, pending) = rows.foldLeft(s0.pending) { case (p, (_, t, v, l)) =>
+          AsofRow(micros(t), v, l) :: p
+        }.partition(r => clock.ripe(r.us))
+        val out = List.newBuilder[
+          (String, java.sql.Timestamp, Double, Option[java.sql.Timestamp], Option[Double])]
+        def emit(l: AsofRow, r: Option[AsofRow]): Unit =
+          out += ((key, toTs(l.us), l.value, r.map(m => toTs(m.us)), r.map(_.value)))
+        val carry = ripe.sorted(order).foldLeft(s0.carry) { (c, r) =>
+          if (backward) { if (r.left) { emit(r, c.headOption); c } else List(r) }
+          else if (r.left) r :: c
+          else { c.reverseIterator.foreach(emit(_, Some(r))); Nil }
         }
-        val wm = state.getCurrentWatermarkMs()
-        val wmUs = wm * 1000
-        // (ts, value) order — among equal-ts quotes the MAX value wins
-        // (lastOption below), a deterministic tie-break that is arrival-
-        // order-independent and mirrored by the q104 oracle (round-10:
-        // sorting by ts alone left the winner to buffer order)
-        val qSorted = quotes.sortBy(q => (q._1, q._2))
-        // ripe in MICROS: a trade is complete iff tus <= wm*1000 — any
-        // not-yet-arrived quote is strictly later than wm*1000 (Spark
-        // late-drops eventTimeMicros <= wm*1000), so no future quote can
-        // precede a ripe trade. An ms-truncated test would wrongly ripen
-        // a sub-ms-offset trade whose matching same-ms quote is still
-        // legally in flight.
-        val (ripe, pending) = trades.sortBy(_._1).partition(_._1 <= wmUs)
-        val out = ripe.map { case (tus, tv) =>
-          val m = qSorted.takeWhile(_._1 <= tus).lastOption
-          (key, toTs(tus), tv, m.map(q => toTs(q._1)), m.map(_._2))
+        val kept = if (backward || leftTtlMs < 0) carry
+          else carry.filter(_.us > clock.wmUs - leftTtlMs * 1000)
+        if (pending.isEmpty && kept.isEmpty) state.remove()
+        else {
+          state.update(AsofState(pending, kept))
+          clock.wakeAt(pending.map(_.us))
         }
-        // trim (same µs predicate): the latest quote at-or-before the
-        // watermark still serves future trades (every pending trade is
-        // strictly after wm*1000, as is every future quote); older ones
-        // never match again.
-        val (past, future) = qSorted.partition(_._1 <= wmUs)
-        state.update(AsofState(past.takeRight(1) ++ future, pending))
-        // wake at tus/1000 + 1: the first ms whose watermark ripens a
-        // sub-ms-pending trade (wake at tus/1000 would fire with
-        // wm*1000 < tus and re-pend forever)
-        pending.headOption.foreach { case (tus, _) =>
-          state.setTimeoutTimestamp(math.max(tus / 1000 + 1, wm + 1))
-        }
-        out.iterator
+        out.result().iterator
       }
-      .toDF("key", "ts", "value", "quote_ts", "quote_value")
-  }
-
-  /** True streaming FORWARD as-of: each left row (alpha signal) fills at
-    * the earliest right row (tick) with tick.ts >= alpha.ts — the
-    * streaming form of the reference backtester's unfilled-alpha carry
-    * (apps/rottnest/backtester.py:62-64 prepends unexecuted alphas for
-    * the next batch; here they are keyed state).
-    *
-    * Emission is watermark-correct: a fill (alpha t, candidate tick c) is
-    * emitted only once the watermark passes c.ts (µs-exact: ripe iff
-    * c.us <= wm*1000, since any future tick is strictly later) — before
-    * that, a not-yet-arrived tick inside (t, c.ts) could still be the
-    * true first match. State trim: only the candidate ticks still
-    * reachable by pending/future alphas are kept (same µs predicate);
-    * unfilled alphas persist indefinitely by default (reference
-    * behavior: the backtester carries unexecuted alphas forward).
-    *
-    * `alphaTtlMs` (round-7 verdict item 5, default off = -1): at 100 TB a
-    * dead symbol otherwise accumulates unfilled-alpha state with no
-    * escape hatch. When set, an unfilled alpha older than
-    * `watermark - alphaTtlMs` is evicted (it can then never emit — the
-    * deployable trade-off a caller opts into knowingly). Output:
-    * (key, ts, value, fill_ts, fill_value), append mode. */
-  def streamingAsofForward(
-      alphas: DataFrame,   // columns: key, ts (timestamp), value
-      ticks: DataFrame,    // columns: key, ts (timestamp), value
-      watermarkDelay: String,
-      alphaTtlMs: Long = -1L): DataFrame = {
-    val spark = alphas.sparkSession
-    import spark.implicits._
-    val tagged = alphas.select(col("key").cast("string"), col("ts"),
-        col("value").cast("double"), lit(1).as("side"))
-      .unionByName(ticks.select(col("key").cast("string"), col("ts"),
-        col("value").cast("double"), lit(0).as("side")))
-      .withWatermark("ts", watermarkDelay)
-      .as[(String, java.sql.Timestamp, Double, Int)]
-
-    tagged.groupByKey(_._1)
-      .flatMapGroupsWithState[AsofState,
-        (String, java.sql.Timestamp, Double, java.sql.Timestamp, Double)](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) { (key, rows, state) =>
-        val s0 = state.getOption.getOrElse(AsofState(Nil, Nil))
-        var tickBuf = s0.quotes
-        var alphaBuf = s0.trades
-        rows.foreach { case (_, t, v, side) =>
-          val us = micros(t)
-          if (side == 0) tickBuf = (us, v) :: tickBuf
-          else alphaBuf = (us, v) :: alphaBuf
-        }
-        val wm = state.getCurrentWatermarkMs()
-        val wmUs = wm * 1000
-        // (ts, value) order — among equal-ts ticks the MIN value wins
-        // (find below takes the first), deterministic and mirrored by
-        // the q105 oracle (round-10 tie-proofing)
-        val tSorted = tickBuf.sortBy(t => (t._1, t._2))
-        // candidate = earliest tick at-or-after the alpha (µs-exact);
-        // ripe in MICROS once the watermark has passed the candidate —
-        // any not-yet-arrived tick is strictly later than wm*1000
-        // (Spark late-drops eventTimeMicros <= wm*1000), so no future
-        // tick can beat a ripe candidate
-        val withCand = alphaBuf.sortBy(_._1).map { case (aus, av) =>
-          ((aus, av), tSorted.find(_._1 >= aus))
-        }
-        val (ripe, pending) = withCand.partition {
-          case (_, Some((cus, _))) => cus <= wmUs
-          case _ => false
-        }
-        val out = ripe.map { case ((aus, av), Some((cus, cv))) =>
-          (key, toTs(aus), av, toTs(cus), cv)
-        }
-        // optional TTL: evict unfilled alphas the watermark has left
-        // more than alphaTtlMs behind (off by default — reference carry)
-        val kept = if (alphaTtlMs < 0) pending
-          else pending.filter { case ((aus, _), _) =>
-            aus > wmUs - alphaTtlMs * 1000
-          }
-        state.update(AsofState(
-          tSorted.filter(_._1 > wmUs), kept.map(_._1)))
-        // wake at cus/1000 + 1: the first ms whose watermark ripens the
-        // earliest sub-ms-pending candidate
-        kept.flatMap(_._2.map(_._1)).minOption.foreach { cus =>
-          state.setTimeoutTimestamp(math.max(cus / 1000 + 1, wm + 1))
-        }
-        out.iterator
-      }
-      .toDF("key", "ts", "value", "fill_ts", "fill_value")
+      .toDF("key", "ts", "value", tsCol, valueCol)
   }
 
   /** Event as seen by [[streamingCep]] predicates: µs event time, type
@@ -356,9 +298,9 @@ object StreamingOps {
     * Semantics are identical to the batch NFA (all-matches, strictly
     * increasing event times within a match, `maxSpan` from the first
     * event): events buffer per key until the watermark passes them
-    * (µs-exact, like [[streamingAsof]]: ripe iff us <= wm*1000 — every
-    * not-yet-arrived event is strictly later, so the per-key
-    * time-order scan the NFA needs is complete up to the watermark),
+    * (µs-exact, [[EventClock]]: every not-yet-arrived event is strictly
+    * later, so the per-key time-order scan the NFA needs is complete up
+    * to the watermark),
     * then run in time order through [[graft.ts.Cep.nfaStep]], the
     * batch engine's transition function, with times in `tsd` seconds.
     * Emission is append-mode correct: a match emits exactly once, when
@@ -403,12 +345,10 @@ object StreamingOps {
       .flatMapGroupsWithState[CepState, Row](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) { (key, rows, state) =>
         val s0 = state.getOption.getOrElse(CepState(Nil, Nil))
-        val pending = rows.foldLeft(s0.pending) { case (p, (_, t, et, v)) =>
+        val clock = new EventClock(state)
+        val (ripe, rest) = rows.foldLeft(s0.pending) { case (p, (_, t, et, v)) =>
           CepEv(micros(t), et, v) :: p
-        }
-        val wm = state.getCurrentWatermarkMs()
-        val wmUs = wm * 1000
-        val (ripe, rest) = pending.sortBy(_.us).partition(_.us <= wmUs)
+        }.sortBy(_.us).partition(e => clock.ripe(e.us))
         var matches = 0L
         val out = List.newBuilder[Row]
         def emit(matched: Vector[(String, CepEv)]): Unit = {
@@ -426,16 +366,14 @@ object StreamingOps {
         }.filter(s =>
           // a live state whose head the watermark has left maxSpan
           // behind can never be extended (every future event is > wm)
-          wmUs / 1e6 <= s.head._2.tsd + maxSpanSeconds)
+          clock.wmUs / 1e6 <= s.head._2.tsd + maxSpanSeconds)
         if (rest.isEmpty && live.isEmpty) state.remove()
         else {
           state.update(CepState(rest, live.map(_.toList)))
           // wake when the earliest pending event ripens, or when the
           // earliest live state expires — whichever is sooner
           val spanUs = (maxSpanSeconds * 1e6).toLong
-          val wake = (rest.map(_.us / 1000 + 1) ++
-            live.map(s => (s.head._2.us + spanUs) / 1000 + 1)).minOption
-          wake.foreach(w => state.setTimeoutTimestamp(math.max(w, wm + 1)))
+          clock.wakeAt(rest.map(_.us) ++ live.map(_.head._2.us + spanUs))
         }
         out.result().iterator
       }

@@ -325,9 +325,10 @@ object BaselineBench {
       // conditional agg (plain IEEE sums — comparator parity)
       def engineBt() = {
         import graft.api.OrderedStream
+        import graft.plans.AsofDirection
         val fills = new OrderedStream(alphas(), "ts")
-          .asofJoinForward(new OrderedStream(trades(), "ts"),
-            by = "symbol").df
+          .asofJoin(new OrderedStream(trades(), "ts"),
+            by = "symbol", direction = AsofDirection.Forward).df
           .filter(col("price").isNotNull)
           .select(col("symbol"), col("direction"),
             col("price").as("fill_price"),
@@ -428,9 +429,10 @@ object BaselineBench {
       // the as-of fill step alone — the dominant stage at tick scale
       def engineFill() = {
         import graft.api.OrderedStream
+        import graft.plans.AsofDirection
         new OrderedStream(alphas(), "ts")
-          .asofJoinForward(new OrderedStream(trades(), "ts"),
-            by = "symbol").df
+          .asofJoin(new OrderedStream(trades(), "ts"),
+            by = "symbol", direction = AsofDirection.Forward).df
       }
       val eF = timed(() => graft.Bench.force(engineFill()))
       record("tick as-of fill only", eF, eF,

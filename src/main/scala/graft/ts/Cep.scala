@@ -39,9 +39,13 @@ object Cep extends Serializable {
     * predicate on the event plus the matched prefix by event name. */
   type Event[E] = (String, E => Boolean, (E, Map[String, E]) => Boolean)
 
-  /** Rewrite `name.column` references to the flattened `name_column`. */
+  /** Rewrite `name.column` references to the flattened `name_column`,
+    * leaving quoted SQL string literals (`'example.com'`) as written. */
   private[ts] def rewrite(pred: String): String =
-    pred.replaceAll("""\b([A-Za-z_]\w*)\.([A-Za-z_]\w*)""", "$1_$2")
+    refOrLiteral.replaceAllIn(pred, m => scala.util.matching.Regex.quoteReplacement(
+      if (m.group(1) != null) m.group(1) else s"${m.group(2)}_${m.group(3)}"))
+  private val refOrLiteral =
+    """('(?:[^'\\]|\\.)*'|"(?:[^"\\]|\\.)*")|\b([A-Za-z_]\w*)\.([A-Za-z_]\w*)""".r
 
   /** The NFA's transition on one event `ev` of one key. `live` holds the
     * key's partial matches, newest first, each the matched (event name,

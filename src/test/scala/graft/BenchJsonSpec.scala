@@ -55,6 +55,15 @@ class BenchJsonSpec extends AnyFunSuite {
     assert(node.get("queries").get(err).asDouble() == -1.0)
   }
 
+  test("jsonStr round-trips multi-line SQL and every control character") {
+    // oracle_sql.json carries SQL with newlines, tabs and quotes
+    val sql = "SELECT 'a\"b' AS x,\r\n\t\\ FROM t" +
+      (0 until 0x20).map(_.toChar).mkString
+    val enc = Bench.jsonStr(sql)
+    assert(!enc.exists(_ < ' '), "raw control char in the encoding")
+    assert(mapper.readTree(enc).asText() == sql)
+  }
+
   test("cpus parses as a positive integer and fails loudly otherwise") {
     assert(Bench.parseCpus("8") == 8)
     assert(Bench.parseCpus(" 32 ") == 32)

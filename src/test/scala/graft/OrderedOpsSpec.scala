@@ -105,7 +105,8 @@ class OrderedOpsSpec extends SparkSpecBase {
   }
 
   test("asof forward: earliest right at or after left time, per key") {
-    val out = trades().asofJoinForward(quotes(), "sym").df
+    val out = trades().asofJoin(quotes(), "sym",
+      direction = AsofDirection.Forward).df
       .orderBy("sym", "t")
       .select(col("sym"), col("t"), col("bid"))
       .collect()
@@ -118,7 +119,8 @@ class OrderedOpsSpec extends SparkSpecBase {
   }
 
   test("asof forward tolerance drops far-future matches") {
-    val out = trades().asofJoinForward(quotes(), "sym", tolerance = Some(5L)).df
+    val out = trades().asofJoin(quotes(), "sym", tolerance = Some(5L),
+      direction = AsofDirection.Forward).df
       .orderBy("sym", "t")
       .select(col("sym"), col("t"), col("bid"))
       .collect()
@@ -283,6 +285,21 @@ class OrderedOpsSpec extends SparkSpecBase {
     val out = ev.patternRecognize(
       Seq("a" -> "v < 20", "b" -> "v > 40"), maxSpan = 5L, by = "k")
     assert(out.select("k").collect().map(_.getString(0)).toSeq == Seq("u1"))
+  }
+
+  test("CEP pattern: a dotted string literal is compared as written") {
+    val s = spark
+    import s.implicits._
+    val ev = new OrderedStream(Seq(
+      ("u1", 1.0, "example.com"), ("u1", 2.0, "a.b"),
+      ("u2", 1.0, "example_com"), ("u2", 2.0, "a.b")
+    ).toDF("k", "t", "url"), "t")
+    val out = ev.patternRecognize(
+      Seq("a" -> "url = 'example.com'", "b" -> "a.url <> url AND url = 'a.b'"),
+      maxSpan = 5L, by = "k")
+    assert(out.select("k", "a_url", "b_url").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq ==
+      Seq(("u1", "example.com", "a.b")))
   }
 
   test("CEP entries raise typed errors on the driver before any job") {

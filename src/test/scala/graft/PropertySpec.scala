@@ -1,6 +1,7 @@
 package graft
 
 import graft.api.OrderedStream
+import graft.plans.AsofDirection
 import graft.ts.{SlidingWindow, TumblingWindow}
 import org.apache.spark.sql.functions._
 import scala.util.Random
@@ -95,7 +96,7 @@ class PropertySpec extends SparkSpecBase {
       val right = randEvents(60, 4)
       val l = new OrderedStream(left.toDF("k", "t", "v"), "t")
       val r = new OrderedStream(right.toDF("k", "t", "q"), "t")
-      val got = l.asofJoinForward(r, "k").df
+      val got = l.asofJoin(r, "k", direction = AsofDirection.Forward).df
         .select("k", "t", "v", "q").collect()
         .map(x => (x.getString(0), x.getDouble(1), x.getDouble(2),
           Option(x.get(3)).map(_.asInstanceOf[Double])))

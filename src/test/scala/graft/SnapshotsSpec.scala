@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions.col
+import scala.jdk.CollectionConverters._
 
 /** Snapshot-ID / time-travel reads (the capability of the reference's
   * `read_iceberg`) via parquet-manifest snapshot tables
@@ -32,6 +33,26 @@ class SnapshotsSpec extends SparkSpecBase {
     assert(hist.map(_.getString(3)).toSeq ===
       Seq("overwrite", "overwrite", "append"))
     assert(hist.last.getInt(4) === 2) // append lists parent's dir + its own
+  }
+
+  test("q98 and q115 builds leave their temp dirs to the exit sweep") {
+    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
+    def dirs(prefix: String): Set[String] = {
+      val ls = java.nio.file.Files.list(tmp)
+      try ls.iterator().asScala.map(_.toString)
+        .filter(_.startsWith(tmp.resolve(prefix).toString)).toSet
+      finally ls.close()
+    }
+    Seq("q98_sorted_csv" -> "graft_q98_sorted_csv",
+      "q115_snapshot_timetravel" -> "graft_q115_snapshots").foreach {
+      case (q, prefix) =>
+        val before = dirs(prefix)
+        SparkEntry.queries(q)(spark, sf())
+        val made = dirs(prefix) -- before
+        assert(made.nonEmpty, s"$q made no $prefix dir")
+        made.foreach(d => assert(graft.queries.GateQueries.sweepAtExit
+          .contains(d), s"$q leaves $d behind at exit"))
+    }
   }
 
   test("missing snapshot id and empty table fail loudly") {

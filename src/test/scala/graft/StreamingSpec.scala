@@ -1,5 +1,6 @@
 package graft
 
+import graft.plans.AsofDirection
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -122,9 +123,9 @@ class StreamingSpec extends SparkSpecBase {
     // 30s delay: ticks may trail the alpha stream without being
     // late-dropped at the source (a 0s delay would discard a tick that
     // arrives after any later-stamped event — correct but untestable)
-    val out = StreamingOps.streamingAsofForward(
+    val out = StreamingOps.streamingAsof(
       al.toDF.toDF("key", "ts", "value"),
-      tk.toDF.toDF("key", "ts", "value"), "30 seconds")
+      tk.toDF.toDF("key", "ts", "value"), "30 seconds", AsofDirection.Forward)
     val q = out.writeStream.format("memory").queryName("sfwd")
       .outputMode("append").start()
     // batch 1: alpha@100 arrives BEFORE any matching tick — must be carried
@@ -224,7 +225,7 @@ class StreamingSpec extends SparkSpecBase {
     assert(rows(0).getDouble(1) == 77.0)
   }
 
-  test("streamingAsofForward TTL evicts unfilled alphas past the horizon") {
+  test("streaming forward asof TTL evicts unfilled alphas past the horizon") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
@@ -233,9 +234,10 @@ class StreamingSpec extends SparkSpecBase {
     // TTL 5s: an alpha the watermark has left >5s behind is evicted
     // (default -1 keeps the reference's carry-forever semantics,
     // covered by the spec above)
-    val out = StreamingOps.streamingAsofForward(
+    val out = StreamingOps.streamingAsof(
       al.toDF.toDF("key", "ts", "value"),
-      tk.toDF.toDF("key", "ts", "value"), "0 seconds", alphaTtlMs = 5000L)
+      tk.toDF.toDF("key", "ts", "value"), "0 seconds", AsofDirection.Forward,
+      leftTtlMs = 5000L)
     val q = out.writeStream.format("memory").queryName("sfwd_ttl")
       .outputMode("append").start()
     al.addData(("A", ts(10), 1.0))    // alpha, no tick yet
@@ -249,6 +251,45 @@ class StreamingSpec extends SparkSpecBase {
     q.processAllAvailable()
     q.stop()
     assert(s.sql("SELECT * FROM sfwd_ttl WHERE key='A'").count() == 0)
+  }
+
+  test("streaming asof rejects the Nearest direction before any query starts") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val tr = MemoryStream[(String, Timestamp, Double)]
+    val qu = MemoryStream[(String, Timestamp, Double)]
+    val active = s.streams.active.length
+    val e = intercept[IllegalArgumentException](StreamingOps.streamingAsof(
+      tr.toDF.toDF("key", "ts", "value"),
+      qu.toDF.toDF("key", "ts", "value"), "0 seconds", AsofDirection.Nearest))
+    assert(e.getMessage.contains("Nearest"))
+    assert(s.streams.active.length == active)
+  }
+
+  test("streaming asof removes a key whose state is empty") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val al = MemoryStream[(String, Timestamp, Double)]
+    val tk = MemoryStream[(String, Timestamp, Double)]
+    val out = StreamingOps.streamingAsof(
+      al.toDF.toDF("key", "ts", "value"),
+      tk.toDF.toDF("key", "ts", "value"), "0 seconds", AsofDirection.Forward)
+    val q = out.writeStream.format("memory").queryName("sfwd_rm")
+      .outputMode("append").start()
+    al.addData(("A", ts(10), 1.0))
+    tk.addData(("A", ts(15), 2.0))
+    q.processAllAvailable()
+    tk.addData(("Z", ts(100), 0.0))
+    q.processAllAvailable()
+    tk.addData(("Z", ts(200), 0.0))
+    q.processAllAvailable()
+    q.stop()
+    assert(s.sql("SELECT fill_value FROM sfwd_rm WHERE key='A'")
+      .collect().map(_.getDouble(0)).toSeq == Seq(2.0))
+    // A filled and left nothing behind; only Z's unripe tick is stored
+    assert(q.lastProgress.stateOperators.head.numRowsTotal == 1L)
   }
 
   test("flatMapGroupsWithState running totals accumulate across batches") {
@@ -315,9 +356,9 @@ class StreamingTieSpec extends SparkSpecBase {
     implicit val ctx = s.sqlContext
     val al = MemoryStream[(String, Timestamp, Double)]
     val tk = MemoryStream[(String, Timestamp, Double)]
-    val out = StreamingOps.streamingAsofForward(
+    val out = StreamingOps.streamingAsof(
       al.toDF.toDF("key", "ts", "value"),
-      tk.toDF.toDF("key", "ts", "value"), "0 seconds")
+      tk.toDF.toDF("key", "ts", "value"), "0 seconds", AsofDirection.Forward)
     val q = out.writeStream.format("memory").queryName("tie_fwd")
       .outputMode("append").start()
     tk.addData(("A", ts(15), 42.0), ("A", ts(15), 7.0),

@@ -363,14 +363,6 @@ class MultimodalSpec extends SparkSpecBase {
     assert(rows(1).getInt(2) == 5 && rows(1).getInt(3) == 3)
   }
 
-  test("resize downsamples to a bounded payload with target dims") {
-    val r = Multimodal.resize(blobs().limit(5), "doc_id", "blob", 8, 8)
-    assert(r.columns.toSeq == Seq("doc_id", "blob", "width", "height"))
-    val rows = r.collect()
-    assert(rows.forall(x => x.getAs[Array[Byte]](1).length <= 64))
-    assert(rows.forall(x => x.getInt(2) == 8 && x.getInt(3) == 8))
-  }
-
   test("featureExtract yields a unit-mass histogram embedding usable by vector ops") {
     val fe = Multimodal.featureExtract(blobs().limit(10), "doc_id", "blob")
     val rows = fe.collect()
